@@ -135,6 +135,7 @@ def run_validation_suite(
     t0 = time.perf_counter()
     res = run.run(pages)
     elapsed = time.perf_counter() - t0
+    res.release()
     return {
         "rows": n_rows,
         "sec": round(elapsed, 3),

@@ -30,9 +30,24 @@ from pathlib import Path
 from typing import Any, Optional
 
 
+class LegacyCheckpointError(RuntimeError):
+    """The checkpoint dir holds a layout this version cannot resume."""
+
+
 class CheckpointManifest:
     def __init__(self, directory: str, snapshot_id: str, spec_fingerprint: str):
         self.dir = Path(directory)
+        legacy = sorted((self.dir / "violations").glob("part=*"))
+        if legacy:
+            # violations persisted before they were scoped per
+            # (snapshot, spec): the scoped read-back would not see
+            # them, and completed partitions would silently lose
+            # their violations
+            raise LegacyCheckpointError(
+                f"checkpoint dir {directory} holds violations in the "
+                f"legacy unscoped layout ({legacy[0]}); it cannot be "
+                "resumed. Start a fresh checkpoint dir."
+            )
         self.dir.mkdir(parents=True, exist_ok=True)
         self.path = self.dir / "manifest.jsonl"
         self.snapshot_id = snapshot_id

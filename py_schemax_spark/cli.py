@@ -23,6 +23,7 @@ import argparse
 import sys
 from typing import Optional
 
+from py_schemax_spark.checkpoint import LegacyCheckpointError
 from py_schemax_spark.config import resolve_config
 from py_schemax_spark.output import Output
 from py_schemax_spark.runner import RunConfig, ValidationRun
@@ -717,15 +718,21 @@ def main(argv: Optional[list[str]] = None, spark=None) -> int:
                     print(f"== {cls} ==")
                     print(plan)
                 continue
-            result = run.run(df, source=t)
+            # S8 result sink: the run writes the violations parquet
+            # itself, before computing the summary from it
+            sink = (
+                f"{ns.output_dir}/violations_{i}" if ns.output_dir else None
+            )
+            try:
+                result = run.run(df, source=t, sink=sink)
+            except LegacyCheckpointError as e:
+                print(f"❌ {t}: {e}", file=sys.stderr)
+                return 2
             out.print_result(result)
             if ns.output_dir:
-                # S8 result sink: violations parquet + summary manifest
                 import json as _json
                 from pathlib import Path as _P
 
-                vdir = f"{ns.output_dir}/violations_{i}"
-                result.violations.write.mode("overwrite").parquet(vdir)
                 _P(ns.output_dir).mkdir(parents=True, exist_ok=True)
                 with open(f"{ns.output_dir}/summary_{i}.json", "w") as f:
                     _json.dump(

@@ -185,9 +185,8 @@ def cardinality_violations(
 
     A TABLE-level class: a dim key's count spans partitions, so rows
     are attributed to the ``__table__`` pseudo-partition exactly like
-    drift (the runner ORs the class into the invalid verdict
-    explicitly — `partition_summary`'s per-partition join would
-    otherwise drop them from the totals).
+    drift (`partition_summary` keeps them as a table-level row that
+    counts in the run totals and fails the run, not a partition).
 
     Scale shape (via `operators.integrity.fk_cardinality_violations`):
     one fact-side aggregation with map-side combine, output bounded by

@@ -106,6 +106,17 @@ def _mg_merge_batch(counters: dict, batch_counts, k: int) -> None:
                 del counters[key]
 
 
+def _batch_counts(values: pd.Series) -> dict[str, int]:
+    """Exact prefix-encoded counts of one batch. None and NaN are
+    separate ``value_counts`` entries that both encode to the null
+    token, so their counts add up instead of overwriting each other."""
+    counts: dict[str, int] = {}
+    for val, cnt in values.value_counts(dropna=False).items():
+        token = _NULL_TOKEN if pd.isna(val) else "v" + val
+        counts[token] = counts.get(token, 0) + int(cnt)
+    return counts
+
+
 def misra_gries_partition_candidates(
     df: DataFrame, value_col: str, k: int
 ) -> DataFrame:
@@ -132,12 +143,7 @@ def misra_gries_partition_candidates(
         for batch in batches:
             # exact per-batch counts at C speed, then one weighted MG
             # merge per distinct batch value (never per row)
-            vc = batch[value_col].value_counts(dropna=False)
-            batch_counts = {
-                (_NULL_TOKEN if pd.isna(val) else "v" + val): int(cnt)
-                for val, cnt in vc.items()
-            }
-            _mg_merge_batch(counters, batch_counts, k)
+            _mg_merge_batch(counters, _batch_counts(batch[value_col]), k)
         yield pd.DataFrame(
             {
                 "value": list(counters.keys()),

@@ -16,9 +16,20 @@ Reference semantics → data-level semantics:
 - rule selection (cli.py:241-250): ``checks`` whitelists classes,
   ``skip`` subtracts, mirroring --rule-apply / --rule-ignore.
 
+Each verdict is materialized once: ``run(df, sink=path)`` writes the
+merged violations to the sink first, then computes the per-partition
+summary and the run totals from what was written, so the summary
+describes exactly the artifact on disk and ``RunResult.violations``
+reads it back. Without a sink the violations are persisted once
+(released by ``RunResult.release``). Under ``fail_mode="fast"`` each
+class is persisted and counted as it runs, so its probe is the one
+execution the sink write and the summary then read.
+
 Checkpoint/resume: with a ``checkpoint_dir``, completed partitions are
-excluded from the scan predicate (partition pruning does the skipping)
-and their persisted violations are unioned back into the final verdict
+excluded from the scan predicate (partition pruning does the skipping).
+The partition-local classes write their violations straight into the
+checkpoint dir, and the final verdict is that dir (done ∪ fresh
+partitions) ∪ the global classes, each of which runs once per attempt
 — resumed runs produce verdicts identical to single runs.
 """
 
@@ -27,8 +38,10 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 from typing import Optional
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from py_schemax_spark.checkpoint import (
     CheckpointManifest,
@@ -43,11 +56,46 @@ from py_schemax_spark.operators.violations import row_violations
 from py_schemax_spark.plans.compiler import schema_conformance
 from py_schemax_spark.specs.model import TableSpec
 from py_schemax_spark.verdict import (
+    TABLE_PART,
     RunSummary,
     merge_violations,
     partition_summary,
     summarize_partitions,
 )
+
+
+@dataclass(frozen=True)
+class _Sink:
+    """A parquet directory that receives a run's violations in one
+    overwriting write. ``partitioned`` is the checkpoint layout: one
+    directory per ``part`` value, replaced by dynamic overwrite, with
+    ``exclude_parts`` (partitions completed earlier) left out of the
+    read-back.
+
+    Every read follows a write to the same directory, which Spark
+    creates even for an empty frame, so a read failure is never "no
+    violations yet" and propagates."""
+
+    path: str
+    partitioned: bool = False
+    exclude_parts: frozenset = frozenset()
+
+    def write(self, violations: DataFrame) -> None:
+        w = violations.write.mode("overwrite")
+        if self.partitioned:
+            w = w.option("partitionOverwriteMode", "dynamic").partitionBy(
+                "part"
+            )
+        w.parquet(self.path)
+
+    def read(self, spark: SparkSession, schema: StructType) -> DataFrame:
+        out = spark.read.schema(schema).option("basePath", self.path).parquet(
+            self.path
+        )
+        if self.exclude_parts:
+            out = out.filter(~F.col("part").isin(sorted(self.exclude_parts)))
+        return out
+
 
 def _spec_has_cardinality(spec) -> bool:
     """True when any column's ``references`` declares min/max_rows —
@@ -122,8 +170,8 @@ class RunResult:
     schema_errors: list = field(default_factory=list)
     skipped_parts: list = field(default_factory=list)
     checks_run: tuple = ()
-    # DataFrames run() persisted into the session cache (today: the
-    # cardinality violations). A long-lived session validating many
+    # DataFrames run() persisted into the session cache (the violations
+    # of a run without a sink). A long-lived session validating many
     # tables must release them after its terminal action on the
     # result, or cache blocks accumulate for the session lifetime.
     persisted: tuple = ()
@@ -180,11 +228,18 @@ class ValidationRun:
 
     # -- main entry ----------------------------------------------------------
 
-    def run(self, df: DataFrame, source: str = "<dataframe>") -> RunResult:
-        cfg = self.config
-        if cfg.checkpoint_dir:
-            return self._run_with_checkpoint(df, source)
-        return self._run_plain(df)
+    def run(
+        self,
+        df: DataFrame,
+        source: str = "<dataframe>",
+        sink: Optional[str] = None,
+    ) -> RunResult:
+        """Validate ``df``. ``sink`` is a parquet directory (replaced)
+        that receives the violations before the summary is computed
+        from it; ``RunResult.violations`` then reads that directory."""
+        if self.config.checkpoint_dir:
+            return self._run_with_checkpoint(df, source, sink)
+        return self._run_plain(df, _Sink(sink) if sink else None)
 
     def _class_violations(self, name: str, df: DataFrame, part) -> DataFrame:
         key = self.spec.key_column
@@ -208,11 +263,14 @@ class ValidationRun:
             )
         raise ValueError(name)
 
-    def _run_plain(self, df: DataFrame) -> RunResult:
+    def _run_plain(
+        self, df: DataFrame, sink: Optional[_Sink] = None
+    ) -> RunResult:
         cfg = self.config
         key = self.spec.key_column
         part = self._partition_expr(df)
         enabled = cfg.enabled
+        fail_fast = cfg.fail_mode == "fast"
 
         schema_errors: list[dict] = []
         drift_list: list[dict] = []
@@ -220,7 +278,18 @@ class ValidationRun:
         persisted_dfs: list[DataFrame] = []
         checks_run: list[str] = []
         failed_early = False
-        cardinality_failed = False
+
+        def add(v: DataFrame) -> None:
+            """Queue one class's violations. Under fail-fast the class
+            is persisted and counted now: that one execution is both
+            the short-circuit probe (reference rulesets.py:41-47) and
+            what the sink write and the summary read later."""
+            nonlocal failed_early
+            if fail_fast:
+                v = v.persist(StorageLevel.MEMORY_AND_DISK)
+                persisted_dfs.append(v)
+                failed_early = v.count() > 0
+            parts.append(v)
 
         # fused single-scan path: extraction + literal-dim referential
         # checks compile into the SAME projection as the row constraints
@@ -228,11 +297,7 @@ class ValidationRun:
         # so fusion is disabled there.
         fused: set[str] = set()
         extra_constraints: list = []
-        if (
-            cfg.fuse_row_checks
-            and cfg.fail_mode != "fast"
-            and "rows" in enabled
-        ):
+        if cfg.fuse_row_checks and not fail_fast and "rows" in enabled:
             from py_schemax_spark.plans.compiler import (
                 extraction_constraint,
                 referential_literal_constraints,
@@ -277,22 +342,13 @@ class ValidationRun:
                 continue
             elif name == "rows":
                 checks_run.append(name)
-                v = row_violations(
+                add(row_violations(
                     df, self.spec, partition_expr=part,
                     extra_constraints=extra_constraints,
-                )
-                parts.append(v)
-                if cfg.fail_mode == "fast" and not v.isEmpty():
-                    failed_early = True
+                ))
             elif name in ("extraction", "uniqueness", "referential"):
                 checks_run.append(name)
-                v = self._class_violations(name, df, part)
-                parts.append(v)
-                if cfg.fail_mode == "fast":
-                    # short-circuit: first failing class stops the run
-                    # (reference rulesets.py:41-47)
-                    if not v.isEmpty():
-                        failed_early = True
+                add(self._class_violations(name, df, part))
             elif name == "cardinality":
                 if not _spec_has_cardinality(self.spec):
                     continue  # no bounds declared: a no-op class
@@ -301,26 +357,9 @@ class ValidationRun:
                     cardinality_violations,
                 )
 
-                from pyspark import StorageLevel
-
-                # persisted BEFORE the verdict probe: the probe's
-                # materialization fills the cache, so the summary path
-                # (and any later violations write) reuses it instead
-                # of re-running the fact aggregation + dim join
-                # (ADVICE r04: the class executed twice per run)
-                cv = cardinality_violations(
+                add(cardinality_violations(
                     df, self.spec, self.dims, partition_expr=part
-                ).persist(StorageLevel.MEMORY_AND_DISK)
-                persisted_dfs.append(cv)
-                parts.append(cv)
-                # __table__-attributed rows drop out of the
-                # per-partition summary join — track the verdict
-                # explicitly like drift does. count() (not isEmpty)
-                # materializes EVERY partition into the cache in this
-                # one pass — the summary job then reads cached blocks
-                cardinality_failed = cv.count() > 0
-                if cfg.fail_mode == "fast" and cardinality_failed:
-                    failed_early = True
+                ))
             elif name == "drift":
                 if self.baseline is None:
                     continue
@@ -330,15 +369,25 @@ class ValidationRun:
                     compression=cfg.drift_compression, fan=cfg.drift_fan,
                 )
                 dv = drift_violations(self.spark, drift_list, key_name=key)
-                parts.append(dv.withColumn("part", F.lit("__table__")))
-                if cfg.fail_mode == "fast" and any(
+                parts.append(dv.withColumn("part", F.lit(TABLE_PART)))
+                failed_early = fail_fast and any(
                     d["drifted"] for d in drift_list
-                ):
-                    failed_early = True
+                )
 
         violations = (
             merge_violations(*parts) if parts else self._empty_violations(df, key)
         )
+        if sink is not None:
+            # the one execution of the pipeline (or, under fail-fast,
+            # a copy out of the per-class caches, freed right after)
+            sink.write(violations)
+            violations = sink.read(self.spark, violations.schema)
+            for v in persisted_dfs:
+                v.unpersist()
+            persisted_dfs.clear()
+        elif not fail_fast:  # fail-fast classes are cached one by one
+            violations = violations.persist(StorageLevel.MEMORY_AND_DISK)
+            persisted_dfs.append(violations)
         # bounded collect: totals are exact for ALL partitions; at most
         # max_summary_partitions per-partition rows reach the driver
         # (worst first), so a 10^6-partition table cannot flood it
@@ -346,11 +395,7 @@ class ValidationRun:
             partition_summary(df, violations, part),
             max_rows=cfg.max_summary_partitions,
         )
-        invalid = (
-            (not run_summary.valid) or bool(schema_errors)
-            or cardinality_failed
-            or any(d["drifted"] for d in drift_list)
-        )
+        invalid = not run_summary.valid or bool(schema_errors)
         exit_code = (
             EXIT_OK
             if cfg.fail_mode == "never" or not invalid
@@ -418,7 +463,9 @@ class ValidationRun:
     LOCAL_CHECKS = ("schema", "rows", "extraction", "referential")
     GLOBAL_CHECKS = ("uniqueness", "cardinality", "drift")
 
-    def _run_with_checkpoint(self, df: DataFrame, source: str) -> RunResult:
+    def _run_with_checkpoint(
+        self, df: DataFrame, source: str, sink: Optional[str] = None
+    ) -> RunResult:
         cfg = self.config
         key = self.spec.key_column
         part = self._partition_expr(df)
@@ -442,18 +489,17 @@ class ValidationRun:
             RunConfig(**{**cfg.__dict__, "checkpoint_dir": None,
                          "checks": local, "skip": ()}),
         )
-        res = sub._run_plain(remaining_df)
-
-        # persist fresh violations per partition, then mark done.
+        # the local pipeline writes its violations straight into the
+        # checkpoint dir, and its summary reads them back from there.
         # Dynamic partition OVERWRITE, not append: a run that crashed
         # after writing a partition but before mark_done re-runs that
         # partition on resume — append would then duplicate its rows,
         # dynamic overwrite replaces exactly the re-run partitions and
         # leaves completed ones untouched.
-        fresh = res.violations
-        fresh.write.mode("overwrite").option(
-            "partitionOverwriteMode", "dynamic"
-        ).partitionBy("part").parquet(manifest.violations_dir)
+        res = sub._run_plain(remaining_df, _Sink(
+            manifest.violations_dir, partitioned=True,
+            exclude_parts=frozenset(done),
+        ))
         parts_metrics = {
             str(r["part"]): {
                 "row_count": r["row_count"],
@@ -464,7 +510,7 @@ class ValidationRun:
         }
         manifest.mark_done_many(parts_metrics)
 
-        # global checks re-run over the FULL table every attempt
+        # global checks run over the FULL table every attempt
         global_parts: list[DataFrame] = []
         drift_list: list[dict] = []
         checks_run = list(res.checks_run)
@@ -494,26 +540,32 @@ class ValidationRun:
             )
             global_parts.append(
                 drift_violations(self.spark, drift_list, key_name=key)
-                .withColumn("part", F.lit("__table__"))
+                .withColumn("part", F.lit(TABLE_PART))
             )
 
         # final verdict = persisted (done ∪ fresh) local violations ∪
-        # fresh global violations; partition column read back as string
-        try:
-            all_violations = self.spark.read.option(
-                "basePath", manifest.violations_dir
-            ).parquet(manifest.violations_dir).withColumn(
-                "part", F.col("part").cast("string")
+        # global violations, each global class executed once: in the
+        # sink write, or into one cached frame the count and the
+        # union both read
+        local_v = _Sink(manifest.violations_dir, partitioned=True).read(
+            self.spark, res.violations.schema
+        )
+        persisted: list[DataFrame] = []
+        if sink is not None:
+            out = _Sink(sink)
+            out.write(merge_violations(local_v, *global_parts))
+            all_violations = out.read(self.spark, local_v.schema)
+            n_global = all_violations.count() - local_v.count()
+        elif global_parts:
+            gv = merge_violations(*global_parts).persist(
+                StorageLevel.MEMORY_AND_DISK
             )
-        except Exception:
-            # nothing persisted yet (fully clean table, zero violations)
-            all_violations = res.violations
-        if global_parts:
-            from py_schemax_spark.verdict import merge_violations as _mv
-
-            all_violations = _mv(all_violations, *global_parts)
+            persisted.append(gv)
+            n_global = gv.count()
+            all_violations = merge_violations(local_v, gv)
+        else:
+            all_violations, n_global = local_v, 0
         # summary across ALL partitions (manifest metrics for done ones)
-        all_summary = list(res.summary_rows)
         run_summary = RunSummary()
         for p in sorted(manifest.completed_parts):
             rec = manifest.record(p)
@@ -525,30 +577,23 @@ class ValidationRun:
             else:
                 run_summary.invalid_partitions += 1
                 run_summary.failed_parts.append(p)
-        # fold in global-check violations (counted, not per-partition)
-        n_global = 0
-        for gp in global_parts:
-            n_global += gp.count()
+        # global-check violations count for the table, not a partition
+        run_summary.table_violations = n_global
         run_summary.total_violations += n_global
-        invalid = (
-            (not run_summary.valid)
-            or bool(res.schema_errors)
-            or n_global > 0
-            or any(d["drifted"] for d in drift_list)
-        )
+        invalid = not run_summary.valid or bool(res.schema_errors)
         exit_code = (
             EXIT_OK if cfg.fail_mode == "never" or not invalid else EXIT_INVALID
         )
         return RunResult(
             violations=all_violations,
-            summary_rows=all_summary,
+            summary_rows=list(res.summary_rows),
             run_summary=run_summary,
             exit_code=exit_code,
             drift=drift_list,
             schema_errors=res.schema_errors,
             skipped_parts=sorted(done),
             checks_run=tuple(checks_run),
-            persisted=res.persisted,
+            persisted=tuple(persisted),
         )
 
     def stats(self, df: DataFrame, exact_distinct: bool = False) -> DataFrame:

@@ -7,7 +7,9 @@
   reference py_schemax/summary.py:4-25: validated/valid/invalid
   counters + failing list), keyed by the table's physical partition
   value (e.g. ``days(warc_ts)``) so verdicts line up with the
-  checkpoint manifest's per-partition lineage.
+  checkpoint manifest's per-partition lineage. Table-level violations
+  (part ``__table__``: cardinality, drift) count in the run totals
+  without being a partition.
 """
 
 from __future__ import annotations
@@ -17,6 +19,10 @@ from functools import reduce
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+#: ``part`` value of violations judged over the whole table rather
+#: than one partition (cardinality, drift)
+TABLE_PART = "__table__"
 
 
 def merge_violations(*parts: DataFrame) -> DataFrame:
@@ -46,7 +52,9 @@ def partition_summary(
     (the day-partitioned Iceberg layout), else a single global bucket.
     ``violations`` must carry a ``part`` column (operators propagate it
     when given ``partition_col``); when absent, violation counts are
-    global.
+    global. Violations of a part with no table rows (``TABLE_PART``)
+    keep their own row with ``row_count`` 0, so the summary accounts
+    for every violation row.
     """
     if partition_expr is None:
         if "warc_ts" in df.columns:
@@ -56,23 +64,26 @@ def partition_summary(
     rows = df.groupBy(partition_expr.alias("part")).agg(
         F.count(F.lit(1)).alias("row_count")
     )
+    counts = (
+        F.count(F.lit(1)).alias("violation_count"),
+        F.approx_count_distinct(violations.columns[0]).alias(
+            "violating_keys"
+        ),
+    )
     if "part" in violations.columns:
-        v = violations.groupBy(F.col("part").cast("string").alias("part")).agg(
-            F.count(F.lit(1)).alias("violation_count"),
-            F.approx_count_distinct(violations.columns[0]).alias(
-                "violating_keys"
-            ),
-        )
+        v = violations.groupBy(
+            F.col("part").cast("string").alias("_vpart")
+        ).agg(*counts)
     else:
-        v = violations.agg(
-            F.count(F.lit(1)).alias("violation_count"),
-            F.approx_count_distinct(violations.columns[0]).alias(
-                "violating_keys"
-            ),
-        ).withColumn("part", F.lit("all"))
+        v = violations.agg(*counts).withColumn("_vpart", F.lit("all"))
+    # null-safe full join: rows without a timestamp form a NULL part
+    # whose violations must still land on it
     return (
-        rows.join(v, "part", "left")
-        .na.fill({"violation_count": 0, "violating_keys": 0})
+        rows.join(v, rows["part"].eqNullSafe(v["_vpart"]), "full")
+        .withColumn("part", F.coalesce("part", "_vpart"))
+        .drop("_vpart")
+        .na.fill({"row_count": 0, "violation_count": 0,
+                  "violating_keys": 0})
         .withColumn("valid", F.col("violation_count") == 0)
         .orderBy("part")
     )
@@ -93,24 +104,14 @@ class RunSummary:
     # driver (bounded collect at high partition counts) — totals above
     # still cover them exactly
     suppressed_parts: int = 0
-
-    @classmethod
-    def from_partition_summary(cls, summary_rows) -> "RunSummary":
-        s = cls()
-        for r in summary_rows:
-            s.total_partitions += 1
-            s.total_rows += r["row_count"]
-            s.total_violations += r["violation_count"]
-            if r["valid"]:
-                s.valid_partitions += 1
-            else:
-                s.invalid_partitions += 1
-                s.failed_parts.append(r["part"])
-        return s
+    # violations judged over the whole table instead of one partition
+    # (cardinality, drift; on checkpointed runs every global check),
+    # included in total_violations
+    table_violations: int = 0
 
     @property
     def valid(self) -> bool:
-        return self.invalid_partitions == 0
+        return self.invalid_partitions == 0 and self.table_violations == 0
 
     def to_dict(self) -> dict:
         return {
@@ -122,6 +123,7 @@ class RunSummary:
             "total_violations": self.total_violations,
             "failed_parts": sorted(map(str, self.failed_parts)),
             "suppressed_parts": self.suppressed_parts,
+            "table_violations": self.table_violations,
         }
 
 
@@ -150,19 +152,26 @@ def summarize_partitions(
     from pyspark import StorageLevel
 
     # two jobs read the summary (totals agg + top-k rows); persist so
-    # the expensive upstream (the violations pipeline) runs once
+    # its upstream (the table scan for row counts) runs once
     summary_df = summary_df.persist(StorageLevel.MEMORY_AND_DISK)
+    is_table = F.col("part").eqNullSafe(F.lit(TABLE_PART))
     try:
         tot = summary_df.agg(
-            F.count(F.lit(1)).alias("parts"),
-            F.sum(F.col("valid").cast("long")).alias("valid_parts"),
+            F.count(F.when(~is_table, 1)).alias("parts"),
+            F.count(F.when(~is_table & F.col("valid"), 1)).alias(
+                "valid_parts"
+            ),
             F.sum("row_count").alias("rows"),
             F.sum("violation_count").alias("violations"),
+            F.sum(F.when(is_table, F.col("violation_count"))).alias(
+                "table_violations"
+            ),
         ).collect()[0]
         n_parts = int(tot["parts"] or 0)
         n_valid = int(tot["valid_parts"] or 0)
         rows = (
-            summary_df.orderBy(
+            summary_df.filter(~is_table)
+            .orderBy(
                 F.asc("valid"), F.desc("violation_count"), F.asc("part")
             )
             .limit(max_rows)
@@ -179,5 +188,6 @@ def summarize_partitions(
         total_violations=int(tot["violations"] or 0),
         failed_parts=[r["part"] for r in rows if not r["valid"]],
         suppressed_parts=max(0, n_parts - len(rows)),
+        table_violations=int(tot["table_violations"] or 0),
     )
     return rows, s

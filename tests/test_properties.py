@@ -233,3 +233,34 @@ def test_mg_merge_guarantee_property(vals, k, cuts):
     for v, c in truth.items():
         if c * k > n:
             assert v in merged
+
+
+@given(
+    st.lists(
+        st.one_of(
+            st.none(), st.just(float("nan")),
+            st.sampled_from(["a", "b", "nan", "None", ""]),
+        ),
+        min_size=1, max_size=200,
+    )
+)
+@settings(max_examples=60, deadline=None)
+@example([None, float("nan")])
+def test_mg_batch_counts_merge_none_and_nan(vals):
+    """Property: a batch mixing None and NaN counts both under the one
+    null token — the batch counts are exact and sum to the batch size,
+    and no real value (not even the strings "nan" or "None") collides
+    with it."""
+    from collections import Counter
+
+    import pandas as pd
+
+    from py_schemax_spark.operators.sketches import _batch_counts
+
+    got = _batch_counts(pd.Series(vals, dtype=object))
+    nulls = sum(1 for v in vals if not isinstance(v, str))
+    want = Counter("v" + v for v in vals if isinstance(v, str))
+    if nulls:
+        want["n"] = nulls
+    assert got == dict(want)
+    assert sum(got.values()) == len(vals)
