@@ -129,12 +129,16 @@ class CheckpointManifest:
         return str(self.dir / "violations" / scope)
 
 
-def spec_fingerprint(spec) -> str:
-    """Stable fingerprint of a TableSpec — manifest entries are only
-    reusable if the constraints that produced them are identical."""
+def spec_fingerprint(spec, scope) -> str:
+    """Stable fingerprint of a TableSpec and the run ``scope`` (the
+    check classes whose verdicts a checkpoint stores) — manifest
+    entries are only reusable if the constraints that produced them
+    are identical."""
     from dataclasses import asdict
 
-    payload = json.dumps(asdict(spec), sort_keys=True, default=str)
+    payload = json.dumps(
+        [asdict(spec), list(scope)], sort_keys=True, default=str
+    )
     return hashlib.sha256(payload.encode()).hexdigest()[:16]
 
 

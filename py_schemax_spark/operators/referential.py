@@ -37,6 +37,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from py_schemax_spark.specs.model import TableSpec
+from py_schemax_spark.verdict import empty_violations
 
 
 def _exceeds(df: DataFrame, n: int) -> bool:
@@ -151,18 +152,7 @@ def referential_violations(
             )
         )
     if not parts:
-        extra = [F.lit("").alias("part")] if pcol else []
-        return (
-            df.select(F.col(key).cast("string").alias(key))
-            .limit(0)
-            .select(
-                key,
-                F.lit("").alias("constraint_id"),
-                F.lit("").alias("observed"),
-                F.lit("").alias("expected"),
-                *extra,
-            )
-        )
+        return empty_violations(df, key, with_part=bool(pcol))
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)
@@ -241,20 +231,7 @@ def cardinality_violations(
             )
         )
     if not parts:
-        extra = (
-            [F.lit("").alias("part")] if partition_expr is not None else []
-        )
-        return (
-            df.select(F.col(key).cast("string").alias(key))
-            .limit(0)
-            .select(
-                key,
-                F.lit("").alias("constraint_id"),
-                F.lit("").alias("observed"),
-                F.lit("").alias("expected"),
-                *extra,
-            )
-        )
+        return empty_violations(df, key, with_part=bool(pcol))
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)

@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from py_schemax_spark.specs.model import TableSpec
+from py_schemax_spark.verdict import empty_violations
 
 
 def duplicate_keys(df: DataFrame, key: str) -> DataFrame:
@@ -89,23 +90,8 @@ def uniqueness_violations(
             )
         )
     if not parts:
-        return _empty_violations(df, key, with_part=bool(pcol))
+        return empty_violations(df, key, with_part=bool(pcol))
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)
     return out
-
-
-def _empty_violations(df: DataFrame, key: str, with_part: bool = False) -> DataFrame:
-    extra = [F.lit("").alias("part")] if with_part else []
-    return (
-        df.select(F.col(key).cast("string").alias(key))
-        .limit(0)
-        .select(
-            key,
-            F.lit("").alias("constraint_id"),
-            F.lit("").alias("observed"),
-            F.lit("").alias("expected"),
-            *extra,
-        )
-    )

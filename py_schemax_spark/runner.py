@@ -1,20 +1,37 @@
-"""Rule pipeline: registry of constraint classes, short-circuit, fail
-modes — the analogue of RuleSetBasedValidation (reference
+"""Rule pipeline: one ordered table of check classes, short-circuit,
+fail modes — the analogue of RuleSetBasedValidation (reference
 py_schemax/rulesets.py:17-49) and the fail-mode control flow
 (config.py:18-21, output.py:46-65).
+
+``CHECK_CLASSES`` is the registry (the analogue of VALIDATORS_IN_ORDER,
+reference rulesets.py:17-21) and the only place that maps a check name
+to its operator. Each entry says whether it applies to this run
+(extraction needs a template, cardinality needs bounds, drift needs a
+baseline), builds its violations, and — extraction and referential —
+may instead fuse into the rows projection (one scan instead of three).
+Partition-local classes come first, whole-table classes after:
+
+    schema, rows, extraction, referential | uniqueness, cardinality, drift
+
+``run`` (plain and checkpointed) and ``explain_plans`` all walk that
+table with one loop, so they execute, short-circuit and explain the
+classes in the same order.
 
 Reference semantics → data-level semantics:
 
 - registry order + per-file short-circuit (rulesets.py:41-47):
-  constraint CLASSES run in registry order; ``fail_mode="fast"`` stops
+  constraint CLASSES run in table order; ``fail_mode="fast"`` stops
   after the first class that reports violations (remaining Spark jobs
   are simply not submitted — the data-level analogue of stopping at
-  the first failing rule).
+  the first failing rule). ``schema`` is a parse gate
+  (rulesets.py:35-39): a spec that does not match the table stops
+  everything, in every fail mode.
 - fail modes (config.py:137-150, output.py:55-65): ``after`` = run
   everything, exit 1 if any violation; ``fast`` = exit 1 at first
   failing class; ``never`` = always exit 0 (verdicts still produced).
 - rule selection (cli.py:241-250): ``checks`` whitelists classes,
-  ``skip`` subtracts, mirroring --rule-apply / --rule-ignore.
+  ``skip`` subtracts, mirroring --rule-apply / --rule-ignore; the
+  selection runs in table order, not in the order it was given.
 
 Each verdict is materialized once: ``run(df, sink=path)`` writes the
 merged violations to the sink first, then computes the per-partition
@@ -26,17 +43,21 @@ class is persisted and counted as it runs, so its probe is the one
 execution the sink write and the summary then read.
 
 Checkpoint/resume: with a ``checkpoint_dir``, completed partitions are
-excluded from the scan predicate (partition pruning does the skipping).
-The partition-local classes write their violations straight into the
-checkpoint dir, and the final verdict is that dir (done ∪ fresh
-partitions) ∪ the global classes, each of which runs once per attempt
-— resumed runs produce verdicts identical to single runs.
+excluded from the scan predicate. The local classes run on the
+remaining partitions and write their violations straight into the
+checkpoint dir. Only if that loop did not stop (schema gate,
+fail-fast) are the partitions marked done and the global classes run
+over the full table, each once per attempt; the final verdict is the
+checkpoint dir (done ∪ fresh partitions) ∪ the global classes. The
+checkpoint scope is keyed by the spec, the enabled local classes and
+fail-fast, so a changed selection starts afresh — resumed runs produce
+verdicts identical to single runs.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
-from typing import Optional
+from typing import Callable, Optional
 
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
@@ -49,15 +70,25 @@ from py_schemax_spark.checkpoint import (
     spec_fingerprint,
 )
 from py_schemax_spark.operators.drift import drift_verdicts, drift_violations
-from py_schemax_spark.operators.referential import referential_violations
+from py_schemax_spark.operators.extraction_check import extraction_violations
+from py_schemax_spark.operators.referential import (
+    cardinality_violations,
+    referential_violations,
+)
 from py_schemax_spark.operators.stats import column_stats
 from py_schemax_spark.operators.uniqueness import uniqueness_violations
 from py_schemax_spark.operators.violations import row_violations
-from py_schemax_spark.plans.compiler import schema_conformance
+from py_schemax_spark.plans.compiler import (
+    extraction_constraint,
+    referential_literal_constraints,
+    schema_conformance,
+)
 from py_schemax_spark.specs.model import TableSpec
 from py_schemax_spark.verdict import (
     TABLE_PART,
     RunSummary,
+    default_partition_expr,
+    empty_violations,
     merge_violations,
     partition_summary,
     summarize_partitions,
@@ -97,24 +128,141 @@ class _Sink:
         return out
 
 
-def _spec_has_cardinality(spec) -> bool:
-    """True when any column's ``references`` declares min/max_rows —
-    the cardinality class is a spec-opt-in no-op otherwise."""
+# -- the check-class table ------------------------------------------------------
+
+#: a LOCAL class's verdict is a pure function of one partition's rows,
+#: so checkpointed runs resume it per partition; a GLOBAL class judges
+#: the whole table (a duplicate pair or a dim key's fact count spans
+#: partitions, drift is a whole-table distribution) and re-runs over
+#: the full table on every attempt (SURVEY.md §7 hard-point (e))
+LOCAL, GLOBAL = "local", "global"
+
+
+@dataclass
+class _Pass:
+    """One walk over the check table: the run it belongs to and what
+    the classes produced so far."""
+
+    run: "ValidationRun"
+    fail_fast: bool
+    violations: dict = field(default_factory=dict)  # name -> DataFrame
+    #: name -> RowConstraints evaluated inside the rows projection
+    fused: dict = field(default_factory=dict)
+    checks_run: list = field(default_factory=list)
+    schema_errors: list = field(default_factory=list)
+    drift: list = field(default_factory=list)
+    persisted: list = field(default_factory=list)
+    stopped: bool = False
+
+    def unpersist(self) -> None:
+        for v in self.persisted:
+            v.unpersist()
+        self.persisted.clear()
+
+
+@dataclass(frozen=True)
+class CheckClass:
+    """One entry of the registry. ``build(p, df, part)`` returns the
+    class's violations (None for the schema gate, which reports into
+    ``p.schema_errors``); ``fuse(p, df)`` returns the RowConstraints
+    that evaluate inside the rows projection instead, or None when the
+    class needs its own plan. ``lazy=False`` marks a class whose build
+    itself runs jobs (drift compares collected sketches), which
+    ``explain_plans`` leaves out."""
+
+    name: str
+    scope: str
+    applies: Callable[[_Pass, DataFrame], bool]
+    build: Callable[[_Pass, DataFrame, object], Optional[DataFrame]]
+    fuse: Optional[Callable[[_Pass, DataFrame], Optional[list]]] = None
+    lazy: bool = True
+
+
+def _always(p: _Pass, df: DataFrame) -> bool:
+    return True
+
+
+def _schema(p: _Pass, df: DataFrame, part) -> None:
+    p.schema_errors = schema_conformance(df, p.run.spec)
+
+
+def _rows(p: _Pass, df: DataFrame, part) -> DataFrame:
+    return row_violations(
+        df, p.run.spec, partition_expr=part,
+        extra_constraints=[c for cs in p.fused.values() for c in cs],
+    )
+
+
+def _fuse_referential(p: _Pass, df: DataFrame) -> Optional[list]:
+    lits, remaining = referential_literal_constraints(
+        df, p.run.spec, p.run.dims
+    )
+    # a dim too big for an IN-list keeps the anti-join, and the
+    # operator then checks every referenced column itself — fusing the
+    # literal-sized ones too would double-report them
+    return None if remaining else lits
+
+
+def _has_bounds(p: _Pass, df: DataFrame) -> bool:
+    """Cardinality is a spec opt-in: some ``references`` declares
+    min/max_rows."""
     return any(
         cs.references is not None
         and (cs.references.min_rows is not None
              or cs.references.max_rows is not None)
-        for cs in spec.columns
+        for cs in p.run.spec.columns
     )
 
 
-#: registry order — the analogue of VALIDATORS_IN_ORDER
-#: (reference rulesets.py:17-21); DEFAULT_CHECKS mirrors the default
-#: rule set (rulesets.py:24) extended with the data-level classes.
-ALL_CHECKS = (
-    "schema", "rows", "extraction", "uniqueness", "referential",
-    "cardinality", "drift"
+def _drift(p: _Pass, df: DataFrame, part) -> DataFrame:
+    run = p.run
+    p.drift = drift_verdicts(df, run.spec, run.baseline)
+    return drift_violations(
+        run.spark, p.drift, key_name=run.spec.key_column
+    ).withColumn("part", F.lit(TABLE_PART))
+
+
+#: registry order — local classes, then global ones. DEFAULT_CHECKS
+#: mirrors the default rule set (reference rulesets.py:24) extended
+#: with the data-level classes.
+CHECK_CLASSES = (
+    CheckClass("schema", LOCAL, _always, _schema),
+    CheckClass("rows", LOCAL, _always, _rows),
+    CheckClass(
+        "extraction", LOCAL,
+        lambda p, df: p.run.spec.extraction is not None,
+        lambda p, df, part: extraction_violations(
+            df, p.run.spec, partition_expr=part
+        ),
+        fuse=lambda p, df: [extraction_constraint(p.run.spec)],
+    ),
+    CheckClass(
+        "referential", LOCAL, _always,
+        lambda p, df, part: referential_violations(
+            df, p.run.spec, p.run.dims, partition_expr=part,
+            max_broadcast_rows=p.run.config.dim_broadcast_limit,
+        ),
+        fuse=_fuse_referential,
+    ),
+    CheckClass(
+        "uniqueness", GLOBAL, _always,
+        lambda p, df, part: uniqueness_violations(
+            df, p.run.spec, order_col=p.run.config.order_col,
+            partition_expr=part,
+        ),
+    ),
+    CheckClass(
+        "cardinality", GLOBAL, _has_bounds,
+        lambda p, df, part: cardinality_violations(
+            df, p.run.spec, p.run.dims, partition_expr=part
+        ),
+    ),
+    CheckClass(
+        "drift", GLOBAL, lambda p, df: p.run.baseline is not None, _drift,
+        lazy=False,
+    ),
 )
+ALL_CHECKS = tuple(c.name for c in CHECK_CLASSES)
 DEFAULT_CHECKS = ALL_CHECKS
 
 EXIT_OK = 0
@@ -132,12 +280,6 @@ class RunConfig:
     # referential dims above this many rows take the distinct-keys
     # strategy instead of broadcast (None = always broadcast)
     dim_broadcast_limit: Optional[int] = None
-    drift_compression: float = 200.0
-    drift_fan: int = 32
-    # fuse extraction + tiny-dim referential into the rows projection
-    # (one scan instead of three); disabled under fail_mode="fast",
-    # which needs per-class short-circuit order
-    fuse_row_checks: bool = True
     # per-partition summary rows materialized on the driver are capped
     # at this many (worst partitions first); run totals stay exact via
     # a single-row aggregate (verdict.summarize_partitions)
@@ -156,7 +298,10 @@ class RunConfig:
 
     @property
     def enabled(self) -> tuple[str, ...]:
-        return tuple(c for c in self.checks if c not in set(self.skip))
+        """Selected classes, in table order."""
+        return tuple(
+            c for c in ALL_CHECKS if c in self.checks and c not in self.skip
+        )
 
 
 @dataclass
@@ -206,24 +351,105 @@ class ValidationRun:
         self.baseline = baseline
         self.config = config or RunConfig()
 
-    # -- helpers -----------------------------------------------------------
+    # -- the table walk -----------------------------------------------------
 
-    def _partition_expr(self, df: DataFrame):
-        if "warc_ts" in df.columns:
-            return F.to_date("warc_ts").cast("string")
-        return F.lit("all")
+    def _classes(self, scope: Optional[str] = None) -> list[CheckClass]:
+        enabled = self.config.enabled
+        return [
+            c for c in CHECK_CLASSES
+            if c.name in enabled and scope in (None, c.scope)
+        ]
 
-    def _empty_violations(self, df: DataFrame, key: str) -> DataFrame:
-        return (
-            df.select(F.col(key).cast("string").alias(key))
-            .limit(0)
-            .select(
-                key,
-                F.lit("").alias("constraint_id"),
-                F.lit("").alias("observed"),
-                F.lit("").alias("expected"),
-                F.lit("").alias("part"),
-            )
+    def _pass(self) -> _Pass:
+        return _Pass(self, fail_fast=self.config.fail_mode == "fast")
+
+    def _walk(
+        self, p: _Pass, df: DataFrame, part, classes: list[CheckClass],
+        act: bool = True,
+    ) -> None:
+        """Run ``classes`` over ``df`` in table order, into ``p``.
+        ``act=False`` only builds the plans (``explain_plans``): no
+        fail-fast probe, and classes that are not lazy are left out."""
+        classes = [
+            c for c in classes if (act or c.lazy) and c.applies(p, df)
+        ]
+        # fusable classes compile into the rows projection (one scan
+        # instead of three); fail-fast keeps one probe per class, so
+        # nothing fuses there
+        if not p.fail_fast and "rows" in {c.name for c in classes}:
+            for c in classes:
+                constraints = c.fuse(p, df) if c.fuse else None
+                if constraints is not None:
+                    p.fused[c.name] = constraints
+        for c in classes:
+            if p.stopped:
+                break
+            p.checks_run.append(c.name)
+            if c.name in p.fused:
+                continue  # ran inside the rows projection
+            v = c.build(p, df, part)
+            # parse gate (rulesets.py:35-39): stops every fail mode
+            p.stopped = bool(p.schema_errors)
+            if v is None:
+                continue
+            if act and p.fail_fast:
+                # this one execution is both the short-circuit probe
+                # (reference rulesets.py:41-47) and what the sink write
+                # and the summary read later
+                v = v.persist(StorageLevel.MEMORY_AND_DISK)
+                p.persisted.append(v)
+                p.stopped = v.count() > 0
+            p.violations[c.name] = v
+
+    def _finish(
+        self, p: _Pass, df: DataFrame, part, sink: Optional[_Sink],
+        skipped: tuple = (),
+    ) -> RunResult:
+        """Merge the pass's violations, write them to ``sink`` (or
+        persist them), and summarize ``df``'s partitions from that one
+        materialization."""
+        violations = (
+            merge_violations(*p.violations.values()) if p.violations
+            else empty_violations(df, self.spec.key_column)
+        )
+        if sink is not None:
+            # the one execution of the pipeline (or, under fail-fast,
+            # a copy out of the per-class caches, freed right after)
+            sink.write(violations)
+            violations = sink.read(self.spark, violations.schema)
+            p.unpersist()
+        elif not p.fail_fast:  # fail-fast classes are cached one by one
+            violations = violations.persist(StorageLevel.MEMORY_AND_DISK)
+            p.persisted.append(violations)
+        # bounded collect: totals are exact for ALL partitions; at most
+        # max_summary_partitions per-partition rows reach the driver
+        # (worst first), so a 10^6-partition table cannot flood it
+        summary, run_summary = summarize_partitions(
+            partition_summary(df, violations, part),
+            max_rows=self.config.max_summary_partitions,
+        )
+        return self._result(p, violations, summary, run_summary, skipped)
+
+    def _result(
+        self, p: _Pass, violations: DataFrame, summary_rows: list,
+        run_summary: RunSummary, skipped,
+    ) -> RunResult:
+        invalid = not run_summary.valid or bool(p.schema_errors)
+        exit_code = (
+            EXIT_OK
+            if self.config.fail_mode == "never" or not invalid
+            else EXIT_INVALID
+        )
+        return RunResult(
+            violations=violations,
+            summary_rows=summary_rows,
+            run_summary=run_summary,
+            exit_code=exit_code,
+            drift=p.drift,
+            schema_errors=p.schema_errors,
+            skipped_parts=sorted(skipped),
+            checks_run=tuple(p.checks_run),
+            persisted=tuple(p.persisted),
         )
 
     # -- main entry ----------------------------------------------------------
@@ -237,311 +463,92 @@ class ValidationRun:
         """Validate ``df``. ``sink`` is a parquet directory (replaced)
         that receives the violations before the summary is computed
         from it; ``RunResult.violations`` then reads that directory."""
+        out = _Sink(sink) if sink else None
         if self.config.checkpoint_dir:
-            return self._run_with_checkpoint(df, source, sink)
-        return self._run_plain(df, _Sink(sink) if sink else None)
-
-    def _class_violations(self, name: str, df: DataFrame, part) -> DataFrame:
-        key = self.spec.key_column
-        if name == "rows":
-            return row_violations(df, self.spec, partition_expr=part)
-        if name == "extraction":
-            from py_schemax_spark.operators.extraction_check import (
-                extraction_violations,
-            )
-
-            return extraction_violations(df, self.spec, partition_expr=part)
-        if name == "uniqueness":
-            return uniqueness_violations(
-                df, self.spec, order_col=self.config.order_col,
-                partition_expr=part,
-            )
-        if name == "referential":
-            return referential_violations(
-                df, self.spec, self.dims, partition_expr=part,
-                max_broadcast_rows=self.config.dim_broadcast_limit,
-            )
-        raise ValueError(name)
-
-    def _run_plain(
-        self, df: DataFrame, sink: Optional[_Sink] = None
-    ) -> RunResult:
-        cfg = self.config
-        key = self.spec.key_column
-        part = self._partition_expr(df)
-        enabled = cfg.enabled
-        fail_fast = cfg.fail_mode == "fast"
-
-        schema_errors: list[dict] = []
-        drift_list: list[dict] = []
-        parts: list[DataFrame] = []
-        persisted_dfs: list[DataFrame] = []
-        checks_run: list[str] = []
-        failed_early = False
-
-        def add(v: DataFrame) -> None:
-            """Queue one class's violations. Under fail-fast the class
-            is persisted and counted now: that one execution is both
-            the short-circuit probe (reference rulesets.py:41-47) and
-            what the sink write and the summary read later."""
-            nonlocal failed_early
-            if fail_fast:
-                v = v.persist(StorageLevel.MEMORY_AND_DISK)
-                persisted_dfs.append(v)
-                failed_early = v.count() > 0
-            parts.append(v)
-
-        # fused single-scan path: extraction + literal-dim referential
-        # checks compile into the SAME projection as the row constraints
-        # (one scan instead of three). fail_fast keeps per-class order,
-        # so fusion is disabled there.
-        fused: set[str] = set()
-        extra_constraints: list = []
-        if cfg.fuse_row_checks and not fail_fast and "rows" in enabled:
-            from py_schemax_spark.plans.compiler import (
-                extraction_constraint,
-                referential_literal_constraints,
-            )
-
-            if "extraction" in enabled and self.spec.extraction is not None:
-                ec = extraction_constraint(self.spec)
-                if ec is not None:
-                    extra_constraints.append(ec)
-                    fused.add("extraction")
-            if "referential" in enabled:
-                lits, remaining = referential_literal_constraints(
-                    df, self.spec, self.dims
-                )
-                extra_constraints.extend(lits)
-                if not remaining:
-                    fused.add("referential")
-                # big dims (if any) still run the anti-join path; the
-                # operator re-derives its own column list, so fused
-                # literal dims would double-report — only fuse when ALL
-                # referenced dims are literal-sized
-                if remaining and lits:
-                    extra_constraints = [
-                        c for c in extra_constraints
-                        if not c.constraint_id.endswith(".references")
-                    ]
-
-        for name in enabled:
-            if failed_early:
-                break
-            if name == "schema":
-                checks_run.append(name)
-                schema_errors = schema_conformance(df, self.spec)
-                # parse-gate semantics (rulesets.py:35-39): a spec that
-                # doesn't structurally match the table stops everything.
-                if schema_errors:
-                    break
-            elif name == "extraction" and self.spec.extraction is None:
-                continue
-            elif name in fused:
-                checks_run.append(name)  # ran inside the rows projection
-                continue
-            elif name == "rows":
-                checks_run.append(name)
-                add(row_violations(
-                    df, self.spec, partition_expr=part,
-                    extra_constraints=extra_constraints,
-                ))
-            elif name in ("extraction", "uniqueness", "referential"):
-                checks_run.append(name)
-                add(self._class_violations(name, df, part))
-            elif name == "cardinality":
-                if not _spec_has_cardinality(self.spec):
-                    continue  # no bounds declared: a no-op class
-                checks_run.append(name)
-                from py_schemax_spark.operators.referential import (
-                    cardinality_violations,
-                )
-
-                add(cardinality_violations(
-                    df, self.spec, self.dims, partition_expr=part
-                ))
-            elif name == "drift":
-                if self.baseline is None:
-                    continue
-                checks_run.append(name)
-                drift_list = drift_verdicts(
-                    df, self.spec, self.baseline,
-                    compression=cfg.drift_compression, fan=cfg.drift_fan,
-                )
-                dv = drift_violations(self.spark, drift_list, key_name=key)
-                parts.append(dv.withColumn("part", F.lit(TABLE_PART)))
-                failed_early = fail_fast and any(
-                    d["drifted"] for d in drift_list
-                )
-
-        violations = (
-            merge_violations(*parts) if parts else self._empty_violations(df, key)
-        )
-        if sink is not None:
-            # the one execution of the pipeline (or, under fail-fast,
-            # a copy out of the per-class caches, freed right after)
-            sink.write(violations)
-            violations = sink.read(self.spark, violations.schema)
-            for v in persisted_dfs:
-                v.unpersist()
-            persisted_dfs.clear()
-        elif not fail_fast:  # fail-fast classes are cached one by one
-            violations = violations.persist(StorageLevel.MEMORY_AND_DISK)
-            persisted_dfs.append(violations)
-        # bounded collect: totals are exact for ALL partitions; at most
-        # max_summary_partitions per-partition rows reach the driver
-        # (worst first), so a 10^6-partition table cannot flood it
-        summary, run_summary = summarize_partitions(
-            partition_summary(df, violations, part),
-            max_rows=cfg.max_summary_partitions,
-        )
-        invalid = not run_summary.valid or bool(schema_errors)
-        exit_code = (
-            EXIT_OK
-            if cfg.fail_mode == "never" or not invalid
-            else EXIT_INVALID
-        )
-        return RunResult(
-            violations=violations,
-            summary_rows=summary,
-            run_summary=run_summary,
-            exit_code=exit_code,
-            drift=drift_list,
-            schema_errors=schema_errors,
-            checks_run=tuple(checks_run),
-            persisted=tuple(persisted_dfs),
-        )
+            return self._run_with_checkpoint(df, source, out)
+        part = default_partition_expr(df)
+        p = self._pass()
+        self._walk(p, df, part, self._classes())
+        return self._finish(p, df, part, out)
 
     def explain_plans(self, df: DataFrame) -> dict[str, str]:
-        """Physical plan per enabled constraint class, WITHOUT running
-        any jobs — the plan-first workflow (`validate --explain`):
-        inspect where the exchanges, broadcasts, and pushed filters
-        land before paying for a 100-TB pass. Classes that are
-        no-ops for this spec (no extraction template, no cardinality
-        bounds, no baseline) are omitted."""
-        part = self._partition_expr(df)
-        out: dict[str, str] = {}
-        for name in self.config.enabled:
-            v = None
-            if name == "rows":
-                v = row_violations(df, self.spec, partition_expr=part)
-            elif name == "extraction" and self.spec.extraction is not None:
-                v = self._class_violations(name, df, part)
-            elif name == "uniqueness":
-                v = self._class_violations(name, df, part)
-            elif name == "referential" and any(
-                cs.references is not None for cs in self.spec.columns
-            ):
-                v = self._class_violations(name, df, part)
-            elif name == "cardinality" and _spec_has_cardinality(
-                self.spec
-            ):
-                from py_schemax_spark.operators.referential import (
-                    cardinality_violations,
-                )
+        """Physical plan of each check class ``run()`` would execute on
+        ``df``, built by the same table walk — the plan-first workflow
+        (`validate --explain`): inspect where the exchanges, broadcasts
+        and pushed filters land before paying for a 100-TB pass.
 
-                v = cardinality_violations(
-                    df, self.spec, self.dims, partition_expr=part
-                )
-            if v is not None:
-                out[name] = (
-                    v._jdf.queryExecution().executedPlan().toString()
-                )
-        return out
+        Runs no job over the validated table; the dims may be probed
+        (a literal-sized dim's IN-list reads at most
+        ``LITERAL_DIM_MAX + 1`` rows, ``dim_broadcast_limit`` one more
+        bounded probe — and a dim above that limit sizes its invalid
+        key set, which does read the table). A class fused into the
+        rows projection shows inside the ``rows`` plan. Omitted: no-op
+        classes (no extraction template, no cardinality bounds, no
+        baseline), drift (a driver-side sketch compare), and every
+        class after a failing schema gate."""
+        p = self._pass()
+        self._walk(
+            p, df, default_partition_expr(df), self._classes(), act=False
+        )
+        return {
+            name: v._jdf.queryExecution().executedPlan().toString()
+            for name, v in p.violations.items()
+        }
 
     # -- checkpointed run -----------------------------------------------------
 
-    #: checks whose verdicts are a pure function of one partition's rows
-    #: — these are resumable (skipped when the manifest says done).
-    #: uniqueness and drift are GLOBAL (cross-partition) semantics: a
-    #: duplicate pair may span partitions, and drift is a whole-table
-    #: distribution — they re-run over the full (column-pruned) table on
-    #: every attempt, which keeps resumed verdicts identical to a single
-    #: uninterrupted run (SURVEY.md §7 hard-point (e)). The re-run is
-    #: cheap relative to the local pass: uniqueness scans only
-    #: (key, order) columns; drift scans one numeric expression.
-    LOCAL_CHECKS = ("schema", "rows", "extraction", "referential")
-    GLOBAL_CHECKS = ("uniqueness", "cardinality", "drift")
-
     def _run_with_checkpoint(
-        self, df: DataFrame, source: str, sink: Optional[str] = None
+        self, df: DataFrame, source: str, sink: Optional[_Sink]
     ) -> RunResult:
         cfg = self.config
-        key = self.spec.key_column
-        part = self._partition_expr(df)
+        part = default_partition_expr(df)
+        local = self._classes(LOCAL)
+        # a done partition is only reusable under the same local
+        # classes; fail-fast marks parts done only when every local
+        # class was clean, so a fast scope holds no violations
+        scope = [c.name for c in local] + (
+            ["fail_fast"] if cfg.fail_mode == "fast" else []
+        )
         manifest = CheckpointManifest(
             cfg.checkpoint_dir,
             snapshot_id=snapshot_id_for(source),
-            spec_fingerprint=spec_fingerprint(self.spec),
+            spec_fingerprint=spec_fingerprint(self.spec, scope),
         )
         done = manifest.completed_parts
-        remaining_df = df.withColumn("_part", part).filter(
-            ~F.col("_part").isin(list(done)) if done else F.lit(True)
-        ).drop("_part")
+        # the isin predicate prunes completed partitions at scan
+        remaining_df = df.filter(~part.isin(sorted(done))) if done else df
 
-        # resumable (partition-local) pipeline on remaining partitions
-        # only — the isin predicate prunes completed partitions at scan
-        enabled = cfg.enabled
-        local = tuple(c for c in enabled if c in self.LOCAL_CHECKS)
-        global_ = tuple(c for c in enabled if c in self.GLOBAL_CHECKS)
-        sub = ValidationRun(
-            self.spark, self.spec, self.dims, self.baseline,
-            RunConfig(**{**cfg.__dict__, "checkpoint_dir": None,
-                         "checks": local, "skip": ()}),
-        )
-        # the local pipeline writes its violations straight into the
-        # checkpoint dir, and its summary reads them back from there.
-        # Dynamic partition OVERWRITE, not append: a run that crashed
-        # after writing a partition but before mark_done re-runs that
-        # partition on resume — append would then duplicate its rows,
-        # dynamic overwrite replaces exactly the re-run partitions and
-        # leaves completed ones untouched.
-        res = sub._run_plain(remaining_df, _Sink(
+        p = self._pass()
+        self._walk(p, remaining_df, part, local)
+        if p.stopped:
+            # schema gate or fail-fast: no partition is complete and no
+            # global class runs. The verdict is what ran, as in a plain
+            # run: a gated run reports no violations, and a fast scope
+            # holds only parts on which every local class was clean
+            return self._finish(p, df, part, sink, skipped=done)
+
+        # the local classes write their violations straight into the
+        # checkpoint dir. Dynamic partition OVERWRITE, not append: a
+        # run that crashed after writing a partition but before
+        # mark_done re-runs that partition on resume — append would
+        # then duplicate its rows, dynamic overwrite replaces exactly
+        # the re-run partitions and leaves completed ones untouched.
+        res = self._finish(p, remaining_df, part, _Sink(
             manifest.violations_dir, partitioned=True,
             exclude_parts=frozenset(done),
         ))
-        parts_metrics = {
+        manifest.mark_done_many({
             str(r["part"]): {
                 "row_count": r["row_count"],
                 "violation_count": r["violation_count"],
                 "valid": bool(r["valid"]),
             }
             for r in res.summary_rows
-        }
-        manifest.mark_done_many(parts_metrics)
+        })
 
-        # global checks run over the FULL table every attempt
-        global_parts: list[DataFrame] = []
-        drift_list: list[dict] = []
-        checks_run = list(res.checks_run)
-        if "uniqueness" in global_:
-            checks_run.append("uniqueness")
-            global_parts.append(
-                uniqueness_violations(
-                    df, self.spec, order_col=cfg.order_col, partition_expr=part
-                )
-            )
-        if "cardinality" in global_ and _spec_has_cardinality(self.spec):
-            checks_run.append("cardinality")
-            from py_schemax_spark.operators.referential import (
-                cardinality_violations,
-            )
-
-            global_parts.append(
-                cardinality_violations(
-                    df, self.spec, self.dims, partition_expr=part
-                )
-            )
-        if "drift" in global_ and self.baseline is not None:
-            checks_run.append("drift")
-            drift_list = drift_verdicts(
-                df, self.spec, self.baseline,
-                compression=cfg.drift_compression, fan=cfg.drift_fan,
-            )
-            global_parts.append(
-                drift_violations(self.spark, drift_list, key_name=key)
-                .withColumn("part", F.lit(TABLE_PART))
-            )
+        # global classes run over the FULL table every attempt
+        p.violations.clear()
+        self._walk(p, df, part, self._classes(GLOBAL))
 
         # final verdict = persisted (done ∪ fresh) local violations ∪
         # global violations, each global class executed once: in the
@@ -550,25 +557,24 @@ class ValidationRun:
         local_v = _Sink(manifest.violations_dir, partitioned=True).read(
             self.spark, res.violations.schema
         )
-        persisted: list[DataFrame] = []
         if sink is not None:
-            out = _Sink(sink)
-            out.write(merge_violations(local_v, *global_parts))
-            all_violations = out.read(self.spark, local_v.schema)
+            sink.write(merge_violations(local_v, *p.violations.values()))
+            all_violations = sink.read(self.spark, local_v.schema)
             n_global = all_violations.count() - local_v.count()
-        elif global_parts:
-            gv = merge_violations(*global_parts).persist(
-                StorageLevel.MEMORY_AND_DISK
-            )
-            persisted.append(gv)
+            p.unpersist()
+        elif p.violations:
+            gv = merge_violations(*p.violations.values())
+            if not p.fail_fast:
+                gv = gv.persist(StorageLevel.MEMORY_AND_DISK)
+                p.persisted.append(gv)
             n_global = gv.count()
             all_violations = merge_violations(local_v, gv)
         else:
             all_violations, n_global = local_v, 0
         # summary across ALL partitions (manifest metrics for done ones)
         run_summary = RunSummary()
-        for p in sorted(manifest.completed_parts):
-            rec = manifest.record(p)
+        for part_value in sorted(manifest.completed_parts):
+            rec = manifest.record(part_value)
             run_summary.total_partitions += 1
             run_summary.total_rows += rec.get("row_count", 0)
             run_summary.total_violations += rec.get("violation_count", 0)
@@ -576,24 +582,12 @@ class ValidationRun:
                 run_summary.valid_partitions += 1
             else:
                 run_summary.invalid_partitions += 1
-                run_summary.failed_parts.append(p)
+                run_summary.failed_parts.append(part_value)
         # global-check violations count for the table, not a partition
         run_summary.table_violations = n_global
         run_summary.total_violations += n_global
-        invalid = not run_summary.valid or bool(res.schema_errors)
-        exit_code = (
-            EXIT_OK if cfg.fail_mode == "never" or not invalid else EXIT_INVALID
-        )
-        return RunResult(
-            violations=all_violations,
-            summary_rows=list(res.summary_rows),
-            run_summary=run_summary,
-            exit_code=exit_code,
-            drift=drift_list,
-            schema_errors=res.schema_errors,
-            skipped_parts=sorted(done),
-            checks_run=tuple(checks_run),
-            persisted=tuple(persisted),
+        return self._result(
+            p, all_violations, list(res.summary_rows), run_summary, done
         )
 
     def stats(self, df: DataFrame, exact_distinct: bool = False) -> DataFrame:

@@ -40,6 +40,33 @@ def merge_violations(*parts: DataFrame) -> DataFrame:
     return reduce(lambda a, b: a.unionByName(b), renamed)
 
 
+def empty_violations(
+    df: DataFrame, key: str, with_part: bool = True
+) -> DataFrame:
+    """A violations frame with no rows: ``df``'s key column as a
+    string, the three verdict columns and (``with_part``) ``part``."""
+    return (
+        df.select(F.col(key).cast("string").alias(key))
+        .limit(0)
+        .select(
+            key,
+            F.lit("").alias("constraint_id"),
+            F.lit("").alias("observed"),
+            F.lit("").alias("expected"),
+            *([F.lit("").alias("part")] if with_part else []),
+        )
+    )
+
+
+def default_partition_expr(df: DataFrame):
+    """The partition value of a row: ``to_date(warc_ts)`` when the
+    table has it (the day-partitioned Iceberg layout), else a single
+    global ``"all"`` bucket."""
+    if "warc_ts" in df.columns:
+        return F.to_date("warc_ts").cast("string")
+    return F.lit("all")
+
+
 def partition_summary(
     df: DataFrame,
     violations: DataFrame,
@@ -48,8 +75,7 @@ def partition_summary(
     """Per-partition pass/fail: ``(part, row_count, violation_count,
     violating_keys, valid)``.
 
-    ``partition_expr`` defaults to ``to_date(warc_ts)`` when present
-    (the day-partitioned Iceberg layout), else a single global bucket.
+    ``partition_expr`` defaults to `default_partition_expr`.
     ``violations`` must carry a ``part`` column (operators propagate it
     when given ``partition_col``); when absent, violation counts are
     global. Violations of a part with no table rows (``TABLE_PART``)
@@ -57,10 +83,7 @@ def partition_summary(
     for every violation row.
     """
     if partition_expr is None:
-        if "warc_ts" in df.columns:
-            partition_expr = F.to_date("warc_ts").cast("string")
-        else:
-            partition_expr = F.lit("all")
+        partition_expr = default_partition_expr(df)
     rows = df.groupBy(partition_expr.alias("part")).agg(
         F.count(F.lit(1)).alias("row_count")
     )

@@ -2,6 +2,9 @@
 reference's CLI fail-mode matrix (tests/test_cmd_validate.py:332-395)
 and the resume hard-point (SURVEY.md §7 (e))."""
 
+from collections import Counter
+
+import pytest
 from pyspark.sql import functions as F
 
 from py_schemax_spark.operators.drift import build_baseline
@@ -10,39 +13,71 @@ from py_schemax_spark.sources.datagen import gen_lang_dim, gen_pages, write_page
 from py_schemax_spark.specs.loader import validate_spec_dict
 
 
-def _run(spark, df, spec, dims, baseline=None, **cfg):
-    run = ValidationRun(
-        spark, spec, dims, baseline, RunConfig(order_col="warc_ts", **cfg)
+def _multiset(violations) -> Counter:
+    return Counter(
+        tuple(r) for r in violations.select(
+            violations.columns[0], "constraint_id", "observed", "expected"
+        ).collect()
     )
-    return run.run(df)
+
+
+def _run(spark, df, spec, dims, baseline=None, ck=None, **cfg):
+    """A plain run. Given a checkpoint dir ``ck``, also a checkpointed
+    run, which must agree with it on the checks run, the exit code,
+    the totals and the violations — the fail-mode matrix holds with
+    the checkpoint off and on."""
+
+    def once(checkpoint_dir):
+        return ValidationRun(
+            spark, spec, dims, baseline,
+            RunConfig(order_col="warc_ts", checkpoint_dir=checkpoint_dir,
+                      **cfg),
+        ).run(df)
+
+    plain = once(None)
+    if ck is not None:
+        res = once(str(ck))
+        assert res.checks_run == plain.checks_run
+        assert res.exit_code == plain.exit_code
+        assert res.run_summary.valid == plain.run_summary.valid
+        assert (res.run_summary.total_violations
+                == plain.run_summary.total_violations)
+        assert _multiset(res.violations) == _multiset(plain.violations)
+    return plain
 
 
 def test_dirty_table_fails_clean_table_passes(
-    spark, pages, clean_pages, pages_spec, lang_dim
+    spark, pages, clean_pages, pages_spec, lang_dim, tmp_path
 ):
     dims = {"lang_dim": lang_dim}
-    dirty = _run(spark, pages, pages_spec, dims)
+    dirty = _run(spark, pages, pages_spec, dims, ck=tmp_path / "dirty")
     assert dirty.exit_code == 1
     assert not dirty.run_summary.valid
     assert dirty.run_summary.total_violations > 0
 
-    clean = _run(spark, clean_pages, pages_spec, dims)
+    clean = _run(
+        spark, clean_pages, pages_spec, dims, ck=tmp_path / "clean"
+    )
     assert clean.exit_code == 0
     assert clean.run_summary.valid
     assert clean.run_summary.total_violations == 0
 
 
-def test_fail_never_exits_zero(spark, pages, pages_spec, lang_dim):
+def test_fail_never_exits_zero(spark, pages, pages_spec, lang_dim, tmp_path):
     res = _run(
-        spark, pages, pages_spec, {"lang_dim": lang_dim}, fail_mode="never"
+        spark, pages, pages_spec, {"lang_dim": lang_dim}, fail_mode="never",
+        ck=tmp_path / "ck",
     )
     assert res.exit_code == 0
     assert not res.run_summary.valid  # verdicts still produced
 
 
-def test_fail_fast_short_circuits_classes(spark, pages, pages_spec, lang_dim):
+def test_fail_fast_short_circuits_classes(
+    spark, pages, pages_spec, lang_dim, tmp_path
+):
     res = _run(
-        spark, pages, pages_spec, {"lang_dim": lang_dim}, fail_mode="fast"
+        spark, pages, pages_spec, {"lang_dim": lang_dim}, fail_mode="fast",
+        ck=tmp_path / "ck",
     )
     assert res.exit_code == 1
     # rows class already has violations → later classes never ran
@@ -51,10 +86,11 @@ def test_fail_fast_short_circuits_classes(spark, pages, pages_spec, lang_dim):
     assert res.checks_run == ("schema", "rows")
 
 
-def test_check_selection_and_skip(spark, pages, pages_spec, lang_dim):
+def test_check_selection_and_skip(spark, pages, pages_spec, lang_dim, tmp_path):
     res = _run(
         spark, pages, pages_spec, {"lang_dim": lang_dim},
         checks=("schema", "rows", "referential"), skip=("referential",),
+        ck=tmp_path / "ck",
     )
     assert res.checks_run == ("schema", "rows")
     ids = {
@@ -65,27 +101,25 @@ def test_check_selection_and_skip(spark, pages, pages_spec, lang_dim):
     assert all(not i.endswith(".unique") for i in ids)
 
 
-def test_schema_gate_stops_everything(spark, pages_spec, lang_dim):
+def test_schema_gate_stops_everything(spark, pages_spec, lang_dim, tmp_path):
     # table missing a required column → parse-gate semantics
     # (reference rulesets.py:35-39): no rule classes run
     bad = gen_pages(spark, 100).drop("text")
-    run = ValidationRun(
-        spark, pages_spec, {"lang_dim": lang_dim},
-        config=RunConfig(order_col="warc_ts"),
+    res = _run(
+        spark, bad, pages_spec, {"lang_dim": lang_dim}, ck=tmp_path / "ck"
     )
-    res = run.run(bad)
     assert res.schema_errors
     assert res.exit_code == 1
     assert res.checks_run == ("schema",)
     assert res.violations.count() == 0
 
 
-def test_extraction_check_class(spark, pages, pages_spec, lang_dim):
+def test_extraction_check_class(spark, pages, pages_spec, lang_dim, tmp_path):
     """The extraction invariant runs as a first-class check: corrupt
     html rows (and only those) are flagged ``html.extraction``."""
     res = _run(
         spark, pages, pages_spec, {"lang_dim": lang_dim},
-        checks=("schema", "extraction"),
+        checks=("schema", "extraction"), ck=tmp_path / "ck",
     )
     assert res.checks_run == ("schema", "extraction")
     rows = res.violations.collect()
@@ -159,6 +193,94 @@ def test_checkpoint_resume_identical_verdicts(spark, pages_spec, lang_dim, tmp_p
     assert resumed_rows == golden_rows
     assert r2.run_summary.total_rows == golden.run_summary.total_rows
     assert r2.run_summary.total_violations == golden.run_summary.total_violations
+
+
+@pytest.fixture(scope="module")
+def written(spark, tmp_path_factory):
+    """A small day-partitioned pages table on disk: (path, frame)."""
+    path = str(tmp_path_factory.mktemp("written") / "pages")
+    write_pages(spark, path, 600)
+    return path, spark.read.parquet(path).drop("day")
+
+
+@pytest.mark.parametrize("first", [
+    {"fail_mode": "fast"},
+    {"checks": ("schema", "rows")},
+], ids=["fast", "narrowed"])
+def test_resume_after_narrowed_first_attempt(
+    spark, pages_spec, lang_dim, written, tmp_path, first
+):
+    """A first attempt that ran fewer local classes leaves no part a
+    full resume may skip: the checkpoint scope includes the enabled
+    local classes (and fail-fast), so the resume starts afresh and
+    still reports the first day's extraction violations."""
+    data_dir, full = written
+    dims = {"lang_dim": lang_dim}
+    golden = _run(spark, full, pages_spec, dims)
+    ck = str(tmp_path / "ck")
+    first_day = full.filter(F.to_date("warc_ts") == "2024-01-01")
+    ValidationRun(
+        spark, pages_spec, dims,
+        config=RunConfig(order_col="warc_ts", checkpoint_dir=ck, **first),
+    ).run(first_day, source=data_dir)
+    resumed = ValidationRun(
+        spark, pages_spec, dims,
+        config=RunConfig(order_col="warc_ts", checkpoint_dir=ck),
+    ).run(full, source=data_dir)
+    assert resumed.skipped_parts == []
+    assert _multiset(resumed.violations) == _multiset(golden.violations)
+    ids = {k[1] for k in _multiset(resumed.violations)}
+    assert "html.extraction" in ids
+
+
+@pytest.mark.parametrize("gate", ["schema", "fast"])
+def test_stopped_checkpoint_run_completes_no_part(
+    spark, pages_spec, lang_dim, written, tmp_path, gate
+):
+    """When the schema gate or fail-fast stops the local classes, no
+    global class runs and no partition is marked done."""
+    data_dir, full = written
+    if gate == "schema":
+        df, cfg, want = full.drop("text"), {}, ("schema",)
+    else:
+        df, cfg, want = full, {"fail_mode": "fast"}, ("schema", "rows")
+    ck = str(tmp_path / "ck")
+    runs = [
+        ValidationRun(
+            spark, pages_spec, {"lang_dim": lang_dim},
+            config=RunConfig(order_col="warc_ts", checkpoint_dir=ck, **cfg),
+        ).run(df, source=data_dir)
+        for _ in range(2)
+    ]
+    for res in runs:
+        assert res.checks_run == want
+        assert res.exit_code == 1
+        assert res.skipped_parts == []
+    ids = {k[1] for k in _multiset(runs[0].violations)}
+    assert not any(i.endswith(".unique") for i in ids)
+
+
+def test_explain_shows_fused_classes_inside_rows(
+    spark, pages, pages_spec, lang_dim
+):
+    """``explain_plans`` walks the same table as ``run``: extraction
+    and the literal-sized referential dim fuse into the rows plan,
+    which therefore evaluates the extraction UDF. Fail-fast fuses
+    nothing, so each class gets its own plan."""
+    dims = {"lang_dim": lang_dim}
+    plans = ValidationRun(
+        spark, pages_spec, dims, config=RunConfig(order_col="warc_ts"),
+    ).explain_plans(pages)
+    assert list(plans) == ["rows", "uniqueness"]
+    assert "ArrowEvalPython" in plans["rows"]
+
+    fast = ValidationRun(
+        spark, pages_spec, dims,
+        config=RunConfig(order_col="warc_ts", fail_mode="fast"),
+    ).explain_plans(pages)
+    assert list(fast) == ["rows", "extraction", "referential", "uniqueness"]
+    assert "ArrowEvalPython" not in fast["rows"]
+    assert "ArrowEvalPython" in fast["extraction"]
 
 
 def test_summary_collect_bounded_at_high_partition_count(spark, pages_spec, lang_dim):
