@@ -213,13 +213,13 @@ def q_uniqueness(spark, sf_dir):
 
 def q_extraction(spark, sf_dir):
     """Byte-identical extraction invariant over derived pages: the
-    pandas-UDF extraction must reproduce the stored text for every url."""
-    from py_schemax_spark.functions.extraction import extract_text_udf
+    JVM template inverse must reproduce the stored text for every url."""
+    from py_schemax_spark.functions.extraction import extract_text_expr
 
     pages = pages_from_documents(spark, sf_dir)
     return pages.select(
         "url",
-        extract_text_udf(F.col("html")).eqNullSafe(F.col("text")).alias("ok"),
+        extract_text_expr(F.col("html")).eqNullSafe(F.col("text")).alias("ok"),
     ).orderBy("url")
 
 

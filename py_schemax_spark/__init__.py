@@ -15,8 +15,9 @@ declarative constraint specs compiled to vectorized DataFrame plans:
   data-level analogue of the reference's ValidationErrorSchema
   (``py_schemax/schema/validation.py:11-26``)
 
-Everything is DataFrame-API expressible; Python appears only in
-Arrow-batched pandas UDFs (text extraction, sketches), never per-row.
+Everything is DataFrame-API expressible; the byte-identical text
+extraction check is codegen'd JVM expressions, and Python appears
+only in Arrow-batched pandas stages (drift sketches), never per-row.
 """
 
 __version__ = "0.4.0"

@@ -714,9 +714,19 @@ def main(argv: Optional[list[str]] = None, spark=None) -> int:
                 df = df.filter(F.expr(ns.where))
             run = ValidationRun(spark, spec_result.spec, dims, baseline, rc)
             if ns.explain:
-                for cls, plan in run.explain_plans(df).items():
+                plans, schema_errors = run.explain_plans(df)
+                for cls, plan in plans.items():
                     print(f"== {cls} ==")
                     print(plan)
+                # a gated table plans nothing: say why, and exit as
+                # the gated run would
+                for err in schema_errors:
+                    print(f"❌ {t}: schema: {err['error_at']}: "
+                          f"{err['message']}", file=sys.stderr)
+                if schema_errors and cfg.fail_mode != "never":
+                    if cfg.fail_mode == "fast":
+                        return 1
+                    worst = 1
                 continue
             # S8 result sink: the run writes the violations parquet
             # itself, before computing the summary from it

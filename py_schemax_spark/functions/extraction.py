@@ -2,28 +2,32 @@
 
 The per-row invariant of the engine (BASELINE.json input_hint): the
 text extracted from ``html`` must be BYTE-identical to the stored
-``text`` column for every url. Extraction runs as an Arrow-batched
-pandas UDF over the binary column — never per-row Python (the
-reference's per-document Pydantic walk is exactly what we are
-replacing; SURVEY.md §2.4).
+``text`` column for every url. The html is rendered from the text
+through a fixed template, so extraction is the template's exact
+inverse, and that inverse is written here as Catalyst expressions:
+the check fuses into the rows projection and runs in the JVM, with no
+Python worker and no Arrow transfer (SURVEY.md §2.4; *Accelerating
+Python UDFs in Vectorized Query Execution*, CIDR 2022).
 
-Byte-identity across the Arrow boundary is achieved by operating on
-``bytes`` and decoding/encoding UTF-8 explicitly — we never rely on
-pandas object coercion (SURVEY.md §7 hard-point (b)).
+Byte identity holds because no step goes through a lossy charset
+coding: the payload is decoded as ISO-8859-1 (one char per byte, so
+string positions are byte offsets), the body is re-encoded to its
+exact bytes, and UTF-8 validity is tested, not repaired
+(SURVEY.md §7 hard-point (b)).
 
-``extract_text_py`` is the single-process pure-Python reference
-implementation; pytest asserts UDF(html) == reference(html) == text.
+- ``extract_text_expr`` is the inverse; ``canonical_html`` proves a
+  row clean with one byte compare against the re-rendered template,
+  so the inverse only runs on the rare row that is not canonical.
+- ``extract_text_py`` is the single-process pure-Python reference;
+  pytest asserts expr(html) == reference(html) over generated bytes.
 """
 
 from __future__ import annotations
 
 from typing import Optional
 
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-from pyspark.sql.functions import pandas_udf
 
 # Fixed reversible template (FIXTURES.md §1): html is rendered from
 # text, so extraction has a known byte-exact inverse.
@@ -45,16 +49,22 @@ def render_html_py(text: Optional[str]) -> Optional[bytes]:
     return _PRE + body + _POST
 
 
+def _escape(text_col: Column) -> Column:
+    for raw, esc in _ESCAPES:
+        text_col = F.replace(
+            text_col, F.lit(raw.decode()), F.lit(esc.decode())
+        )
+    return text_col
+
+
+def _template(body: Column) -> Column:
+    return F.concat(F.lit(_PRE.decode()), body, F.lit(_POST.decode()))
+
+
 def render_html_expr(text_col: Column) -> Column:
     """JVM-side renderer: same bytes as ``render_html_py``, built from
     codegen'd string functions so datagen needs no Python at scale."""
-    body = text_col
-    for raw, esc in _ESCAPES:
-        body = F.replace(body, F.lit(raw.decode()), F.lit(esc.decode()))
-    html = F.concat(
-        F.lit(_PRE.decode()), body, F.lit(_POST.decode())
-    )
-    return F.encode(html, "UTF-8")
+    return F.encode(_template(_escape(text_col)), "UTF-8")
 
 
 def extract_text_py(html: Optional[bytes]) -> Optional[str]:
@@ -79,86 +89,33 @@ def extract_text_py(html: Optional[bytes]) -> Optional[str]:
         return None
 
 
-def _extract_series(html: pd.Series) -> pd.Series:
-    """Batch extraction with a pyarrow-vectorized fast path: rows whose
-    payload starts with the template prefix and ends with the suffix
-    (the overwhelmingly common case) are sliced, unescaped, and
-    UTF-8-validated entirely in Arrow C kernels — zero per-row Python.
-    Non-conforming rows (corrupt blobs, junk-wrapped templates, nulls)
-    fall back to ``extract_text_py`` individually, so the result is
-    byte-identical to the pure-Python reference for EVERY input
-    (pytest asserts this equivalence)."""
-    import numpy as np
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    try:
-        arr = pa.array(html, type=pa.binary())
-    except Exception:
-        return html.map(extract_text_py, na_action="ignore")
-    ok = pc.and_kleene(
-        pc.starts_with(arr, pattern=_PRE), pc.ends_with(arr, pattern=_POST)
+def extract_text_expr(html: Column) -> Column:
+    """Byte-exact JVM twin of ``extract_text_py`` over a binary column:
+    the body between the first ``_PRE`` and the last ``_POST``, null
+    when a marker is missing or the body is not valid UTF-8, unescaped
+    in reverse render order (``&amp;`` last)."""
+    latin = F.decode(html, "ISO-8859-1")  # one char per byte
+    i = F.instr(latin, _PRE.decode())  # 1-based, 0 = absent
+    # the last _POST is the first reversed _POST in the reversed payload
+    k = F.instr(F.reverse(latin), _POST[::-1].decode())
+    start = i + len(_PRE)  # 1-based body start
+    stop = F.length(latin) - k - len(_POST) + 2  # 1-based, exclusive
+    body = F.encode(latin.substr(start, stop - start), "ISO-8859-1").cast(
+        "string"
     )
-    ok = pc.and_kleene(
-        ok, pc.greater_equal(pc.binary_length(arr), len(_PRE) + len(_POST))
-    )
-    ok = pc.fill_null(ok, False)
-    body = pc.if_else(
-        ok,
-        pc.binary_slice(arr, start=len(_PRE), stop=-len(_POST)),
-        pa.scalar(b"", type=pa.binary()),
-    )
-    try:
-        s = pc.cast(body, pa.string())
-    except Exception:
-        # invalid UTF-8 inside a conforming template — rare; the
-        # per-row path returns None for exactly those rows
-        return html.map(extract_text_py, na_action="ignore")
-    # unescape in reverse render order (&amp; LAST, see _ESCAPES)
+    text = body
     for raw, esc in reversed(_ESCAPES):
-        s = pc.replace_substring(
-            s, pattern=esc.decode(), replacement=raw.decode()
-        )
-    out = s.to_pandas()
-    ok_np = ok.to_numpy(zero_copy_only=False)
-    if not ok_np.all():
-        vals = html.to_numpy(dtype=object)
-        for i in np.nonzero(~ok_np)[0]:
-            out.iloc[i] = extract_text_py(vals[i])
-    return out
+        text = F.replace(text, F.lit(esc.decode()), F.lit(raw.decode()))
+    found = (i > 0) & (k > 0) & (stop >= start)
+    return F.when(found & F.is_valid_utf8(body), text)
 
 
-@pandas_udf(T.StringType())
-def extract_text_udf(html: pd.Series) -> pd.Series:
-    """Arrow-batched extraction: one Python invocation per record
-    batch; the template fast path runs in pyarrow C kernels (see
-    ``_extract_series``), per-row Python only for non-conforming
-    payloads."""
-    return _extract_series(html)
-
-
-@pandas_udf(T.StringType())
-def extract_mismatch_udf(html: pd.Series, text: pd.Series) -> pd.Series:
-    """Extraction-invariant check with the compare INSIDE the batch:
-    returns null when ``extract(html)`` byte-equals ``text`` (the
-    overwhelmingly common case), else the observed extracted value
-    (``<unextractable>`` for corrupt payloads).
-
-    Returning ~1 null byte per clean row instead of shipping every
-    extracted string back through Arrow for a JVM-side compare halves
-    the Arrow traffic of the dominant python stage; the violation
-    text survives only for the rare mismatching row. Extraction AND
-    the equality compare are vectorized (Arrow kernels + pandas);
-    per-row Python touches only non-conforming or mismatching rows."""
-    import numpy as np
-
-    ex = _extract_series(html)
-    eq = (ex == text) | (ex.isna() & text.isna())
-    n = len(ex)
-    res: list = [None] * n
-    if not bool(eq.all()):
-        ex_np = ex.to_numpy(dtype=object)
-        for i in np.nonzero(~eq.to_numpy(dtype=bool))[0]:
-            e = ex_np[i]
-            res[i] = e if e is not None else "<unextractable>"
-    return pd.Series(res, dtype=object)
+def canonical_html(html: Column, text: Column) -> Column:
+    """True when ``html`` is exactly the template rendered from a
+    valid-UTF-8 ``text`` (both null counts), which proves
+    ``extract_text_py(html) == text``. Compared as raw bytes: the
+    binary→string cast does no charset coding."""
+    rendered = _template(_escape(text))
+    return html.cast("string").eqNullSafe(rendered) & F.coalesce(
+        F.is_valid_utf8(text), F.lit(True)
+    )

@@ -2,11 +2,14 @@
 per row (BASELINE.json input_hint — the engine's per-row invariant vs
 the reference harness).
 
-Row-local (resumable under checkpointing) and the only check class
-whose cost is dominated by Python — but Arrow-batched Python: the
-pandas UDF decodes whole record batches, so throughput scales linearly
-with cores, unlike any per-row UDF. The scan for this check is the
-only one that reads the ``html`` payload bytes at all.
+Row-local (resumable under checkpointing). The runner normally fuses
+this check into the rows projection (``plans.compiler.
+extraction_constraint``); this operator is the same constraint as a
+plan of its own, for fail-fast (one probe per class) and for timing
+the class alone. Either way the check is a codegen'd JVM expression —
+a byte compare against the re-rendered template, with the full
+template inverse only for rows that fail it — so no row crosses into
+Python. It is the only check that reads the ``html`` payload bytes.
 """
 
 from __future__ import annotations
@@ -14,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from py_schemax_spark.plans.compiler import extraction_constraint
 from py_schemax_spark.specs.model import TableSpec
 
 
@@ -27,31 +31,18 @@ def extraction_violations(
     ``(<key>, 'extraction', observed, expected)``. Null html with null
     text is consistent (no violation); unextractable html (corrupt
     payload → extractor returns null) against non-null text IS one."""
-    assert spec.extraction is not None
-    src, tgt = spec.extraction.source, spec.extraction.target
+    rc = extraction_constraint(spec)
+    assert rc is not None
     key = key_col or spec.key_column
     pcol = (
         [partition_expr.cast("string").alias("part")]
         if partition_expr is not None
         else []
     )
-    from py_schemax_spark.functions.extraction import extract_mismatch_udf
-
-    cid = f"{src}.extraction"
-    return (
-        df.select(F.col(key).cast("string").alias(key), src, tgt, *pcol)
-        # compare inside the Arrow batch: null = byte-identical, so the
-        # common clean row ships ~1 null byte back instead of its whole
-        # extracted text (see extract_mismatch_udf)
-        .withColumn("_mx", extract_mismatch_udf(F.col(src), F.col(tgt)))
-        .filter(F.col("_mx").isNotNull())
-        .select(
-            key,
-            F.lit(cid).alias("constraint_id"),
-            F.substring(F.col("_mx"), 1, 256).alias("observed"),
-            F.lit(f"extract({src}) == {tgt} (byte-identical)").alias(
-                "expected"
-            ),
-            *(["part"] if pcol else []),
-        )
+    return df.filter(rc.predicate).select(
+        F.col(key).cast("string").alias(key),
+        F.lit(rc.constraint_id).alias("constraint_id"),
+        rc.observed.alias("observed"),
+        F.lit(rc.expected).alias("expected"),
+        *pcol,
     )

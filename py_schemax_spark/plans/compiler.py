@@ -29,6 +29,10 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from py_schemax_spark.functions.extraction import (
+    canonical_html,
+    extract_text_expr,
+)
 from py_schemax_spark.specs.model import ColumnSpec, TableSpec
 
 # Observed values are truncated so violation rows stay small even when
@@ -280,21 +284,23 @@ def compile_row_constraints(
 
 
 def extraction_constraint(spec: TableSpec) -> RowConstraint | None:
-    """Extraction invariant as a RowConstraint, so it can fuse into the
-    same single-scan projection as every other row check."""
+    """Extraction invariant as a RowConstraint, so it fuses into the
+    same single-scan projection as every other row check, in the JVM.
+
+    A canonical row (html is the template rendered from text) is clean
+    after one byte compare; only the rare other row pays for the full
+    inverse, which is why it sits in the ELSE branch."""
     if spec.extraction is None:
         return None
-    from py_schemax_spark.functions.extraction import extract_mismatch_udf
-
     src, tgt = spec.extraction.source, spec.extraction.target
-    # compare happens inside the Arrow batch: null = byte-identical
-    # (the common row returns ~1 null byte instead of the whole
-    # extracted string), non-null = the observed mismatching value
-    mismatch = extract_mismatch_udf(F.col(src), F.col(tgt))
+    html, text = F.col(src), F.col(tgt)
+    extracted = extract_text_expr(html)
     return RowConstraint(
         f"{src}.extraction",
-        mismatch.isNotNull(),
-        F.substring(mismatch, 1, 256),
+        F.when(canonical_html(html, text), F.lit(False)).otherwise(
+            ~extracted.eqNullSafe(text)
+        ),
+        _obs(F.coalesce(extracted, F.lit("<unextractable>"))),
         f"extract({src}) == {tgt} (byte-identical)",
     )
 

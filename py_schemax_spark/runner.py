@@ -471,11 +471,13 @@ class ValidationRun:
         self._walk(p, df, part, self._classes())
         return self._finish(p, df, part, out)
 
-    def explain_plans(self, df: DataFrame) -> dict[str, str]:
+    def explain_plans(self, df: DataFrame) -> tuple[dict[str, str], list]:
         """Physical plan of each check class ``run()`` would execute on
         ``df``, built by the same table walk — the plan-first workflow
         (`validate --explain`): inspect where the exchanges, broadcasts
         and pushed filters land before paying for a 100-TB pass.
+        Returns ``(plans, schema_errors)``: a failing schema gate plans
+        nothing after it, and its errors say why.
 
         Runs no job over the validated table; the dims may be probed
         (a literal-sized dim's IN-list reads at most
@@ -493,7 +495,7 @@ class ValidationRun:
         return {
             name: v._jdf.queryExecution().executedPlan().toString()
             for name, v in p.violations.items()
-        }
+        }, p.schema_errors
 
     # -- checkpointed run -----------------------------------------------------
 

@@ -125,7 +125,8 @@ class ColumnSpec:
 @dataclass(frozen=True)
 class ExtractionSpec:
     """Byte-identical extraction invariant (BASELINE.json input_hint):
-    ``extract(source) == target`` per row, via the Arrow pandas UDF."""
+    ``extract(source) == target`` per row, as JVM expressions fused into
+    the rows projection (``functions.extraction``)."""
 
     source: str = "html"
     target: str = "text"

@@ -403,3 +403,21 @@ def test_validate_explain_prints_plans_without_running(
     # a physical plan, not verdicts
     assert "Scan parquet" in out or "FileScan" in out
     assert "❌" not in out
+
+
+@pytest.mark.parametrize("mode, want", [("--fail-after", 1),
+                                        ("--fail-never", 0)])
+def test_validate_explain_reports_failing_schema_gate(
+    spark, table_dir, tmp_path, capsys, mode, want
+):
+    """A table that fails the schema gate has no plans to explain: the
+    schema errors go to stderr and the exit code is the gated run's."""
+    spec = tmp_path / "no_day.yaml"  # the table's `day` column is extra
+    spec.write_text(SPEC_YAML.replace("  - name: day\n    type: date\n", ""))
+    argv = ["validate", table_dir, "--spec", str(spec), mode]
+    assert _main(spark, argv) == want
+    capsys.readouterr()
+    assert _main(spark, [*argv, "--explain"]) == want
+    captured = capsys.readouterr()
+    assert "==" not in captured.out
+    assert "schema" in captured.err and "day" in captured.err

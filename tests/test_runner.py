@@ -2,6 +2,7 @@
 reference's CLI fail-mode matrix (tests/test_cmd_validate.py:332-395)
 and the resume hard-point (SURVEY.md §7 (e))."""
 
+import re
 from collections import Counter
 
 import pytest
@@ -260,27 +261,35 @@ def test_stopped_checkpoint_run_completes_no_part(
     assert not any(i.endswith(".unique") for i in ids)
 
 
+CANONICAL = re.compile(r"cast\(html#\d+ as string\) <=> concat\(<html>")
+
+
 def test_explain_shows_fused_classes_inside_rows(
     spark, pages, pages_spec, lang_dim
 ):
     """``explain_plans`` walks the same table as ``run``: extraction
     and the literal-sized referential dim fuse into the rows plan,
-    which therefore evaluates the extraction UDF. Fail-fast fuses
-    nothing, so each class gets its own plan."""
+    which therefore evaluates the JVM extraction check. Fail-fast
+    fuses nothing, so each class gets its own plan. No plan calls
+    Python."""
     dims = {"lang_dim": lang_dim}
-    plans = ValidationRun(
+    plans, errors = ValidationRun(
         spark, pages_spec, dims, config=RunConfig(order_col="warc_ts"),
     ).explain_plans(pages)
+    assert errors == []
     assert list(plans) == ["rows", "uniqueness"]
-    assert "ArrowEvalPython" in plans["rows"]
+    # the canonical-template compare that guards the full inverse
+    assert CANONICAL.search(plans["rows"])
 
-    fast = ValidationRun(
+    fast, _ = ValidationRun(
         spark, pages_spec, dims,
         config=RunConfig(order_col="warc_ts", fail_mode="fast"),
     ).explain_plans(pages)
     assert list(fast) == ["rows", "extraction", "referential", "uniqueness"]
-    assert "ArrowEvalPython" not in fast["rows"]
-    assert "ArrowEvalPython" in fast["extraction"]
+    assert not CANONICAL.search(fast["rows"])
+    assert CANONICAL.search(fast["extraction"])
+    for plan in (*plans.values(), *fast.values()):
+        assert "ArrowEvalPython" not in plan
 
 
 def test_summary_collect_bounded_at_high_partition_count(spark, pages_spec, lang_dim):

@@ -3,14 +3,17 @@
 ``validate --output-dir`` writes the violations first and computes the
 summary from what it wrote. Each path (plain with and without a sink,
 checkpointed with an output dir, fail-fast) runs its violations
-pipeline once: the extraction UDF sees every table row exactly once
-per run, however many consumers read the verdict afterwards.
+pipeline once: the scan that reads the ``html`` payload (the
+extraction check) outputs every table row exactly once per run,
+however many consumers read the verdict afterwards, and no row
+crosses into Python.
 """
 
 from __future__ import annotations
 
 import io
 import json
+import re
 from contextlib import redirect_stdout
 from pathlib import Path
 
@@ -112,9 +115,11 @@ def _last_execution_id(spark) -> int:
     return store.executionsList(n - 1, 1).head().executionId() if n else -1
 
 
-def _udf_rows(spark, since: int) -> list[int]:
-    """Output rows of every ArrowEvalPython node (the extraction UDF)
-    in the SQL executions after execution ``since``."""
+def _plan_nodes(spark, since: int) -> list[tuple[str, str, int]]:
+    """``(name, description, output rows)`` of every plan node in the
+    SQL executions after execution ``since``. A node this execution did
+    not run (e.g. the plan under a cached relation it only reads)
+    reports 0 rows."""
     store = _sql_store(spark)
     n = store.executionsCount()
     out = []
@@ -124,22 +129,42 @@ def _udf_rows(spark, since: int) -> list[int]:
             continue
         values = store.executionMetrics(eid)
         for node in _seq(store.planGraph(eid).allNodes()):
-            if node.name() != "ArrowEvalPython":
-                continue
+            rows = 0
             for m in _seq(node.metrics()):
                 if m.name() == "number of output rows":
                     v = values.get(m.accumulatorId())
-                    out.append(
-                        int(v.get().replace(",", "")) if v.isDefined() else 0
-                    )
+                    if v.isDefined():
+                        rows = int(v.get().replace(",", ""))
+            out.append((node.name(), node.desc(), rows))
     return out
 
 
-def _assert_once(rows: list[int], n_rows: int) -> None:
-    """The UDF evaluated the whole table exactly once; any other
-    evaluation saw only the violating rows behind the fused filter."""
+def _html_scan_rows(nodes) -> list[int]:
+    """Output rows of each file scan that reads the ``html`` payload:
+    only the extraction check does."""
+    return [
+        rows for _, desc, rows in nodes
+        if re.match(r"FileScan \w+ \[[^\]]*\bhtml#\d+", desc)
+    ]
+
+
+def _assert_once(nodes, n_rows: int) -> None:
+    """No row crossed into Python, and the table's payload was read
+    exactly once: a second execution of the pipeline would scan
+    ``html`` again."""
+    assert not [n for n, _, _ in nodes if n == "ArrowEvalPython"]
+    rows = _html_scan_rows(nodes)
     assert rows.count(n_rows) == 1, rows
-    assert sum(rows) < 2 * n_rows, rows
+    assert sum(rows) == n_rows, rows
+
+
+def _fused_violating_rows(nodes) -> int:
+    """Rows the fused rows projection found violating: the filter on a
+    non-empty violation array (Spark infers it from the explode)."""
+    return sum(
+        rows for name, desc, rows in nodes
+        if name == "Filter" and "size(CASE WHEN" in desc
+    )
 
 
 # --- validate --output-dir -------------------------------------------------
@@ -213,7 +238,7 @@ def test_plain_with_sink_runs_pipeline_once(spark, inputs, tmp_path):
     res = _run(spark, inputs).run(df, sink=str(tmp_path / "v"))
     res.violations.collect()
     res.violations.count()
-    _assert_once(_udf_rows(spark, since), inputs["n_rows"])
+    _assert_once(_plan_nodes(spark, since), inputs["n_rows"])
     assert res.persisted == ()
     assert res.run_summary.total_violations == res.violations.count()
 
@@ -224,7 +249,7 @@ def test_plain_without_sink_runs_pipeline_once(spark, inputs):
     res = _run(spark, inputs).run(df)
     res.violations.collect()
     res.violations.count()
-    _assert_once(_udf_rows(spark, since), inputs["n_rows"])
+    _assert_once(_plan_nodes(spark, since), inputs["n_rows"])
     assert res.run_summary.total_violations == res.violations.count()
     assert res.persisted
     res.release()
@@ -235,11 +260,17 @@ def test_checkpoint_with_output_dir_runs_pipeline_once(spark, inputs,
     ck = str(tmp_path / "ck")
     since = _last_execution_id(spark)
     _cli(spark, inputs, tmp_path / "out", "--checkpoint-dir", ck)
-    _assert_once(_udf_rows(spark, since), inputs["n_rows"])
-    # the resume skips every partition: the UDF sees no row at all
+    fresh = _plan_nodes(spark, since)
+    _assert_once(fresh, inputs["n_rows"])
+    assert _fused_violating_rows(fresh) > 0  # the table is dirty
+    # the resume skips every partition: the done-partition predicate
+    # drops each row of the dirty table before the checks see it
     since = _last_execution_id(spark)
     _cli(spark, inputs, tmp_path / "out", "--checkpoint-dir", ck)
-    assert sum(_udf_rows(spark, since)) == 0
+    resumed = _plan_nodes(spark, since)
+    assert not [n for n, _, _ in resumed if n == "ArrowEvalPython"]
+    assert sum(_html_scan_rows(resumed)) <= inputs["n_rows"]
+    assert _fused_violating_rows(resumed) == 0
 
 
 def test_fail_fast_probe_is_the_only_run(spark, tmp_path):
@@ -262,7 +293,7 @@ def test_fail_fast_probe_is_the_only_run(spark, tmp_path):
         assert res.checks_run == ("schema", "extraction", "uniqueness")
         assert res.exit_code == 1
         assert _counts(res.violations).keys() == {"url.unique"}
-        _assert_once(_udf_rows(spark, since), n_rows)
+        _assert_once(_plan_nodes(spark, since), n_rows)
         res.release()
 
 
