@@ -9,8 +9,8 @@ from SURVEY.md §2 plus the training-pipeline extensions. Oracle SQL
 runs on DuckDB over the same parquet views; Spark/SQL column names and
 value representations are aligned (integer-exact arithmetic or
 floor-scaled doubles where FP summation order could differ).
-Non-SQL-expressible ops (t-digest drift, minhash/simhash LSH,
-multimodal metadata) have no oracle entry → driver records rows-only.
+Non-SQL-expressible ops (minhash/simhash LSH, multimodal metadata)
+have no oracle entry → driver records rows-only.
 """
 
 from __future__ import annotations
@@ -318,11 +318,11 @@ def q_quality_topk_per_lang(spark, sf_dir):
 
 def q_quantiles(spark, sf_dir):
     """Exact interpolated quantiles of n_chars (the column the drift
-    class sketches with t-digest): the EXACT companion the sketch
-    estimates are judged against. Both engines use the same
-    linear-interpolation definition (Spark `percentile` ==
-    DuckDB `quantile_cont`); values floor-scaled to 1e-4 so a last-ulp
-    interpolation difference cannot flip the hash."""
+    class compares against its baseline grid): the EXACT companion
+    the grid's ``percentile_approx`` estimates are judged against.
+    Both engines use the same linear-interpolation definition (Spark
+    `percentile` == DuckDB `quantile_cont`); values floor-scaled to
+    1e-4 so a last-ulp interpolation difference cannot flip the hash."""
     d = _docs(spark, sf_dir)
     probs = [0.25, 0.5, 0.75, 0.95]
     aggs = [
@@ -335,8 +335,9 @@ def q_quantiles(spark, sf_dir):
 
 def q_drift_buckets(spark, sf_dir):
     """Exact drift histogram (fixed-width buckets of n_chars) — the
-    SQL-checkable companion of the t-digest PSI/KS sketch path
-    (pytested in test_drift.py; accuracy-gated by drift_grid_accuracy)."""
+    SQL-checkable companion of the grid-count PSI/KS path (pytested
+    in test_drift.py, with a DuckDB twin of its counts; the baseline
+    grid is accuracy-gated by drift_grid_accuracy)."""
     return (
         _docs(spark, sf_dir)
         .groupBy(F.floor(F.col("n_chars") / 50).cast("long").alias("bucket"))
@@ -345,10 +346,10 @@ def q_drift_buckets(spark, sf_dir):
 
 
 def q_drift_grid_accuracy(spark, sf_dir):
-    """Accuracy oracle for the t-digest sketch path (the drift
-    analogue of minhash_containment / ann_lsh_containment): every
-    point of the estimated quantile grid must bracket its target rank
-    within TOL in RANK space — the guarantee t-digest actually makes,
+    """Accuracy oracle for the baseline grid (the drift analogue of
+    minhash_containment / ann_lsh_containment): every point of the
+    ``percentile_approx`` quantile grid must bracket its target rank
+    within TOL in RANK space — the guarantee a quantile sketch makes,
     stated tie-robustly for discrete data (doc lengths repeat):
 
         P(X < v_q) <= q + TOL   and   P(X <= v_q) >= q - TOL
@@ -357,7 +358,7 @@ def q_drift_grid_accuracy(spark, sf_dir):
     grid points in a single corpus pass (the grid itself is a KB-sized
     driver value, like the IVF centroid set). Returns the grid points
     violating either bound; the oracle is the empty set — any row is
-    a real sketch-accuracy bug."""
+    a real grid-accuracy bug."""
     TOL = 0.05
     docs = _docs(spark, sf_dir).filter(F.col("text").isNotNull())
     base = build_baseline(docs, PAGES_SPEC)
@@ -1687,9 +1688,10 @@ def q_corpus_mix(spark, sf_dir):
 def q_drift_ks(spark, sf_dir):
     """Exact two-sample KS statistic (basis points) between the even-
     and odd-doc_id halves of the corpus over n_chars — the integer-
-    exact companion the t-digest KS estimate (test_drift.py) is judged
-    against. Per-value aggregation with map-side combine before the
-    one CDF window (distinct n_chars values, not rows)."""
+    exact two-sample companion of the drift class's KS against a
+    baseline grid (test_drift.py). Per-value aggregation with
+    map-side combine before the one CDF window (distinct n_chars
+    values, not rows)."""
     from py_schemax_spark.operators.integrity import exact_ks_2samp
 
     d = _docs(spark, sf_dir).select(

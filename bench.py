@@ -562,9 +562,9 @@ Per the north rule's two-cluster-size criterion (no real cluster in
 this sandbox): the SAME end-to-end validation job — all constraint
 classes: one-pass column stats, row constraints, byte-identical
 html→text extraction (Arrow pandas UDF), uniqueness (hash shuffle +
-window), lang referential (broadcast anti-join), t-digest drift vs a
-baseline snapshot — on the SAME stored deterministic synthetic pages
-table, at two parallelism levels N={n} and 4N={n4} cores
+window), lang referential (broadcast anti-join), drift (exact counts
+against a baseline quantile grid) — on the SAME stored deterministic
+synthetic pages table, at two parallelism levels N={n} and 4N={n4} cores
 (document-size multiplier words_scale={scaling.get('words_scale', 1)};
 `SPARK_GRAFT_SCALE_WORDS_SCALE=8` benchmarks ~2 KB realistic pages
 instead — Arrow-transfer-bound, higher local-mode variance).
@@ -658,7 +658,7 @@ to a disjoint core set so python-UDF workers cannot borrow idle host
 cores or each other's. Checks included:
 row constraints, byte-identical html→text extraction (Arrow pandas
 UDF), uniqueness (window), lang referential (broadcast anti-join),
-t-digest drift vs baseline.
+drift (exact counts against a baseline quantile grid).
 
 ## Round-5 run-to-run distribution
 
@@ -770,7 +770,7 @@ On a real N->4N *executor* scale-out each node brings its own memory
 bus, NICs and disks; the logical plans are identical across levels
 (AQE only re-splits at runtime), and the only cross-node traffic is
 the shuffle of pre-aggregated pairs (uniqueness) and KB-sized
-sketches (drift) — orders of magnitude below scan volume.
+grid-index histograms (drift) — orders of magnitude below scan volume.
 """
     md += _ladder_md()
     Path(__file__).parent.joinpath("BENCH.md").write_text(md)

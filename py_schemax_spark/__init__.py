@@ -10,14 +10,15 @@ declarative constraint specs compiled to vectorized DataFrame plans:
 - column stats in one salted aggregation pass (SURVEY.md §2 V1)
 - uniqueness via hash-repartitioned groupBy + window attribution (V3)
 - referential integrity via broadcast anti-joins (V4)
-- distribution drift via t-digest sketches merged treewise + KS/PSI
+- distribution drift: exact counts against a baseline quantile grid,
+  PSI/KS on the driver
 - violation rows ``(url, constraint_id, observed, expected)`` — the
   data-level analogue of the reference's ValidationErrorSchema
   (``py_schemax/schema/validation.py:11-26``)
 
-Everything is DataFrame-API expressible; the byte-identical text
-extraction check is codegen'd JVM expressions, and Python appears
-only in Arrow-batched pandas stages (drift sketches), never per-row.
+Everything is DataFrame-API expressible: the byte-identical text
+extraction check is codegen'd JVM expressions and drift is one JVM
+aggregation, so a ``validate`` run starts no Python worker.
 """
 
 __version__ = "0.4.0"

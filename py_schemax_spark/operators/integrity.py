@@ -51,9 +51,9 @@ def exact_ks_2samp(
     values). Returns ONE row ``(n_a, n_b, ks_bp)`` where
     ``ks_bp = floor(10000 * max_v |CDF_a(v) - CDF_b(v)|)`` computed in
     exact integer arithmetic (``|cum_a*n_b - cum_b*n_a|`` over a
-    common value grid), so any SQL engine reproduces it bit-for-bit —
-    the exact companion the t-digest KS estimate
-    (`drift.drift_verdicts`) is judged against.
+    common value grid), so any SQL engine reproduces it bit-for-bit.
+    (`drift.drift_verdicts` instead measures KS against a baseline
+    quantile grid, not between two samples.)
     """
     g = F.col(group_col).cast("int")
     counts = (

@@ -568,8 +568,7 @@ def group_quantiles(
     - ``exact=True``: Spark's exact interpolated ``percentile``. The
       aggregation buffers each group's values, so this is for
       BOUNDED groups (dashboards over sampled slices, oracle
-      fixtures) — at corpus-scale groups use the sketch path or the
-      t-digest machinery (`functions/tdigest.py`). The exact
+      fixtures) — at corpus-scale groups use the sketch path. The exact
       interpolated definition matches DuckDB's ``quantile_cont``, so
       this path is hash-oracle-able (values rounded to 4 decimals:
       same rationals, same IEEE interpolation, same rounding).

@@ -167,7 +167,7 @@ class CheckClass:
     ``p.schema_errors``); ``fuse(p, df)`` returns the RowConstraints
     that evaluate inside the rows projection instead, or None when the
     class needs its own plan. ``lazy=False`` marks a class whose build
-    itself runs jobs (drift compares collected sketches), which
+    itself runs jobs (drift collects its grid counts), which
     ``explain_plans`` leaves out."""
 
     name: str
@@ -486,8 +486,8 @@ class ValidationRun:
         key set, which does read the table). A class fused into the
         rows projection shows inside the ``rows`` plan. Omitted: no-op
         classes (no extraction template, no cardinality bounds, no
-        baseline), drift (a driver-side sketch compare), and every
-        class after a failing schema gate."""
+        baseline), drift (a driver-side compare of collected counts),
+        and every class after a failing schema gate."""
         p = self._pass()
         self._walk(
             p, df, default_partition_expr(df), self._classes(), act=False

@@ -1,20 +1,18 @@
 """Streaming distribution drift (Structured Streaming).
 
-Extends the batch drift check (`operators/drift.py` — t-digest
-sketches vs a baseline snapshot) to continuous ingest: each event-time
+Extends the batch drift check (`operators/drift.py` — exact counts
+against a baseline quantile grid) to continuous ingest: each event-time
 window's value distribution is histogrammed against the BASELINE
 QUANTILE GRID (the same 101-point grid `build_baseline` materializes),
 so a window that matches the baseline puts ~1/nbins of its mass in
 every bucket and PSI ≈ 0; a shifted window concentrates mass and PSI
 spikes.
 
-Why not t-digests in the stream: a digest per window would need a
-custom stateful merge (applyInPandasWithState with binary state) for
-strictly worse accuracy here — against a FIXED baseline grid, exact
-bucket counts ARE the sufficient statistic for PSI, and they fold into
-Spark's native windowed aggregation with watermark-bounded state and
-map-side combine. The stream stays one stateless projection + ONE
-windowed count aggregation (update/append safe); the tiny PSI
+Against a FIXED baseline grid, exact bucket counts ARE the sufficient
+statistic for PSI (the batch check makes the same argument), and they
+fold into Spark's native windowed aggregation with watermark-bounded
+state and map-side combine. The stream stays one stateless projection
++ ONE windowed count aggregation (update/append safe); the tiny PSI
 finalization runs as a batch query over the sink table, which is also
 where a replay/backfill would recompute it.
 

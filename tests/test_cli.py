@@ -9,12 +9,15 @@ import io
 import json
 
 import pytest
+from pyspark.sql import functions as F
 
 from py_schemax_spark.cli import accept_paths_from_stdin, build_parser, main
 from py_schemax_spark.config import resolve_config
+from py_schemax_spark.operators.drift import build_baseline
 from py_schemax_spark.output import Output
 from py_schemax_spark.runner import RunConfig, ValidationRun
 from py_schemax_spark.sources.datagen import gen_pages, write_pages
+from py_schemax_spark.specs.loader import validate_spec_dict
 
 SPEC_YAML = """\
 fqn: warehouse.pages
@@ -421,3 +424,42 @@ def test_validate_explain_reports_failing_schema_gate(
     captured = capsys.readouterr()
     assert "==" not in captured.out
     assert "schema" in captured.err and "day" in captured.err
+
+
+def _no_constants(token):
+    raise ValueError(f"non-JSON constant {token}")
+
+
+def test_empty_drift_side_writes_strict_json(spark, tmp_path, capsys):
+    """A drift column with no non-null current value is an error
+    verdict (``psi = ks = None``, drifted), not ``NaN``: the summary
+    file and the verbose JSON drift line parse as strict JSON."""
+    doc = {"fqn": "t", "key": "id",
+           "columns": [{"name": "id", "type": "integer"},
+                       {"name": "x", "type": "float", "drift": {}}]}
+    spec = tmp_path / "spec.json"
+    spec.write_text(json.dumps(doc))
+    table, baseline = str(tmp_path / "t"), str(tmp_path / "baseline")
+    spark.createDataFrame(
+        [(i, None) for i in range(20)], "id bigint, x double"
+    ).write.parquet(table)
+    build_baseline(
+        spark.range(100).withColumn("x", F.col("id").cast("double")),
+        validate_spec_dict(doc).spec,
+    ).write.parquet(baseline)
+    out = tmp_path / "out"
+    code = _main(
+        spark,
+        ["validate", table, "--spec", str(spec), "--baseline", baseline,
+         "--check", "schema,rows,drift", "--output-dir", str(out),
+         "--output-format", "json", "--output-level", "verbose"],
+    )
+    assert code == 1
+    summary = json.loads((out / "summary_0.json").read_text(),
+                         parse_constant=_no_constants)
+    (verdict,) = summary["drift"]
+    assert verdict["psi"] is None and verdict["ks"] is None
+    assert verdict["drifted"] and verdict["error"]
+    lines = [json.loads(ln, parse_constant=_no_constants)
+             for ln in capsys.readouterr().out.splitlines() if ln.strip()]
+    assert [ln["column"] for ln in lines if ln["kind"] == "drift"] == ["x"]

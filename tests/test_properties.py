@@ -1,151 +1,65 @@
 """Property-based tests (hypothesis) — no Spark session needed.
 
-The reference uses none (SURVEY.md §5); added here because the two
-pure-Python components (t-digest, spec loader) have algebraic
-contracts that example tests under-cover: quantile bounds, merge ≈
-single-shot, serialization faithfulness, loader never-raises."""
+The reference uses none (SURVEY.md §5); added here because the
+pure-Python components (drift statistics, spec loader, sketch merges)
+have algebraic contracts that example tests under-cover: statistic
+bounds, zero on identical data, monotone fractions, loader
+never-raises."""
 
 from __future__ import annotations
 
 import numpy as np
 from hypothesis import example, given, settings, strategies as st
 
-from py_schemax_spark.functions.tdigest import TDigest, merge_all
+from py_schemax_spark.operators.drift import drift_statistics, psi_buckets
 from py_schemax_spark.specs.loader import validate_spec_dict
+from test_drift import exact_grid, grid_counts
 
 finite = st.floats(
     allow_nan=False, allow_infinity=False, min_value=-1e12, max_value=1e12
 )
 
 
-@settings(max_examples=50, deadline=None)
-@given(st.lists(finite, min_size=1, max_size=2000))
-def test_tdigest_quantiles_within_data_range(values):
-    td = TDigest(100)
-    td.add(np.array(values))
-    lo, hi = min(values), max(values)
-    for q in (0.0, 0.25, 0.5, 0.75, 1.0):
-        est = td.quantile(q)
-        assert lo - 1e-9 <= est <= hi + 1e-9
-
-
-@settings(max_examples=50, deadline=None)
-@given(st.lists(finite, min_size=1, max_size=2000))
-def test_tdigest_total_weight_preserved(values):
-    td = TDigest(100)
-    td.add(np.array(values))
-    assert abs(td.total_weight - len(values)) < 1e-6
-
-
-@settings(max_examples=30, deadline=None)
-@given(
-    st.lists(finite, min_size=10, max_size=1000),
-    st.integers(min_value=2, max_value=7),
+#: finite values with many ties: small integers mixed with any float
+tied = st.lists(
+    st.one_of(st.integers(-3, 3).map(float), finite), min_size=1, max_size=300
 )
-def test_tdigest_merge_close_to_single(values, n_parts):
-    arr = np.array(values)
-    single = TDigest(200)
-    single.add(arr)
-    parts = []
-    for chunk in np.array_split(arr, n_parts):
-        t = TDigest(200)
-        t.add(chunk)
-        parts.append(t)
-    merged = merge_all(parts)
-    spread = (max(values) - min(values)) or 1.0
-    for q in (0.1, 0.5, 0.9):
-        assert abs(merged.quantile(q) - single.quantile(q)) <= 0.15 * spread
 
 
-@settings(max_examples=50, deadline=None)
-@given(st.lists(finite, min_size=1, max_size=500))
-def test_tdigest_serialization_faithful(values):
-    td = TDigest(100)
-    td.add(np.array(values))
-    rt = TDigest.from_bytes(td.to_bytes())
-    qs = np.linspace(0, 1, 11)
-    assert np.allclose(rt.quantiles(qs), td.quantiles(qs))
+@settings(max_examples=100, deadline=None)
+@given(tied, tied)
+def test_drift_statistics_bounded(base, cur):
+    grid = exact_grid(base)
+    psi, ks = drift_statistics(grid, *grid_counts(cur, grid))
+    assert 0.0 <= ks <= 1.0
+    assert psi >= 0.0
 
 
-@settings(max_examples=50, deadline=None)
-@given(
-    st.lists(finite, min_size=1, max_size=500),
-    st.lists(finite, min_size=1, max_size=500),
-)
-@example(
-    a=[0.0],
-    b=[0.0,
-     0.0,
-     0.0,
-     0.0,
-     0.0,
-     0.0,
-     0.0,
-     0.0,
-     0.0,
-     0.0,
-     0.0,
-     0.0,
-     0.0,
-     0.0,
-     0.0,
-     0.0,
-     0.0,
-     0.0,
-     0.0,
-     0.0,
-     0.0,
-     0.0,
-     0.0,
-     0.0,
-     0.0,
-     0.0,
-     0.0,
-     0.0,
-     0.0,
-     0.0,
-     0.0,
-     0.0,
-     0.0,
-     0.0,
-     1.0,
-     1.0,
-     1.0,
-     1.0,
-     1.0,
-     1.0,
-     1.0,
-     1.0,
-     1.0,
-     1.0,
-     1.0,
-     1.0,
-     1.0,
-     1.0,
-     1.0,
-     1.0,
-     1.0,
-     1.0,
-     1.0,
-     1.0,
-     1.0,
-     1.0,
-     1.0,
-     1.0,
-     1.0,
-     1.0,
-     1.0,
-     2.2250738585e-313,
-     2.225073858507e-311],
-).via('discovered failure')
-def test_tdigest_cdf_monotone_after_merge(a, b):
-    ta, tb = TDigest(100), TDigest(100)
-    ta.add(np.array(a))
-    tb.add(np.array(b))
-    merged = ta.merge(tb)
-    xs = np.sort(np.array(a + b))
-    cdf = merged.cdf(xs)
-    assert (np.diff(cdf) >= -1e-12).all()
+@settings(max_examples=100, deadline=None)
+@given(tied)
+def test_drift_statistics_zero_on_identical_data(values):
+    """KS is exactly 0. PSI is near 0 only: the baseline side reads its
+    fraction below an edge off the grid, which is up to one grid step
+    (0.01) above the exact fraction."""
+    grid = exact_grid(values)
+    psi, ks = drift_statistics(grid, *grid_counts(values, grid))
+    assert ks == 0.0
+    assert psi < 0.05
+
+
+@settings(max_examples=100, deadline=None)
+@given(tied, tied)
+def test_current_fractions_monotone_in_the_edge(base, cur):
+    """The current side's fraction below an edge never falls as the
+    edge rises: every bucket mass is >= 0 and they sum to 1, on both
+    sides."""
+    grid = exact_grid(base)
+    n, lt, le = grid_counts(cur, grid)
+    assert (np.diff(lt) >= 0).all() and (np.diff(le) >= 0).all()
+    assert (lt <= le).all()
+    for masses in psi_buckets(grid, n, lt):
+        assert (masses >= 0).all()
+        assert abs(masses.sum() - 1.0) < 1e-12
 
 
 # --- loader total-function property -----------------------------------------
