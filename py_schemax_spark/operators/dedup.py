@@ -28,6 +28,11 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
+from py_schemax_spark.operators.common import (
+    broadcast_gate,
+    check_passthrough_collisions,
+)
+
 
 def _norm_text(c) -> F.Column:
     """Normalization shared by every dedup flavor: lowercase, collapse
@@ -987,33 +992,23 @@ def dedup_clusters(
     broadcasts, so full corpus rows never enter an exchange; but at
     real crawl dup rates (30-50% of docs participate in a duplicate
     pair) the node set is corpus-scale and an unconditional broadcast
-    would OOM the driver/executors — so the broadcast is GATED on a
-    bounded ``limit(n+1)`` probe (the same strategy-selection probe as
-    ``referential._exceeds``), falling back to a plain shuffle join
-    above ``max_broadcast_components`` rows (~16 B/row of long pairs →
-    the 2M default is ~32 MB in-broadcast). ``passthrough=True``
+    would OOM the driver/executors — so the broadcast goes through
+    ``broadcast_gate``, falling back to a plain shuffle join above
+    ``max_broadcast_components`` rows (~16 B/row of long pairs → the
+    2M default is ~32 MB in-broadcast). ``passthrough=True``
     carries every input column (shuffle-free only on the broadcast
     path)."""
     if passthrough:
-        from py_schemax_spark.operators.common import (
-            check_passthrough_collisions,
-        )
-
         check_passthrough_collisions(
             df, ["cluster_id", "is_survivor", "component"],
             "dedup_clusters",
         )
-    from py_schemax_spark.operators.referential import _exceeds
-
     comp = connected_components(pairs, src=src, dst=dst)
     # .withColumnRenamed / F.broadcast return NEW DataFrame objects:
     # capture the persisted-intermediates registry before wrapping
     comp_persisted = getattr(comp, "_schemax_persisted", [])
     comp = comp.withColumnRenamed("node", key_col)
-    # comp derives from localCheckpoint'ed labels, so the probe's
-    # re-evaluation is a cheap cached scan, not a CC re-run
-    if not _exceeds(comp, max_broadcast_components):
-        comp = F.broadcast(comp)
+    comp, _ = broadcast_gate(comp, max_broadcast_components, "components")
     base_cols = list(df.columns) if passthrough else [key_col]
     keyed = df.select(*[F.col(x) for x in base_cols])
     out = (

@@ -15,9 +15,9 @@ Scale shape:
   canonical set does.
 - The seen set also canonicalizes in its scan; a web-scale seen set
   is CORPUS-SCALE, so the anti-join is a plain shuffle join by
-  default — broadcast only when the bounded `_exceeds` probe says
-  the seen set is genuinely small (the `referential` idiom; never an
-  unconditional broadcast — the round-3 `dedup_clusters` lesson).
+  default — broadcast only when `broadcast_gate` finds the seen set
+  genuinely small (never an unconditional broadcast — the round-3
+  `dedup_clusters` lesson).
 - Downstream policy (robots, blocklists, per-domain caps) composes
   as further operators on the output: ``apply_robots``,
   ``block_urls``, ``cap_per_group``.
@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from py_schemax_spark.functions.urls import canonicalize_url
-from py_schemax_spark.operators.referential import _exceeds
+from py_schemax_spark.operators.common import broadcast_gate
 
 
 def build_frontier(
@@ -63,6 +63,5 @@ def build_frontier(
         .filter(F.col("url").isNotNull() & (F.col("url") != ""))
         .distinct()
     )
-    if not _exceeds(seen_c, max_seen_broadcast_rows):
-        seen_c = F.broadcast(seen_c)
+    seen_c, _ = broadcast_gate(seen_c, max_seen_broadcast_rows, "seen")
     return cand.join(seen_c, "url", "left_anti")

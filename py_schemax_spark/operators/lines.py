@@ -26,8 +26,8 @@ Scale shape:
   moves far fewer rows than the explode emits);
 - the hot-line set (lines with count ≥ min_docs — small by
   construction: at most total_lines / min_docs) broadcasts into the
-  tagging join; a bounded ``limit(n+1)`` probe falls back to a plain
-  shuffle join if a pathological corpus makes it large;
+  tagging join; ``broadcast_gate`` falls back to a plain shuffle join
+  if a pathological corpus makes it large;
 - one doc-granular shuffle reassembles surviving lines
   (``collect_list`` of (pos, line) structs → ``array_sort`` →
   projection). Per-doc line counts are small, so the post-agg HOF
@@ -36,10 +36,15 @@ Scale shape:
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from py_schemax_spark.operators.referential import _exceeds
+from py_schemax_spark.operators.common import (
+    broadcast_gate,
+    check_passthrough_collisions,
+)
+from py_schemax_spark.operators.dedup import _track_persisted
 
 
 def boilerplate_lines(
@@ -80,15 +85,13 @@ def remove_boilerplate(
     null for null input text. ``n_lines``/``n_removed`` count the
     document's total and removed lines.
 
-    The hot-line set broadcasts when a bounded probe says it fits
+    The hot-line set broadcasts when ``broadcast_gate`` finds it fits
     (≤ ``max_broadcast_lines``); otherwise the tag join runs as a
     plain shuffle join on the line string (the CCNet sharded-hash
     shape).
     """
-    # the hot set feeds the probe AND the tag join — persist so the
-    # line-counting aggregation runs once
-    from pyspark import StorageLevel
-
+    # above the cap the tag join re-reads the hot set — persist so
+    # the line-counting aggregation runs once
     hot_p = (
         boilerplate_lines(
             df, text_col=text_col, key_col=key_col, min_docs=min_docs
@@ -97,7 +100,7 @@ def remove_boilerplate(
         .withColumn("_hot", F.lit(1))
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    hot = hot_p if _exceeds(hot_p, max_broadcast_lines) else F.broadcast(hot_p)
+    hot, _ = broadcast_gate(hot_p, max_broadcast_lines, "boilerplate")
 
     ln = df.select(
         F.col(key_col).alias("_k"),
@@ -125,10 +128,6 @@ def remove_boilerplate(
         ).alias("_clean"),
     )
     if passthrough:
-        from py_schemax_spark.operators.common import (
-            check_passthrough_collisions,
-        )
-
         check_passthrough_collisions(
             df,
             ["clean_text", "n_lines", "n_removed", "_has_text", "_k",
@@ -154,6 +153,4 @@ def remove_boilerplate(
         F.coalesce("n_lines", F.lit(0)).alias("n_lines"),
         F.coalesce("n_removed", F.lit(0)).alias("n_removed"),
     )
-    from py_schemax_spark.operators.dedup import _track_persisted
-
     return _track_persisted(result, [hot_p])

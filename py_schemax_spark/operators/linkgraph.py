@@ -326,16 +326,16 @@ def personalized_pagerank(
                    + (damping_bp * inc(node)) div 10000
 
     Seed membership joins onto the node table ONCE before the loop —
-    broadcast when the seed list is small (bounded `_exceeds` probe,
-    the `referential` idiom; trusted-seed lists are typically 10^2-
-    10^5 domains), plain shuffle join otherwise. Per-iteration plan
+    broadcast when the seed list is small (`broadcast_gate`;
+    trusted-seed lists are typically 10^2-10^5 domains), plain
+    shuffle join otherwise. Per-iteration plan
     shape is identical to `pagerank` (rank table is the only thing
     that shuffles; previous round's checkpoint blocks released as
     soon as the next materializes).
     """
     if iters < 1:
         raise ValueError("personalized_pagerank: iters must be >= 1")
-    from .referential import _exceeds
+    from .common import broadcast_gate
 
     src, dst = F.col(src_col), F.col(dst_col)
     e = (
@@ -354,8 +354,9 @@ def personalized_pagerank(
     seed_flags = seeds.select(
         F.col(seed_col).alias("node"), F.lit(True).alias("_seed")
     ).distinct()
-    if not _exceeds(seed_flags, max_seed_broadcast_rows):
-        seed_flags = F.broadcast(seed_flags)
+    seed_flags, _ = broadcast_gate(
+        seed_flags, max_seed_broadcast_rows, "seeds"
+    )
     nodes = (
         e.select(F.col("src").alias("node"))
         .union(e.select(F.col("dst").alias("node")))

@@ -40,6 +40,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from py_schemax_spark.operators.chunking import NON_WS_RUN
+from py_schemax_spark.operators.common import check_passthrough_collisions
 
 
 def grouped_exclusive_cumsum(
@@ -131,10 +132,6 @@ def sample_to_token_budget(
     if default_budget < 0:
         raise ValueError(f"negative default_budget: {default_budget}")
     if passthrough:
-        from py_schemax_spark.operators.common import (
-            check_passthrough_collisions,
-        )
-
         check_passthrough_collisions(
             df,
             ["n_tokens", "cum_before", "kept", "_grp", "_h", "_pid",
@@ -227,10 +224,6 @@ def perplexity_buckets(
             "cast(round(score * 10000) as bigint)"
         )
     if passthrough:
-        from py_schemax_spark.operators.common import (
-            check_passthrough_collisions,
-        )
-
         check_passthrough_collisions(
             df,
             ["n_tokens", "cum_before", "bucket_id", "bucket", "_grp",

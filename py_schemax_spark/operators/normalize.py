@@ -48,6 +48,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.functions import pandas_udf
 
+from py_schemax_spark.operators.common import check_passthrough_collisions
+
 # shared with the SQL oracle (RE2 and Java regex read these the same:
 # two-digit hex escapes, explicit classes, \A/\z anchors)
 CTRL_RE = r"[\x00-\x08\x0B\x0C\x0E-\x1F\x7F]"
@@ -90,10 +92,6 @@ def normalize_text(
     null text); ``changed`` is false for null text. ``passthrough``
     carries every input column through (still one projection)."""
     if passthrough:
-        from py_schemax_spark.operators.common import (
-            check_passthrough_collisions,
-        )
-
         check_passthrough_collisions(
             df,
             ["norm_text", "n_raw", "n_norm", "changed"],

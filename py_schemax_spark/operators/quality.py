@@ -32,6 +32,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from py_schemax_spark.operators.chunking import NON_WS_RUN, WS_CLASS
+from py_schemax_spark.operators.common import check_passthrough_collisions
 
 # --- shared lookaround-free patterns (imported by the SQL oracle) ----
 # the token contract lives in chunking (one definition repo-wide);
@@ -131,10 +132,6 @@ def gopher_profile(
     # per-word sum, in 1 regex scan instead of len(stop set) scans
     stop_pat = " (" + "|".join(GOPHER_STOPWORDS) + ") "
     if passthrough:
-        from py_schemax_spark.operators.common import (
-            check_passthrough_collisions,
-        )
-
         check_passthrough_collisions(
             df,
             ["n_words", "mean_word_len_x100", "symbol_bp", "n_lines",
@@ -239,10 +236,6 @@ def c4_profile(
         h = lc.contains(p)
         bad = h if bad is None else bad | h
     if passthrough:
-        from py_schemax_spark.operators.common import (
-            check_passthrough_collisions,
-        )
-
         check_passthrough_collisions(
             df,
             ["n_sentences", "terminal_line_bp", "has_lorem_ipsum",

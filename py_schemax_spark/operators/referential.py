@@ -22,9 +22,9 @@ Scale shape, two regimes:
   the violating rows in place. If even the invalid set exceeds the
   broadcast ceiling (the data is garbage wholesale) the tag join
   degrades to a plain shuffle semi-join, which is then genuinely
-  unavoidable. Strategy choice uses a bounded ``limit(n+1)`` probe on
-  the dim — never a full count (same rule as
-  ``similarity.all_pairs_above_np``).
+  unavoidable. Both strategy choices go through
+  ``common.broadcast_gate`` — one bounded materialization, never a
+  full count.
 
 Nulls are excluded (they are the ``nullable`` constraint's job),
 mirroring how the reference reports missing-field and bad-type
@@ -36,15 +36,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from py_schemax_spark.operators.common import broadcast_gate
 from py_schemax_spark.specs.model import TableSpec
 from py_schemax_spark.verdict import empty_violations
-
-
-def _exceeds(df: DataFrame, n: int) -> bool:
-    """Bounded "more than n rows?" probe — scans at most n+1 rows."""
-    if n <= 0:
-        return True
-    return df.limit(n + 1).count() > n
 
 
 def _large_dim_violation_rows(
@@ -72,11 +66,7 @@ def _large_dim_violation_rows(
     invalid = fact_vals.join(
         dim_keys, F.col("_v") == F.col("_dim_value"), "left_anti"
     ).persist(StorageLevel.MEMORY_AND_DISK)
-    build = (
-        F.broadcast(invalid)
-        if not _exceeds(invalid, max_invalid_broadcast_rows)
-        else invalid
-    )
+    build, _ = broadcast_gate(invalid, max_invalid_broadcast_rows, "invalid")
     return _track_persisted(
         fact.join(build, F.col(col_name) == F.col("_v"), "left_semi"),
         [invalid],
@@ -102,7 +92,7 @@ def referential_violations(
 
     ``max_broadcast_rows=None`` (default) keeps the historical
     behavior: every dim is broadcast unconditionally, zero probe jobs.
-    With a value set, each dim gets a bounded ``limit(n+1)`` probe and
+    With a value set, each dim goes through ``broadcast_gate`` and
     dims above the ceiling take the distinct-keys path (module
     docstring) — pass ``0`` to force it (tests/benchmarks).
     """
@@ -130,17 +120,17 @@ def referential_violations(
         fact = df.select(key, cs.name, *pcol).filter(
             F.col(cs.name).isNotNull()
         )
-        if max_broadcast_rows is not None and _exceeds(
-            dim, max_broadcast_rows
-        ):
-            bad = _large_dim_violation_rows(
-                fact, cs.name, dim, max_invalid_broadcast_rows
+        if max_broadcast_rows is None:
+            build, small = F.broadcast(dim), True
+        else:
+            build, small = broadcast_gate(dim, max_broadcast_rows, ref.table)
+        if small:
+            bad = fact.join(
+                build, F.col(cs.name) == F.col("_dim_value"), "left_anti"
             )
         else:
-            bad = fact.join(
-                F.broadcast(dim),
-                F.col(cs.name) == F.col("_dim_value"),
-                "left_anti",
+            bad = _large_dim_violation_rows(
+                fact, cs.name, dim, max_invalid_broadcast_rows
             )
         parts.append(
             bad.select(

@@ -31,8 +31,8 @@ aggregations) happens on the ROBOTS table, which is domain-granular —
 a few 10^8 rows against a 10^12-doc corpus — and the per-domain line
 counts are robots-file-sized (bounded), so the windows never see a
 skewed partition. The corpus-side apply is ONE equi-join on the host
-(broadcast when the grouped rules table is small, plain shuffle join
-otherwise — the same bounded-probe gate as ``dedup_clusters``)
+(``broadcast_gate``: broadcast when the grouped rules table is small,
+plain shuffle join otherwise)
 followed by pure higher-order-function expressions; the corpus is
 never exploded per rule and never shuffled in the broadcast regime.
 """
@@ -43,7 +43,10 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from py_schemax_spark.functions.urls import url_host, url_path
-from py_schemax_spark.operators.referential import _exceeds
+from py_schemax_spark.operators.common import (
+    broadcast_gate,
+    check_passthrough_collisions,
+)
 
 _UA_RE = r"(?i)^\s*user-agent\s*:\s*(\S+)"
 _RULE_RE = r"(?i)^\s*(allow|disallow)\s*:\s*(\S*)"
@@ -155,20 +158,15 @@ def apply_robots(
     Longest-prefix-wins (Allow beats Disallow on a length tie) is an
     ``aggregate`` over the per-domain rule array — pure JVM
     expressions, no corpus explosion. The grouped rules table is
-    broadcast when small (bounded ``limit(n+1)`` probe), else the join
+    broadcast when small (``broadcast_gate``), else the join
     degrades to a plain shuffle equi-join on the host.
     """
     grouped = rules.groupBy("domain").agg(
         F.collect_list(F.struct("prefix", "is_allow")).alias("_rules")
     )
-    if not _exceeds(grouped, max_broadcast_domains):
-        grouped = F.broadcast(grouped)
+    grouped, _ = broadcast_gate(grouped, max_broadcast_domains, "robots")
 
     if passthrough:
-        from py_schemax_spark.operators.common import (
-            check_passthrough_collisions,
-        )
-
         check_passthrough_collisions(
             df,
             ["host", "path", "robots_blocked", "rule", "_rules", "_best",

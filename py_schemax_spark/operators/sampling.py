@@ -138,8 +138,8 @@ def cap_per_group(
     1. per-group counts (one map-side-combined aggregation over keys,
        output = distinct groups);
     2. the OVER-CAP group set — the Zipf head, tiny by construction —
-       broadcasts (bounded `_exceeds` probe, shuffle-join fallback
-       above ``max_broadcast_groups``);
+       broadcasts (`broadcast_gate`, shuffle-join fallback above
+       ``max_broadcast_groups``);
     3. rows of under-cap groups pass through via an anti-join against
        that set: NO sort, NO exchange of the corpus when broadcast;
     4. only over-cap rows are ranked, in two levels: a salted window
@@ -151,7 +151,7 @@ def cap_per_group(
     Null groups are one ordinary group (eqNullSafe joins — a plain
     column join would silently exempt them from the cap).
     """
-    from py_schemax_spark.operators.referential import _exceeds
+    from py_schemax_spark.operators.common import broadcast_gate
 
     if n < 1:
         raise ValueError("n must be >= 1")
@@ -162,8 +162,7 @@ def cap_per_group(
         F.count(F.lit(1)).alias("_c")
     )
     over = counts.filter(F.col("_c") > n).select("_g")
-    if not _exceeds(over, max_broadcast_groups):
-        over = F.broadcast(over)
+    over, _ = broadcast_gate(over, max_broadcast_groups, "over-cap groups")
     match = F.col(group_col).eqNullSafe(F.col("_g"))
     passthrough = df.join(over, match, "left_anti")
     hot = df.join(over, match, "left_semi")

@@ -36,8 +36,8 @@ from pyspark.sql import types as T
 # The top-k family collects/broadcasts the QUERY side (queries ≪
 # corpus by contract). The contract is enforced, not assumed: a
 # caller passing a corpus-sized query set gets a clear error from a
-# bounded probe (scans ≤ limit+1 rows, mirrors referential._exceeds)
-# instead of a driver OOM deep inside collect().
+# bounded probe (scans ≤ limit+1 rows) instead of a driver OOM deep
+# inside collect().
 _MAX_QUERY_ROWS = 100_000
 
 

@@ -12,6 +12,8 @@ import pandas as pd  # noqa: F401 — resolves pandas_udf type hints
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from py_schemax_spark.operators.common import check_passthrough_collisions
+
 # Small built-in stopword lists per language for the n-gram/stopword
 # language-ID heuristic (public common-word lists).
 _LANG_MARKERS: dict[str, list[str]] = {
@@ -329,10 +331,6 @@ def unigram_logprob_scores(
         return pd.Series(out, dtype="float64")
 
     if passthrough:
-        from py_schemax_spark.operators.common import (
-            check_passthrough_collisions,
-        )
-
         check_passthrough_collisions(
             df, ["n_tokens", "logprob"], "unigram_logprob_scores"
         )

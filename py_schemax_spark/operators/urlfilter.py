@@ -33,8 +33,8 @@ the deepest level down. Blocklist entries with more than
 (loudly — a silently ignored blocklist row is a curation hole).
 
 The blocklist must fit in a broadcast (domain lists are ≤ millions of
-rows against a 10^12-doc corpus); a bounded ``limit(n+1)`` probe
-raises if it does not.
+rows against a 10^12-doc corpus); ``broadcast_gate`` builds it once
+and ``block_urls`` raises if it does not fit.
 """
 
 from __future__ import annotations
@@ -43,7 +43,10 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from py_schemax_spark.functions.urls import url_host
-from py_schemax_spark.operators.referential import _exceeds
+from py_schemax_spark.operators.common import (
+    broadcast_gate,
+    check_passthrough_collisions,
+)
 
 
 def _suffix(labels: Column, i: int) -> Column:
@@ -83,6 +86,7 @@ def block_urls(
         .filter(F.col("domain").isNotNull() & (F.col("domain") != ""))
         .distinct()
     )
+    dom, small = broadcast_gate(dom, max_broadcast_domains, "blocklist")
     over = dom.filter(
         F.size(F.split("domain", r"\.")) > max_labels
     ).limit(1).collect()
@@ -92,7 +96,7 @@ def block_urls(
             f"max_labels={max_labels} labels and could never match — "
             "raise max_labels"
         )
-    if _exceeds(dom, max_broadcast_domains):
+    if not small:
         raise ValueError(
             f"blocklist exceeds max_broadcast_domains="
             f"{max_broadcast_domains}; domain lists are expected to "
@@ -100,10 +104,6 @@ def block_urls(
         )
 
     if passthrough:
-        from py_schemax_spark.operators.common import (
-            check_passthrough_collisions,
-        )
-
         check_passthrough_collisions(
             df,
             ["host", "blocked", "reason", "_labels"]
@@ -125,9 +125,8 @@ def block_urls(
     # deepest (most specific) suffix first: coalesce order = precedence
     for i in range(max_labels, 0, -1):
         alias = f"_m{i}"
-        lvl = dom.select(F.col("domain").alias(alias))
         out = out.join(
-            F.broadcast(lvl),
+            dom.select(F.col("domain").alias(alias)),
             _suffix(F.col("_labels"), i) == F.col(alias),
             "left",
         )

@@ -20,6 +20,8 @@ from pathlib import Path
 import pytest
 from pyspark.sql import functions as F
 
+from conftest import _last_execution_id, _plan_nodes
+
 from py_schemax_spark.checkpoint import LegacyCheckpointError
 from py_schemax_spark.cli import main
 from py_schemax_spark.operators.drift import build_baseline
@@ -96,47 +98,6 @@ def _cli(spark, inputs, out, *extra) -> tuple[int, list[dict]]:
 
 
 # --- SQL execution metrics ---------------------------------------------------
-
-
-def _seq(seq):
-    it = seq.iterator()
-    while it.hasNext():
-        yield it.next()
-
-
-def _sql_store(spark):
-    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty(30_000)
-    return spark._jsparkSession.sharedState().statusStore()
-
-
-def _last_execution_id(spark) -> int:
-    store = _sql_store(spark)
-    n = store.executionsCount()
-    return store.executionsList(n - 1, 1).head().executionId() if n else -1
-
-
-def _plan_nodes(spark, since: int) -> list[tuple[str, str, int]]:
-    """``(name, description, output rows)`` of every plan node in the
-    SQL executions after execution ``since``. A node this execution did
-    not run (e.g. the plan under a cached relation it only reads)
-    reports 0 rows."""
-    store = _sql_store(spark)
-    n = store.executionsCount()
-    out = []
-    for e in _seq(store.executionsList(max(0, n - 500), 500)):
-        eid = e.executionId()
-        if eid <= since:
-            continue
-        values = store.executionMetrics(eid)
-        for node in _seq(store.planGraph(eid).allNodes()):
-            rows = 0
-            for m in _seq(node.metrics()):
-                if m.name() == "number of output rows":
-                    v = values.get(m.accumulatorId())
-                    if v.isDefined():
-                        rows = int(v.get().replace(",", ""))
-            out.append((node.name(), node.desc(), rows))
-    return out
 
 
 def _html_scan_rows(nodes) -> list[int]:
