@@ -149,8 +149,6 @@ def build_parser() -> argparse.ArgumentParser:
                          "(default 1000000)")
     cu.add_argument("--min-line-docs", type=int, default=10)
     cu.add_argument("--jaccard-threshold", type=float, default=0.8)
-    cu.add_argument("--no-report", action="store_true",
-                    help="skip per-stage counting (fully lazy plan)")
     cu.add_argument("--json", dest="use_json", action="store_true")
     cu.add_argument("--master", default=None)
 
@@ -454,7 +452,6 @@ def curate_main(ns, spark=None) -> int:
             curated, rep = run_curation(
                 df, cfg, blocked_domains=blocked, robots_rules=rules_df,
                 dsir_target=dsir_target,
-                report=not ns.no_report
             )
         except ValueError as e:
             print(f"error: {e}", file=sys.stderr)
@@ -493,11 +490,9 @@ def curate_main(ns, spark=None) -> int:
             write_jsonl_shards(
                 sharded, str(out_dir / "shards"), mode="overwrite"
             )
-            n_shards = plan.select(
-                F.countDistinct("shard_id")
-            ).collect()[0][0]
             rep["shards"] = {
-                "n_shards": int(n_shards),
+                # one directory per shard: count them, not the plan
+                "n_shards": len(list((out_dir / "shards").glob("shard_id=*"))),
                 "budget": ns.shard_budget,
             }
         with open(out_dir / "report.json", "w") as f:

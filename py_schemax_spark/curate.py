@@ -26,16 +26,16 @@ Catalyst analysis goes super-linear on the nested plan (measured:
 a 7-stage pipeline over 10 rows spent ~9 minutes in the driver
 before truncation, ~40 s after). Checkpoint blocks are registered
 for release like every other operator intermediate. On a preemptible
-cluster swap in a reliable ``checkpoint()`` dir. Stage counts
-(``report=True``) are one ``count()`` per boundary over the
-checkpointed blocks; ``report=False`` skips only the counting.
+cluster swap in a reliable ``checkpoint()`` dir. Stage counts are
+``Observation``s that work already running delivers, so they cost no
+job; ``report=False`` only leaves the stage table empty.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 STAGES = (
@@ -152,23 +152,28 @@ def run_curation(
     pinned: list = []
     sc = df.sparkSession.sparkContext
 
-    cur = df
-    n_in = df.count() if report else None
+    def _observed(frame: DataFrame) -> tuple[DataFrame, Observation]:
+        obs = Observation()
+        return frame.observe(obs, F.count(F.lit(1)).alias("n")), obs
+
+    # the first stage's first job over its input delivers its `in`:
+    # every stage reads all of its input before any bounded probe
+    cur, n_in = _observed(df)
     last_handle: list = []
 
     def _record(stage: str, out_frame: DataFrame) -> DataFrame:
         """Truncate lineage at the stage boundary (eager
-        localCheckpoint — see module docstring) and count it when
-        reporting; blocks join the release registry."""
+        localCheckpoint — see module docstring), which delivers the
+        stage's `out`; blocks join the release registry."""
         nonlocal n_in
+        out_frame, n_out = _observed(out_frame)
         cp = out_frame.localCheckpoint()
         handle = _CheckpointHandle(sc, _checkpoint_rdd_ids(cp))
         pinned.append(handle)
         last_handle[:] = [handle]
         if report:
-            n_out = cp.count()
-            stats[stage] = {"in": n_in, "out": n_out}
-            n_in = n_out
+            stats[stage] = {"in": n_in.get["n"], "out": n_out.get["n"]}
+        n_in = n_out
         return cp
 
     in_cols = list(df.columns)
@@ -310,6 +315,10 @@ def run_curation(
             passthrough=True,
         )
         pinned.extend(getattr(mixed, "_schemax_persisted", []))
+        if not last_handle:
+            # mix first: its range partitioner's sampling job reads the
+            # input too; the passthrough frame has a row per input row
+            mixed, n_in = _observed(mixed)
         cur = _record(
             "mix", mixed.filter(F.col("kept")).select(*in_cols)
         )

@@ -403,11 +403,11 @@ class ValidationRun:
 
     def _finish(
         self, p: _Pass, df: DataFrame, part, sink: Optional[_Sink],
-        skipped: tuple = (),
+        skipped: tuple = (), all_rows: bool = False,
     ) -> RunResult:
         """Merge the pass's violations, write them to ``sink`` (or
         persist them), and summarize ``df``'s partitions from that one
-        materialization."""
+        materialization (every partition's row when ``all_rows``)."""
         violations = (
             merge_violations(*p.violations.values()) if p.violations
             else empty_violations(df, self.spec.key_column)
@@ -426,7 +426,7 @@ class ValidationRun:
         # (worst first), so a 10^6-partition table cannot flood it
         summary, run_summary = summarize_partitions(
             partition_summary(df, violations, part),
-            max_rows=self.config.max_summary_partitions,
+            max_rows=None if all_rows else self.config.max_summary_partitions,
         )
         return self._result(p, violations, summary, run_summary, skipped)
 
@@ -535,10 +535,12 @@ class ValidationRun:
         # mark_done re-runs that partition on resume — append would
         # then duplicate its rows, dynamic overwrite replaces exactly
         # the re-run partitions and leaves completed ones untouched.
+        # every fresh partition is marked done (the manifest is driver-
+        # resident anyway); the display keeps the worst of them
         res = self._finish(p, remaining_df, part, _Sink(
             manifest.violations_dir, partitioned=True,
             exclude_parts=frozenset(done),
-        ))
+        ), all_rows=True)
         manifest.mark_done_many({
             str(r["part"]): {
                 "row_count": r["row_count"],
@@ -547,6 +549,10 @@ class ValidationRun:
             }
             for r in res.summary_rows
         })
+        shown = sorted(  # stable: ties stay in partition order
+            res.summary_rows, key=lambda r: (r["valid"], -r["violation_count"])
+        )[:cfg.max_summary_partitions]
+        shown.sort(key=lambda r: str(r["part"]))
 
         # global classes run over the FULL table every attempt
         p.violations.clear()
@@ -588,9 +594,8 @@ class ValidationRun:
         # global-check violations count for the table, not a partition
         run_summary.table_violations = n_global
         run_summary.total_violations += n_global
-        return self._result(
-            p, all_violations, list(res.summary_rows), run_summary, done
-        )
+        run_summary.suppressed_parts = len(res.summary_rows) - len(shown)
+        return self._result(p, all_violations, shown, run_summary, done)
 
     def stats(self, df: DataFrame, exact_distinct: bool = False) -> DataFrame:
         return column_stats(

@@ -151,7 +151,7 @@ class RunSummary:
 
 
 def summarize_partitions(
-    summary_df: DataFrame, max_rows: int = 10_000
+    summary_df: DataFrame, max_rows: int | None = 10_000
 ) -> tuple[list, "RunSummary"]:
     """Bounded driver materialization of the per-partition summary.
 
@@ -170,7 +170,8 @@ def summarize_partitions(
       silently truncating.
 
     Returns ``(rows_for_display, run_summary)``; rows are re-sorted by
-    partition value for stable display.
+    partition value for stable display. ``max_rows=None`` collects
+    every row (a checkpointed run records each one in its manifest).
     """
     from pyspark import StorageLevel
 
@@ -192,14 +193,10 @@ def summarize_partitions(
         ).collect()[0]
         n_parts = int(tot["parts"] or 0)
         n_valid = int(tot["valid_parts"] or 0)
-        rows = (
-            summary_df.filter(~is_table)
-            .orderBy(
-                F.asc("valid"), F.desc("violation_count"), F.asc("part")
-            )
-            .limit(max_rows)
-            .collect()
+        rows = summary_df.filter(~is_table).orderBy(
+            F.asc("valid"), F.desc("violation_count"), F.asc("part")
         )
+        rows = (rows if max_rows is None else rows.limit(max_rows)).collect()
     finally:
         summary_df.unpersist()
     rows.sort(key=lambda r: str(r["part"]))

@@ -2,7 +2,7 @@ import json
 
 import pytest
 
-from py_schemax_spark.curate import CurationConfig, run_curation
+from py_schemax_spark.curate import STAGES, CurationConfig, run_curation
 
 def _text(i: int) -> str:
     """A gopher/c4-passing document UNIQUE to doc ``i`` — every doc is
@@ -230,6 +230,9 @@ def test_curate_cli_export_shards(spark, tmp_path):
     curated = spark.read.parquet(out + "/curated")
     shards = spark.read.json(out + "/shards")
     assert shards.count() == curated.count()
+    assert rep["shards"]["n_shards"] == (
+        shards.select("shard_id").distinct().count()
+    )
     # every curated column survives into the shard rows, plus the plan
     for c in curated.columns:
         assert c in shards.columns
@@ -282,3 +285,72 @@ def test_curation_dsir_skipped_implicitly_without_target(spark):
         df, CurationConfig(steps=None, default_budget=10**9)
     )
     assert "dsir" not in rep["stages"]
+
+
+def _stage_inputs(spark):
+    from py_schemax_spark.operators.robots import parse_robots
+
+    robots = spark.createDataFrame(
+        [("good.example.org", "User-agent: *\nDisallow: /c\n")],
+        "domain string, robots_txt string",
+    )
+    return dict(
+        blocked_domains=spark.createDataFrame(
+            [("bad.site",)], "domain string"
+        ),
+        robots_rules=parse_robots(robots),
+        dsir_target=_corpus(spark).filter("doc_id in (0, 1)"),
+    )
+
+
+def _stage_config(**kw):
+    return CurationConfig(
+        url_col="url", min_line_docs=3, budgets={"en": 10**9},
+        dsir_buckets=512, **kw,
+    )
+
+
+@pytest.mark.parametrize("stage", STAGES)
+def test_stage_counts_are_observed_exactly(spark, stage):
+    """Each stage alone, as the first stage: the observed ``in`` is the
+    input's row count, including the stages whose plans read their
+    input more than once, and ``out`` the returned frame's."""
+    from py_schemax_spark.operators.dedup import release_all_intermediates
+
+    df = _corpus(spark)
+    out, rep = run_curation(
+        df, _stage_config(steps=(stage,)), **_stage_inputs(spark)
+    )
+    assert rep["stages"][stage] == {"in": df.count(), "out": out.count()}
+    release_all_intermediates()
+
+
+def test_stage_counts_run_no_job(spark):
+    """Reporting is free: the stage counts come with the work the
+    pipeline runs anyway, so ``report=True`` runs no more Spark jobs
+    than ``report=False`` on the same input. AQE is off here: its
+    run-time re-planning makes the job count vary by one with load."""
+    from py_schemax_spark.operators.dedup import release_all_intermediates
+
+    sc = spark.sparkContext
+
+    def jobs(report):
+        group = f"curate-report-{report}"
+        sc.setJobGroup(group, group)
+        try:
+            run_curation(
+                _corpus(spark), _stage_config(), report=report,
+                **_stage_inputs(spark),
+            )
+            release_all_intermediates()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        with_counts, without = jobs(True), jobs(False)
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    assert 0 < with_counts <= without

@@ -43,6 +43,8 @@ def _run(spark, df, spec, dims, baseline=None, ck=None, **cfg):
         assert res.run_summary.valid == plain.run_summary.valid
         assert (res.run_summary.total_violations
                 == plain.run_summary.total_violations)
+        assert (res.run_summary.suppressed_parts
+                == plain.run_summary.suppressed_parts)
         assert _multiset(res.violations) == _multiset(plain.violations)
     return plain
 
@@ -292,7 +294,9 @@ def test_explain_shows_fused_classes_inside_rows(
         assert "ArrowEvalPython" not in plan
 
 
-def test_summary_collect_bounded_at_high_partition_count(spark, pages_spec, lang_dim):
+def test_summary_collect_bounded_at_high_partition_count(
+    spark, pages_spec, lang_dim, tmp_path
+):
     """A table with many partitions must not flood the driver: at most
     `max_summary_partitions` per-partition rows are collected (worst
     first, so every surfaced row is a FAILING partition here), the
@@ -306,7 +310,8 @@ def test_summary_collect_bounded_at_high_partition_count(spark, pages_spec, lang
                "AS INT) % 600, warc_ts)"),
     )
     dims = {"lang_dim": lang_dim}
-    bounded = _run(spark, df, pages_spec, dims, max_summary_partitions=50)
+    bounded = _run(spark, df, pages_spec, dims, ck=tmp_path / "bounded",
+                   max_summary_partitions=50)
     full = _run(spark, df, pages_spec, dims)
 
     assert len(bounded.summary_rows) == 50
