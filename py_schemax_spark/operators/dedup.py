@@ -447,12 +447,13 @@ def ngram_jaccard_pairs(
 ) -> DataFrame:
     """Verification stage: exact n-gram Jaccard on candidate pairs.
     ``candidates`` = (key_a, key_b); joins the shingle sets back (two
-    co-partitioned joins) and computes |∩|/|∪| via array ops.
+    co-partitioned joins) and computes |∩|/|∪| with no array union.
 
     Shingle sets are numpy shingle CODES (same universe as minhash —
-    ``shingle_codes_udf``); the intersect/union runs JVM-side over the
+    ``shingle_codes_udf``); the intersection runs JVM-side over the
     materialized arrays (plain codegen'd expressions over attribute
-    references — no interpreted HOF re-evaluation).
+    references — no interpreted HOF re-evaluation). The codes are
+    distinct (``np.unique``), so |∪| = |a| + |b| − |∩|.
 
     ``prune_to_candidates`` (default on) semi-joins ``df`` down to the
     docs that actually appear in ``candidates`` BEFORE the shingle UDF
@@ -495,7 +496,7 @@ def ngram_jaccard_pairs(
     a = sh.select(F.col("k").alias("key_a"), F.col("sh").alias("sh_a"))
     b = sh.select(F.col("k").alias("key_b"), F.col("sh").alias("sh_b"))
     inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size(F.array_union("sh_a", "sh_b"))
+    union = F.size("sh_a") + F.size("sh_b") - inter
     return _track_persisted(
         candidates.join(a, "key_a")
         .join(b, "key_b")

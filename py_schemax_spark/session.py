@@ -3,7 +3,9 @@
 Local testing runs single-JVM (``local[N]``); the configs below are the
 ones that also matter on a real cluster: AQE (runtime coalesce + skew
 splitting), Arrow for every pandas-UDF boundary, UTC session timezone
-so timestamp semantics are deployment-independent.
+so timestamp semantics are deployment-independent. The codegen cache
+holds 1000 classes, not Spark's 100: a curate journey generates 233
+(validate 72), so at 100 the LRU evicts each before the next journey.
 """
 
 from __future__ import annotations
@@ -39,6 +41,7 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         .config("spark.sql.debug.maxToStringFields", "2000")
     )
     for k, v in (extra_conf or {}).items():

@@ -354,3 +354,26 @@ def test_stage_counts_run_no_job(spark):
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", aqe)
     assert 0 < with_counts <= without
+
+
+def test_repeated_curation_compiles_nothing_new(spark):
+    """Every class a curation generates stays in the session's codegen
+    cache, so running the same curation again compiles (almost) nothing.
+    With Spark's default 100-entry cache the second run recompiles
+    ~150 of its classes."""
+    from py_schemax_spark.operators.dedup import release_all_intermediates
+
+    compiles = (spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+                .METRIC_COMPILATION_TIME())
+
+    def run():
+        curated, _ = run_curation(
+            _corpus(spark), CurationConfig(default_budget=10**9)
+        )
+        curated.write.format("noop").mode("overwrite").save()
+        release_all_intermediates()
+
+    run()
+    before = compiles.getCount()
+    run()
+    assert compiles.getCount() - before <= 20

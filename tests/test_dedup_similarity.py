@@ -93,6 +93,46 @@ def test_ngram_jaccard_prune_matches_unpruned(corpus):
     assert as_set(pruned) == as_set(full) and pruned.count() > 0
 
 
+def test_ngram_jaccard_exact_set_sizes(spark, corpus):
+    """``n_inter``/``n_union`` are the exact sizes of the intersection
+    and union of the two docs' shingle code arrays, also for multibyte
+    text, text shorter than the shingle window and empty text."""
+    from py_schemax_spark.operators.dedup import _norm_text, shingle_codes_udf
+
+    extra = spark.createDataFrame(
+        [(7, "the naïve café piñata résumé"), (8, "ab"), (9, "")],
+        "doc_id long, text string",
+    )
+    docs = corpus.unionByName(extra)
+    ids = [r["doc_id"] for r in docs.select("doc_id").collect()]
+    cand = spark.createDataFrame(
+        [(a, b) for a in ids for b in ids if a < b], "key_a long, key_b long"
+    )
+    got = {
+        (r["key_a"], r["key_b"]): (r["n_inter"], r["n_union"])
+        for r in ngram_jaccard_pairs(
+            docs, cand, key_col="doc_id", threshold=0.0
+        ).collect()
+    }
+
+    sh = docs.select(
+        F.col("doc_id").alias("k"),
+        shingle_codes_udf(5)(_norm_text(F.col("text"))).alias("sh"),
+    )
+    a = sh.select(F.col("k").alias("key_a"), F.col("sh").alias("sh_a"))
+    b = sh.select(F.col("k").alias("key_b"), F.col("sh").alias("sh_b"))
+    want = {
+        (r[0], r[1]): (r[2], r[3])
+        for r in cand.join(a, "key_a").join(b, "key_b").select(
+            "key_a", "key_b",
+            F.size(F.array_intersect("sh_a", "sh_b")),
+            F.size(F.array_union("sh_a", "sh_b")),
+        ).collect()
+    }
+    assert len(got) == len(ids) * (len(ids) - 1) // 2
+    assert got == want
+
+
 def test_simhash_properties(spark, corpus):
     fps = {
         r["doc_id"]: (r["hex"], r["bits"])
