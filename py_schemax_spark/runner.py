@@ -60,7 +60,7 @@ from dataclasses import dataclass, field
 from typing import Callable, Optional
 
 from pyspark import StorageLevel
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
@@ -282,7 +282,7 @@ class RunConfig:
     dim_broadcast_limit: Optional[int] = None
     # per-partition summary rows materialized on the driver are capped
     # at this many (worst partitions first); run totals stay exact via
-    # a single-row aggregate (verdict.summarize_partitions)
+    # an Observation on the same collect (verdict.summarize_partitions)
     max_summary_partitions: int = 10_000
 
     def __post_init__(self) -> None:
@@ -560,18 +560,21 @@ class ValidationRun:
 
         # final verdict = persisted (done ∪ fresh) local violations ∪
         # global violations, each global class executed once: in the
-        # sink write, or into one cached frame the count and the
-        # union both read
+        # sink write, whose job also delivers the global count, or
+        # into one cached frame the count and the union both read
         local_v = _Sink(manifest.violations_dir, partitioned=True).read(
             self.spark, res.violations.schema
         )
+        gv = merge_violations(*p.violations.values()) if p.violations else None
         if sink is not None:
-            sink.write(merge_violations(local_v, *p.violations.values()))
+            if gv is not None:
+                n_obs = Observation()
+                gv = gv.observe(n_obs, F.count(F.lit(1)).alias("n"))
+            sink.write(merge_violations(local_v, gv))
             all_violations = sink.read(self.spark, local_v.schema)
-            n_global = all_violations.count() - local_v.count()
+            n_global = n_obs.get["n"] if gv is not None else 0
             p.unpersist()
-        elif p.violations:
-            gv = merge_violations(*p.violations.values())
+        elif gv is not None:
             if not p.fail_fast:
                 gv = gv.persist(StorageLevel.MEMORY_AND_DISK)
                 p.persisted.append(gv)

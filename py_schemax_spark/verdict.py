@@ -9,7 +9,8 @@
   value (e.g. ``days(warc_ts)``) so verdicts line up with the
   checkpoint manifest's per-partition lineage. Table-level violations
   (part ``__table__``: cardinality, drift) count in the run totals
-  without being a partition.
+  without being a partition. One aggregation and one collect, which
+  also delivers the run totals through an ``Observation``.
 """
 
 from __future__ import annotations
@@ -17,7 +18,7 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 from functools import reduce
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 #: ``part`` value of violations judged over the whole table rather
@@ -73,42 +74,29 @@ def partition_summary(
     partition_expr=None,
 ) -> DataFrame:
     """Per-partition pass/fail: ``(part, row_count, violation_count,
-    violating_keys, valid)``.
+    valid)``, unordered, from one aggregation over the table's
+    partition values unioned with the violations' parts.
 
     ``partition_expr`` defaults to `default_partition_expr`.
     ``violations`` must carry a ``part`` column (operators propagate it
     when given ``partition_col``); when absent, violation counts are
-    global. Violations of a part with no table rows (``TABLE_PART``)
-    keep their own row with ``row_count`` 0, so the summary accounts
-    for every violation row.
+    global (part ``"all"``). A NULL part (rows without a timestamp)
+    keeps its violations, and a part with violations but no table rows
+    (``TABLE_PART``) has ``row_count`` 0.
     """
     if partition_expr is None:
         partition_expr = default_partition_expr(df)
-    rows = df.groupBy(partition_expr.alias("part")).agg(
-        F.count(F.lit(1)).alias("row_count")
-    )
-    counts = (
-        F.count(F.lit(1)).alias("violation_count"),
-        F.approx_count_distinct(violations.columns[0]).alias(
-            "violating_keys"
-        ),
-    )
-    if "part" in violations.columns:
-        v = violations.groupBy(
-            F.col("part").cast("string").alias("_vpart")
-        ).agg(*counts)
-    else:
-        v = violations.agg(*counts).withColumn("_vpart", F.lit("all"))
-    # null-safe full join: rows without a timestamp form a NULL part
-    # whose violations must still land on it
+    vpart = F.col("part") if "part" in violations.columns else F.lit("all")
     return (
-        rows.join(v, rows["part"].eqNullSafe(v["_vpart"]), "full")
-        .withColumn("part", F.coalesce("part", "_vpart"))
-        .drop("_vpart")
-        .na.fill({"row_count": 0, "violation_count": 0,
-                  "violating_keys": 0})
+        df.select(partition_expr.cast("string").alias("part"),
+                  F.lit(1).alias("_r"), F.lit(0).alias("_v"))
+        .unionByName(violations.select(vpart.cast("string").alias("part"),
+                                       F.lit(0).alias("_r"),
+                                       F.lit(1).alias("_v")))
+        .groupBy("part")
+        .agg(F.sum("_r").alias("row_count"),
+             F.sum("_v").alias("violation_count"))
         .withColumn("valid", F.col("violation_count") == 0)
-        .orderBy("part")
     )
 
 
@@ -159,8 +147,9 @@ def summarize_partitions(
     fine at 10^3 partitions, a driver flood at 10^6 (a year of hourly
     partitions x many tables). Instead:
 
-    * run totals come from ONE single-row aggregate (exact, covers
-      every partition, O(1) driver memory);
+    * run totals come from an ``Observation`` on the summary that the
+      one collect delivers (exact, covers every partition, the
+      table-level row included; no second job, no cache);
     * at most ``max_rows`` per-partition rows are collected, worst
       first (invalid before valid, highest violation count first) via
       orderBy+limit — Spark executes that as TakeOrderedAndProject
@@ -169,38 +158,32 @@ def summarize_partitions(
       left distributed, so output can say "... and K more" instead of
       silently truncating.
 
-    Returns ``(rows_for_display, run_summary)``; rows are re-sorted by
+    Returns ``(rows_for_display, run_summary)``; rows are sorted by
     partition value for stable display. ``max_rows=None`` collects
-    every row (a checkpointed run records each one in its manifest).
+    every row (a checkpointed run records each one in its manifest)
+    with no Spark sort: a global sort's sampling job would run the
+    observed plan a second time.
     """
-    from pyspark import StorageLevel
-
-    # two jobs read the summary (totals agg + top-k rows); persist so
-    # its upstream (the table scan for row counts) runs once
-    summary_df = summary_df.persist(StorageLevel.MEMORY_AND_DISK)
     is_table = F.col("part").eqNullSafe(F.lit(TABLE_PART))
-    try:
-        tot = summary_df.agg(
-            F.count(F.when(~is_table, 1)).alias("parts"),
-            F.count(F.when(~is_table & F.col("valid"), 1)).alias(
-                "valid_parts"
-            ),
-            F.sum("row_count").alias("rows"),
-            F.sum("violation_count").alias("violations"),
-            F.sum(F.when(is_table, F.col("violation_count"))).alias(
-                "table_violations"
-            ),
-        ).collect()[0]
-        n_parts = int(tot["parts"] or 0)
-        n_valid = int(tot["valid_parts"] or 0)
-        rows = summary_df.filter(~is_table).orderBy(
+    n_viol = F.col("violation_count")
+    obs = Observation()
+    rows = summary_df.observe(
+        obs,
+        F.count(F.when(~is_table, 1)).alias("parts"),
+        F.count(F.when(~is_table & F.col("valid"), 1)).alias("valid_parts"),
+        F.sum("row_count").alias("rows"),
+        F.sum(n_viol).alias("violations"),
+        F.sum(F.when(is_table, n_viol)).alias("table_violations"),
+    ).filter(~is_table)
+    if max_rows is not None:
+        rows = rows.orderBy(
             F.asc("valid"), F.desc("violation_count"), F.asc("part")
-        )
-        rows = (rows if max_rows is None else rows.limit(max_rows)).collect()
-    finally:
-        summary_df.unpersist()
+        ).limit(max_rows)
+    rows = rows.collect()
+    tot = obs.get
+    n_parts, n_valid = tot["parts"], tot["valid_parts"]
     rows.sort(key=lambda r: str(r["part"]))
-    s = RunSummary(
+    return rows, RunSummary(
         total_partitions=n_parts,
         valid_partitions=n_valid,
         invalid_partitions=n_parts - n_valid,
@@ -210,4 +193,3 @@ def summarize_partitions(
         suppressed_parts=max(0, n_parts - len(rows)),
         table_violations=int(tot["table_violations"] or 0),
     )
-    return rows, s

@@ -164,6 +164,12 @@ def test_output_dir_matches_run(spark, inputs, tmp_path, monkeypatch,
     if not checkpoint:
         assert summary["table_violations"] == written.filter(
             F.col("part") == "__table__").count()
+    else:
+        # every global class counts for the table: the sink holds the
+        # checkpoint dir's local violations plus the global ones
+        (scope,) = (tmp_path / "ck" / "violations").iterdir()
+        assert summary["table_violations"] == (
+            written.count() - spark.read.parquet(str(scope)).count())
     assert not summary["valid"]
 
     # the verdict the CLI printed from is the sink, and so are the
