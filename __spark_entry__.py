@@ -3944,10 +3944,11 @@ FROM raw
     # survivor set. planted → robots (closed-form verdicts) → quality
     # (gopher ∧ c4 signals inline, null-free by construction so the
     # coalesce guards collapse) → dsir (raw model over the quality
-    # SURVIVORS, target over the planted %7 slice — exactly
-    # dsir_weights(cur, target) in curate.run_curation) → line dedup
-    # (hot = lines in ≥50 distinct SURVIVING docs) → keep-first exact
-    # dedup on normalized text → shard-plan window.
+    # SURVIVORS, target over the planted %7 slice, each survivor kept
+    # on its own score — exactly dsir_select(dsir_weights(cur, target))
+    # in curate.run_curation) → line dedup (hot = lines in ≥50 distinct
+    # SURVIVING docs) → keep-first exact dedup on normalized text →
+    # shard-plan window.
     curate_e2e_sql = f"""
 WITH src AS (
   SELECT d.doc_id, d.source,

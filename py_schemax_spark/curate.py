@@ -27,8 +27,8 @@ a 7-stage pipeline over 10 rows spent ~9 minutes in the driver
 before truncation, ~40 s after). Checkpoint blocks are registered
 for release like every other operator intermediate. On a preemptible
 cluster swap in a reliable ``checkpoint()`` dir. Stage counts are
-``Observation``s that work already running delivers, so they cost no
-job; ``report=False`` only leaves the stage table empty.
+``Observation``s that each stage's checkpoint query delivers, so they
+cost no job; ``report=False`` only leaves the stage table empty.
 """
 
 from __future__ import annotations
@@ -99,9 +99,9 @@ def run_curation(
     from py_schemax_spark.operators.dedup import (
         _checkpoint_rdd_ids,
         _CheckpointHandle,
+        _copy_rank,
         _track_persisted,
         dedup_clusters,
-        exact_dedup_keep_first,
         minhash_lsh_candidates,
         ngram_jaccard_pairs,
     )
@@ -156,17 +156,29 @@ def run_curation(
         obs = Observation()
         return frame.observe(obs, F.count(F.lit(1)).alias("n")), obs
 
-    # the first stage's first job over its input delivers its `in`:
-    # every stage reads all of its input before any bounded probe
-    cur, n_in = _observed(df)
+    n_in: Observation | None = None
     last_handle: list = []
+    in_cols = list(df.columns)
+
+    def _rows_in(rows: DataFrame) -> DataFrame:
+        """``rows`` has one row per input row of the stage, and the
+        stage's output is a projection or filter of it. The first stage
+        observes its `in` there: in the checkpoint query, above every
+        exchange. Observed on the input, below an exchange, the count
+        is lost whenever AQE drops that query stage because a stage it
+        feeds turned out empty."""
+        nonlocal n_in
+        if n_in is None:
+            rows, n_in = _observed(rows)
+        return rows
 
     def _record(stage: str, out_frame: DataFrame) -> DataFrame:
         """Truncate lineage at the stage boundary (eager
-        localCheckpoint — see module docstring), which delivers the
-        stage's `out`; blocks join the release registry."""
+        localCheckpoint of the input columns — see module docstring),
+        which delivers the stage's `out`; blocks join the release
+        registry."""
         nonlocal n_in
-        out_frame, n_out = _observed(out_frame)
+        out_frame, n_out = _observed(out_frame.select(*in_cols))
         cp = out_frame.localCheckpoint()
         handle = _CheckpointHandle(sc, _checkpoint_rdd_ids(cp))
         pinned.append(handle)
@@ -176,7 +188,7 @@ def run_curation(
         n_in = n_out
         return cp
 
-    in_cols = list(df.columns)
+    cur = df
 
     if "robots" in steps:
         from py_schemax_spark.operators.robots import apply_robots
@@ -184,40 +196,27 @@ def run_curation(
         # robots comes FIRST: a page the site forbade crawling should
         # not even reach content-level curation (rules = parse_robots
         # output, domain-granular, gated broadcast inside the op)
+        robots = apply_robots(
+            cur, robots_rules, url_col=cfg.url_col, key_col=k,
+            passthrough=True,
+        )
         cur = _record(
-            "robots",
-            apply_robots(
-                cur,
-                robots_rules,
-                url_col=cfg.url_col,
-                key_col=k,
-                passthrough=True,
-            )
-            .filter(~F.col("robots_blocked"))
-            .select(*in_cols),
+            "robots", _rows_in(robots).filter(~F.col("robots_blocked"))
         )
 
     if "blocklist" in steps:
-        cur = _record(
-            "blocklist",
-            block_urls(
-                cur,
-                blocked_domains,
-                url_col=cfg.url_col,
-                key_col=k,
-                pattern_rules=cfg.pattern_rules,
-                passthrough=True,
-            )
-            .filter(~F.col("blocked"))
-            .select(*in_cols),
+        listed = block_urls(
+            cur, blocked_domains, url_col=cfg.url_col, key_col=k,
+            pattern_rules=cfg.pattern_rules, passthrough=True,
         )
+        cur = _record("blocklist", _rows_in(listed).filter(~F.col("blocked")))
 
     if "normalize" in steps:
         cur = _record(
             "normalize",
-            normalize_text(cur, text_col=t, key_col=k, passthrough=True)
-            .withColumn(t, F.col("norm_text"))
-            .select(*in_cols),
+            _rows_in(
+                normalize_text(cur, text_col=t, key_col=k, passthrough=True)
+            ).withColumn(t, F.col("norm_text")),
         )
 
     if "redact" in steps:
@@ -229,39 +228,31 @@ def run_curation(
         # the redacted bytes, never the PII. Pure projection, rides
         # the same scan stage.
         cur = _record(
-            "redact",
-            cur.withColumn(t, redact_pii(F.col(t))),
+            "redact", _rows_in(cur.withColumn(t, redact_pii(F.col(t))))
         )
 
     if "quality" in steps:
-        g = gopher_profile(cur, text_col=t, key_col=k, passthrough=True)
+        g = _rows_in(
+            gopher_profile(cur, text_col=t, key_col=k, passthrough=True)
+        )
         gc = g.filter(F.col("gopher_pass")).select(*in_cols)
         c = c4_profile(gc, text_col=t, key_col=k, passthrough=True)
-        cur = _record(
-            "quality", c.filter(F.col("c4_keep")).select(*in_cols)
-        )
+        cur = _record("quality", c.filter(F.col("c4_keep")))
 
     if "dsir" in steps:
-        from py_schemax_spark.operators.dsir import dsir_weights
+        from py_schemax_spark.operators.dsir import dsir_select, dsir_weights
 
         # DSIR selection runs AFTER quality (score clean text) and
         # BEFORE the dedup stages (shrink the corpus before the
-        # expensive candidate generation). dsir_weights is two bounded
-        # model fits + a shuffle-free scoring projection; the
-        # threshold decision is integer cross-multiplication.
+        # expensive candidate generation). One bounded model fit, then
+        # a filter over the scored frame itself: each row passes on
+        # its own score, so the stage joins nothing back.
         w = dsir_weights(
-            cur, dsir_target, text_col=t, key_col=k,
-            n_buckets=cfg.dsir_buckets,
+            cur, dsir_target, text_col=t, n_buckets=cfg.dsir_buckets
         )
         pinned.extend(getattr(w, "_schemax_persisted", []))
-        thr = int(cfg.dsir_threshold_per_kterm)
-        keep_keys = w.filter(
-            F.col("dsir_score").isNotNull()
-            & (F.col("n_terms") > 0)
-            & (F.col("dsir_score") * 1000 >= F.lit(thr) * F.col("n_terms"))
-        ).select(F.col(k))
         cur = _record(
-            "dsir", cur.join(keep_keys, k, "left_semi")
+            "dsir", dsir_select(_rows_in(w), cfg.dsir_threshold_per_kterm)
         )
 
     if "lines" in steps:
@@ -274,13 +265,12 @@ def run_curation(
         )
         cur = _record(
             "lines",
-            cleaned.withColumn(t, F.col("clean_text")).select(*in_cols),
+            _rows_in(cleaned).withColumn(t, F.col("clean_text")),
         )
 
     if "exact_dedup" in steps:
-        cur = _record(
-            "exact_dedup", exact_dedup_keep_first(cur, text_col=t, key_col=k)
-        )
+        ranked = _rows_in(cur.withColumn("_rn", _copy_rank(t, k)))
+        cur = _record("exact_dedup", ranked.filter(F.col("_rn") == 1))
 
     if "near_dedup" in steps:
         cand = minhash_lsh_candidates(
@@ -300,8 +290,7 @@ def run_curation(
         clustered = dedup_clusters(cur, pairs, key_col=k, passthrough=True)
         pinned.extend(getattr(clustered, "_schemax_persisted", []))
         cur = _record(
-            "near_dedup",
-            clustered.filter(F.col("is_survivor")).select(*in_cols),
+            "near_dedup", _rows_in(clustered).filter(F.col("is_survivor"))
         )
 
     if "mix" in steps:
@@ -315,13 +304,7 @@ def run_curation(
             passthrough=True,
         )
         pinned.extend(getattr(mixed, "_schemax_persisted", []))
-        if not last_handle:
-            # mix first: its range partitioner's sampling job reads the
-            # input too; the passthrough frame has a row per input row
-            mixed, n_in = _observed(mixed)
-        cur = _record(
-            "mix", mixed.filter(F.col("kept")).select(*in_cols)
-        )
+        cur = _record("mix", _rows_in(mixed).filter(F.col("kept")))
 
     rep = {
         "stages": stats,

@@ -177,16 +177,22 @@ def exact_duplicates(
     )
 
 
+def _copy_rank(text_col: str, key_col: str) -> F.Column:
+    """1 for the min-key copy of each normalized text, 2, 3, … for its
+    later copies: one shuffle on the digest."""
+    w = Window.partitionBy(F.md5(_norm_text(F.col(text_col)))).orderBy(
+        F.col(key_col).asc()
+    )
+    return F.row_number().over(w)
+
+
 def exact_dedup_keep_first(
     df: DataFrame, text_col: str = "text", key_col: str = "doc_id"
 ) -> DataFrame:
     """Return ``df`` minus later copies of duplicated content (min-key
     copy wins). One shuffle on the digest; survivors keep all columns."""
-    w = Window.partitionBy(F.md5(_norm_text(F.col(text_col)))).orderBy(
-        F.col(key_col).asc()
-    )
     return (
-        df.withColumn("_rn", F.row_number().over(w))
+        df.withColumn("_rn", _copy_rank(text_col, key_col))
         .filter(F.col("_rn") == 1)
         .drop("_rn")
     )

@@ -16,18 +16,20 @@ Scale shape:
 
 - Feature bucketing is pure codegen SQL (``conv(substr(md5(term),1,8),
   16,10) % n_buckets`` — the `operators.classifier` bucket contract),
-  so the two model-fitting passes are each ONE token-granular
-  aggregation with map-side combine that collapses every partition to
-  at most ``n_buckets`` partial rows. The target corpus is the small
-  curated side; the raw corpus pays exactly one such pass.
+  so both models come from ONE token-granular aggregation over the
+  union of the two corpora, grouped by ``(side, bucket)``, with
+  map-side combine that collapses every partition to at most
+  ``2 × n_buckets`` partial rows, and ONE collect. The raw corpus pays
+  exactly one such pass.
 - Both fitted models are ``n_buckets``-row tables — bounded by
   construction regardless of corpus size (the hashing trick's point).
   They collect to the driver (2 × n_buckets longs) and ship back once
-  per executor as ONE broadcast float64 array of per-bucket
-  log-ratios.
-- Scoring is a single Arrow-batched pandas UDF projection — ZERO
-  shuffles, zero joins; it fuses into the corpus scan like
-  `classifier.linear_text_classifier`.
+  per executor as ONE broadcast array of per-bucket log-ratios.
+- Scoring is a single Arrow-batched pandas UDF projection that carries
+  every input column — ZERO shuffles, zero joins; it fuses into the
+  corpus scan like `classifier.linear_text_classifier`, and selection
+  is a filter over the same frame, so a caller never joins the corpus
+  back to its scores.
 
 Cross-engine contract (why the SCORE is hash-green oracle-able):
 
@@ -60,19 +62,17 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.functions import pandas_udf
 
-from py_schemax_spark.operators.classifier import _WS, _terms
+from py_schemax_spark.operators.classifier import _terms
 
 LAM_SCALE = 1_000_000
 
 
-def hashed_term_buckets(
-    df: DataFrame,
-    text_col: str = "text",
-    n_buckets: int = 4096,
-    word_ngrams: int = 2,
+def _term_buckets(
+    df: DataFrame, text_col: str, n_buckets: int, word_ngrams: int
 ) -> DataFrame:
-    """``(bucket, cnt)`` hashed-term histogram of a corpus — one
-    token-granular aggregation, output bounded at ``n_buckets`` rows.
+    """Every column of ``df`` plus ``bucket``, one row per hashed term of
+    each non-null text; Catalyst prunes the columns an aggregation does
+    not read.
 
     Pure codegen (no Python): the token array is materialized BEFORE
     the bigram HOF (a lambda over a computed ``split()`` child
@@ -82,39 +82,38 @@ def hashed_term_buckets(
     verbatim.
     """
     c = F.col(text_col)
-    toks = df.filter(c.isNotNull()).select(
-        F.filter(
-            F.split(F.lower(c), r"[ \t\n\r\f]+"), lambda t: t != ""
-        ).alias("_t")
+    toks = df.filter(c.isNotNull()).withColumn(
+        "_t",
+        F.filter(F.split(F.lower(c), r"[ \t\n\r\f]+"), lambda t: t != ""),
     )
+    terms = F.col("_t")
     if word_ngrams >= 2:
-        terms = toks.select(
-            F.explode(
-                F.concat(
-                    F.col("_t"),
-                    F.zip_with(
-                        F.slice(
-                            F.col("_t"), 1,
-                            F.greatest(F.size("_t") - 1, F.lit(0)),
-                        ),
-                        F.slice(
-                            F.col("_t"), 2,
-                            F.greatest(F.size("_t") - 1, F.lit(0)),
-                        ),
-                        lambda a, b: F.concat_ws(" ", a, b),
-                    ),
-                )
-            ).alias("term")
+        last = F.greatest(F.size("_t") - 1, F.lit(0))
+        terms = F.concat(
+            terms,
+            F.zip_with(
+                F.slice(terms, 1, last),
+                F.slice(terms, 2, last),
+                lambda a, b: F.concat_ws(" ", a, b),
+            ),
         )
-    else:
-        terms = toks.select(F.explode(F.col("_t")).alias("term"))
+    return toks.select("*", F.explode(terms).alias("_term")).withColumn(
+        "bucket",
+        F.conv(F.substring(F.md5(F.col("_term")), 1, 8), 16, 10)
+        .cast("long") % n_buckets,
+    )
+
+
+def hashed_term_buckets(
+    df: DataFrame,
+    text_col: str = "text",
+    n_buckets: int = 4096,
+    word_ngrams: int = 2,
+) -> DataFrame:
+    """``(bucket, cnt)`` hashed-term histogram of a corpus — one
+    token-granular aggregation, output bounded at ``n_buckets`` rows."""
     return (
-        terms.select(
-            (
-                F.conv(F.substring(F.md5(F.col("term")), 1, 8), 16, 10)
-                .cast("long") % n_buckets
-            ).alias("bucket")
-        )
+        _term_buckets(df, text_col, n_buckets, word_ngrams)
         .groupBy("bucket")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
@@ -150,31 +149,33 @@ def dsir_weights(
     df: DataFrame,
     target: DataFrame,
     text_col: str = "text",
-    key_col: str = "doc_id",
     n_buckets: int = 4096,
     word_ngrams: int = 2,
 ) -> DataFrame:
     """Importance-weight every document of ``df`` toward ``target``.
 
-    Returns ``(key_col, n_terms, dsir_score)`` where ``dsir_score`` is
+    Returns every column of ``df`` plus ``n_terms`` and ``dsir_score``,
     the integer fixed-point ``sum(lam(bucket(term)))`` — larger means
-    more target-like. Downstream selection is a pure filter/threshold
-    (`dsir_select`) or hash-deterministic resampling on the score.
+    more target-like. Both models come from ONE aggregation over the
+    two corpora, tagged by side. Scoring is a projection, so Catalyst
+    prunes whatever a caller does not read, and selection is a filter
+    on the scored frame (`dsir_select`) or hash-deterministic
+    resampling on the score.
     """
     if n_buckets <= 0:
         raise ValueError(f"n_buckets must be positive, got {n_buckets}")
-    raw_hist = {
-        r["bucket"]: r["cnt"]
-        for r in hashed_term_buckets(
-            df, text_col, n_buckets, word_ngrams
-        ).collect()
-    }
-    tgt_hist = {
-        r["bucket"]: r["cnt"]
-        for r in hashed_term_buckets(
-            target, text_col, n_buckets, word_ngrams
-        ).collect()
-    }
+    sides = df.select(F.lit(False).alias("_tgt"), F.col(text_col)).union(
+        target.select(F.lit(True).alias("_tgt"), F.col(text_col))
+    )
+    raw_hist: dict[int, int] = {}
+    tgt_hist: dict[int, int] = {}
+    for r in (
+        _term_buckets(sides, text_col, n_buckets, word_ngrams)
+        .groupBy("_tgt", "bucket")
+        .agg(F.count(F.lit(1)).alias("cnt"))
+        .collect()
+    ):
+        (tgt_hist if r["_tgt"] else raw_hist)[r["bucket"]] = r["cnt"]
     lam = _fit_log_ratios(raw_hist, tgt_hist, n_buckets)
 
     # ship the ratio table once per executor (classifier idiom); a
@@ -212,11 +213,10 @@ def dsir_weights(
         )
         .cast("long")
     )
-    result = df.select(
-        F.col(key_col),
-        n_terms.alias("n_terms"),
-        score(F.col(text_col)).cast("long").alias("dsir_score"),
-    )
+    result = df.withColumns({
+        "n_terms": n_terms,
+        "dsir_score": score(F.col(text_col)).cast("long"),
+    })
     from py_schemax_spark.operators.dedup import _track_persisted
 
     return _track_persisted(result, [bc_lam])

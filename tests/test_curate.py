@@ -273,6 +273,59 @@ def test_curation_dsir_stage_threshold_semantics(spark):
     assert curated2.count() == 0
 
 
+def test_curation_dsir_decides_per_row(spark):
+    """Each document passes or fails on its own score: a NULL-key doc
+    that passes survives, and of two docs sharing a key only the one
+    that passes survives."""
+    target = spark.createDataFrame(
+        [(0, "the cat sat on the mat"), (1, "the dog sat on the log")],
+        "doc_id long, text string",
+    )
+    df = spark.createDataFrame(
+        [
+            (None, "the cat sat on the mat"),
+            (7, "the dog sat on the log"),
+            (7, "stock market rally extends gains"),
+            (8, "quantum flux capacitor alignment manual"),
+        ],
+        "doc_id long, text string",
+    )
+    cfg = CurationConfig(steps=("dsir",), dsir_threshold_per_kterm=0)
+    curated, rep = run_curation(df, cfg, dsir_target=target)
+    assert sorted(
+        (r["doc_id"] is None, r["text"]) for r in curated.collect()
+    ) == [(False, "the dog sat on the log"), (True, "the cat sat on the mat")]
+    assert rep["stages"]["dsir"] == {"in": 4, "out": 2}
+
+
+def _jobs_in_group(spark, group, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_curation_dsir_stage_job_bound(spark):
+    """The DSIR stage is one model-fit aggregation and one filtered
+    checkpoint of the scored frame: at most 3 jobs (2 for the fit's
+    shuffle and collect under AQE, 1 for the checkpoint). A second
+    histogram pass or a join of the corpus back to its scores adds
+    more."""
+    from py_schemax_spark.operators.dedup import release_all_intermediates
+
+    def run():
+        run_curation(
+            _corpus(spark), _stage_config(steps=("dsir",)),
+            **_stage_inputs(spark),
+        )
+        release_all_intermediates()
+
+    assert _jobs_in_group(spark, "curate-dsir-jobs", run) <= 3
+
+
 def test_curation_dsir_strict_when_explicit_without_target(spark):
     df = _corpus(spark).select("doc_id", "text", "lang")
     with pytest.raises(ValueError, match="dsir"):
@@ -325,6 +378,27 @@ def test_stage_counts_are_observed_exactly(spark, stage):
     release_all_intermediates()
 
 
+@pytest.mark.parametrize("stage, where", [
+    # no line reaches min_line_docs: the hot-line set is empty
+    ("lines", "doc_id in (0, 1)"),
+    ("near_dedup", "false"),
+    ("dsir", "false"),
+    ("exact_dedup", "false"),
+])
+def test_first_stage_in_survives_empty_query_stages(spark, stage, where):
+    """A query stage that reads empty lets AQE drop the stages below
+    it. The first stage's ``in`` is still exact: it is observed above
+    every exchange of the stage's checkpoint query."""
+    from py_schemax_spark.operators.dedup import release_all_intermediates
+
+    df = _corpus(spark).filter(where)
+    out, rep = run_curation(
+        df, _stage_config(steps=(stage,)), **_stage_inputs(spark)
+    )
+    assert rep["stages"][stage] == {"in": df.count(), "out": out.count()}
+    release_all_intermediates()
+
+
 def test_stage_counts_run_no_job(spark):
     """Reporting is free: the stage counts come with the work the
     pipeline runs anyway, so ``report=True`` runs no more Spark jobs
@@ -332,20 +406,15 @@ def test_stage_counts_run_no_job(spark):
     run-time re-planning makes the job count vary by one with load."""
     from py_schemax_spark.operators.dedup import release_all_intermediates
 
-    sc = spark.sparkContext
-
     def jobs(report):
-        group = f"curate-report-{report}"
-        sc.setJobGroup(group, group)
-        try:
+        def run():
             run_curation(
                 _corpus(spark), _stage_config(), report=report,
                 **_stage_inputs(spark),
             )
             release_all_intermediates()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+        return _jobs_in_group(spark, f"curate-report-{report}", run)
 
     aqe = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")

@@ -151,6 +151,9 @@ def test_partitioning_invariance(spark, raw_df, tgt_df):
 
 def test_scoring_plan_is_shuffle_free(spark, raw_df, tgt_df):
     w = dsir_weights(raw_df, tgt_df, n_buckets=NB)
+    # the scored frame carries its input, so selection is a filter on
+    # it and nothing joins the corpus back to its scores
+    assert w.columns == raw_df.columns + ["n_terms", "dsir_score"]
     plan = w._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan
     assert "ArrowEvalPython" in plan
