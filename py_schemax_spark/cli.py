@@ -467,6 +467,7 @@ def curate_main(ns, spark=None) -> int:
                 return 2
             from pyspark.sql import functions as F
 
+            from py_schemax_spark.operators.chunking import NON_WS_RUN
             from py_schemax_spark.sources.shards import (
                 plan_shards,
                 write_jsonl_shards,
@@ -475,9 +476,7 @@ def curate_main(ns, spark=None) -> int:
             sized = curated.withColumn(
                 "n_units",
                 F.coalesce(
-                    F.regexp_count(
-                        F.col(cfg.text_col), F.lit(r"[^ \t\n\r\f]+")
-                    ),
+                    F.regexp_count(F.col(cfg.text_col), F.lit(NON_WS_RUN)),
                     F.lit(0),
                 ).cast("long"),
             )

@@ -14,12 +14,15 @@ a time); this extends the LLM-pipeline operator set of SURVEY.md §2.4.
 
 Scale shape:
 
-- Inference is a pure per-row computation: ONE Arrow-batched pandas
-  UDF maps text -> (n_terms, score) with the weight table shipped
-  once per executor via ``sparkContext.broadcast``. ZERO shuffles,
-  zero joins — the classifier fuses into the scan projection exactly
-  like `textstats.text_profile`. A 1000-executor cluster streams the
-  corpus through it at scan speed.
+- Inference is a pure per-row computation: `term_count` is codegen'd
+  regexp arithmetic, and ONE Arrow-batched pandas UDF
+  (`hashed_term_score`) maps text -> score against a dense
+  ``n_buckets``-entry table shipped once per executor via
+  ``sparkContext.broadcast`` — one table for both weight forms (a
+  `FormulaWeights` or a trained dict). ZERO shuffles, zero joins —
+  the classifier fuses into the scan projection exactly like
+  `textstats.text_profile`, and `operators.dsir` scores through the
+  same two builders.
 - The weight table is bounded by ``n_buckets`` (2^18 default ≈ 262k
   int entries, ~2 MB) — broadcastable by construction regardless of
   corpus size; that bound is the entire point of the hashing trick.
@@ -50,16 +53,19 @@ import hashlib
 import re
 from typing import Mapping, Optional
 
+import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.functions import pandas_udf
 
+from py_schemax_spark.operators.chunking import NON_WS_RUN, WS_CLASS
+
 # The EXPLICIT whitespace class shared with decontam/textstats (RE2's
 # \s exactly); Python \s would also split U+00A0/U+2028 and diverge
 # from the SQL oracle's token universe.
-_WS = re.compile(r"[ \t\n\r\f]+")
+_WS = re.compile(WS_CLASS)
 
 
 def _terms(text: str, word_ngrams: int) -> list[str]:
@@ -95,7 +101,8 @@ class FormulaWeights:
         self.modulus = modulus
         self.offset = offset
 
-    def weight(self, bucket: int) -> int:
+    def weight(self, bucket):
+        """``w(bucket)`` for an int or, elementwise, a numpy array."""
         return bucket % self.modulus - self.offset
 
 
@@ -112,17 +119,50 @@ def score_text_py(
         return (None, None)
     terms = _terms(text, word_ngrams)
     if isinstance(weights, FormulaWeights):
-        score = sum(
-            hashed_bucket_py(t, n_buckets) % weights.modulus
-            - weights.offset
-            for t in terms
-        )
+        weight = weights.weight
     else:
-        score = sum(
-            weights.get(hashed_bucket_py(t, n_buckets), 0)
-            for t in terms
+        def weight(b: int) -> int:
+            return weights.get(b, 0)
+    return (
+        len(terms),
+        sum(weight(hashed_bucket_py(t, n_buckets)) for t in terms),
+    )
+
+
+def term_count(col: Column, word_ngrams: int) -> Column:
+    """Codegen'd term count of the `_terms` contract: ``n`` tokens (a
+    token is a maximal run outside the explicit whitespace class), or
+    ``2n - 1`` with bigrams; 0 for empty text, null for null text.
+    Both references to ``n`` are unconditional, so codegen evaluates the
+    regex once per row (a CASE branch would evaluate it twice)."""
+    n = F.regexp_count(col, F.lit(NON_WS_RUN)).cast("long")
+    return n * 2 - F.least(n, F.lit(1)) if word_ngrams >= 2 else n
+
+
+def hashed_term_score(
+    col: Column, table, n_buckets: int, word_ngrams: int
+) -> Column:
+    """``sum(table.value[hashed_bucket_py(term, n_buckets)])`` over
+    ``_terms(text, word_ngrams)`` — one Arrow-batched pandas UDF,
+    ``LongType``, null for null text. ``table`` is a broadcast dense
+    list of ``n_buckets`` ints, so every executor receives it once and
+    no task re-serializes it."""
+
+    @pandas_udf(T.LongType())
+    def score(texts: pd.Series) -> pd.Series:
+        w = table.value
+        return pd.Series(
+            [
+                None if t is None else sum(
+                    w[hashed_bucket_py(term, n_buckets)]
+                    for term in _terms(t, word_ngrams)
+                )
+                for t in texts
+            ],
+            dtype="Int64",
         )
-    return (len(terms), score)
+
+    return score(col)
 
 
 def linear_text_classifier(
@@ -142,8 +182,10 @@ def linear_text_classifier(
     yields null ``n_terms``/``score``/``label``.
 
     ``weights``: a ``{bucket: int}`` mapping (missing buckets weigh
-    0) — shipped ONCE per executor via broadcast, never per task — or
-    a `FormulaWeights`; defaults to `formula_weights(n_buckets)`.
+    0) or a `FormulaWeights`; defaults to `formula_weights(n_buckets)`.
+    Either form becomes one dense ``n_buckets``-entry table, shipped
+    ONCE per executor via broadcast, never per task, and registered for
+    `dedup.release_all_intermediates`.
 
     Plan shape: one ArrowEvalPython projection, ZERO exchanges
     (plan-asserted in tests) — inference runs at scan speed on any
@@ -151,76 +193,22 @@ def linear_text_classifier(
     """
     if weights is None:
         weights = formula_weights(n_buckets)
-    wg = word_ngrams
-    nb = n_buckets
     if isinstance(weights, FormulaWeights):
-        bc = None
-        mod, off = weights.modulus, weights.offset
+        table = weights.weight(np.arange(n_buckets, dtype=np.int64)).tolist()
     else:
-        # broadcast the dict once per executor; a closure-captured
-        # dict re-serializes with every task (unigram_logprob idiom)
-        bc = df.sparkSession.sparkContext.broadcast(dict(weights))
-        mod = off = None
-
-    @pandas_udf(
-        T.StructType(
-            [
-                T.StructField("n_terms", T.LongType()),
-                T.StructField("score", T.LongType()),
-            ]
-        )
-    )
-    def score_udf(texts: pd.Series) -> pd.DataFrame:
-        import hashlib as _h
-        import re as _re
-
-        ws = _re.compile(r"[ \t\n\r\f]+")
-        wts = bc.value if bc is not None else None
-        n_out: list[Optional[int]] = []
-        s_out: list[Optional[int]] = []
-        for t in texts:
-            if t is None:
-                n_out.append(None)
-                s_out.append(None)
-                continue
-            toks = [w for w in ws.split(t.lower()) if w]
-            terms = (
-                toks
-                + [toks[i] + " " + toks[i + 1] for i in range(len(toks) - 1)]
-                if wg >= 2
-                else toks
-            )
-            s = 0
-            if wts is None:
-                for term in terms:
-                    b = (
-                        int(_h.md5(term.encode()).hexdigest()[:8], 16)
-                        % nb
-                    )
-                    s += b % mod - off
-            else:
-                for term in terms:
-                    b = (
-                        int(_h.md5(term.encode()).hexdigest()[:8], 16)
-                        % nb
-                    )
-                    s += wts.get(b, 0)
-            n_out.append(len(terms))
-            s_out.append(s)
-        return pd.DataFrame({"n_terms": n_out, "score": s_out})
-
+        table = [weights.get(b, 0) for b in range(n_buckets)]
+    bc = df.sparkSession.sparkContext.broadcast(table)
+    text = F.col(text_col)
     scored = df.select(
         F.col(key_col),
-        score_udf(F.col(text_col)).alias("_s"),
+        term_count(text, word_ngrams).alias("n_terms"),
+        hashed_term_score(text, bc, n_buckets, word_ngrams).alias("score"),
     )
-    return scored.select(
-        key_col,
-        F.col("_s.n_terms").alias("n_terms"),
-        F.col("_s.score").alias("score"),
-        F.when(
-            F.col("_s.score").isNotNull(),
-            F.col("_s.score") > F.lit(threshold),
-        ).alias("label"),
+    from py_schemax_spark.operators.dedup import _track_persisted
+
+    return _track_persisted(
+        scored.withColumn("label", F.col("score") > F.lit(threshold)),
+        [bc],
     )
 
 

@@ -25,11 +25,12 @@ Scale shape:
   construction regardless of corpus size (the hashing trick's point).
   They collect to the driver (2 × n_buckets longs) and ship back once
   per executor as ONE broadcast array of per-bucket log-ratios.
-- Scoring is a single Arrow-batched pandas UDF projection that carries
-  every input column — ZERO shuffles, zero joins; it fuses into the
-  corpus scan like `classifier.linear_text_classifier`, and selection
-  is a filter over the same frame, so a caller never joins the corpus
-  back to its scores.
+- Scoring is the classifier's scorer: `classifier.term_count` and
+  `classifier.hashed_term_score` against the broadcast ratio table, one
+  Arrow-batched pandas UDF projection that carries every input column —
+  ZERO shuffles, zero joins; it fuses into the corpus scan like
+  `classifier.linear_text_classifier`, and selection is a filter over
+  the same frame, so a caller never joins the corpus back to its scores.
 
 Cross-engine contract (why the SCORE is hash-green oracle-able):
 
@@ -56,13 +57,14 @@ from __future__ import annotations
 
 import math
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-from pyspark.sql.pandas.functions import pandas_udf
 
-from py_schemax_spark.operators.classifier import _terms
+from py_schemax_spark.operators.chunking import WS_CLASS
+from py_schemax_spark.operators.classifier import (
+    hashed_term_score,
+    term_count,
+)
 
 LAM_SCALE = 1_000_000
 
@@ -84,7 +86,7 @@ def _term_buckets(
     c = F.col(text_col)
     toks = df.filter(c.isNotNull()).withColumn(
         "_t",
-        F.filter(F.split(F.lower(c), r"[ \t\n\r\f]+"), lambda t: t != ""),
+        F.filter(F.split(F.lower(c), WS_CLASS), lambda t: t != ""),
     )
     terms = F.col("_t")
     if word_ngrams >= 2:
@@ -182,40 +184,10 @@ def dsir_weights(
     # raw-closure list re-serializes with every task
     bc_lam = df.sparkSession.sparkContext.broadcast(lam)
 
-    @pandas_udf(T.LongType())
-    def score(texts: pd.Series) -> pd.Series:
-        import hashlib as _hashlib
-
-        lam_v = bc_lam.value
-        out = []
-        for t in texts:
-            if t is None:
-                out.append(None)
-                continue
-            s = 0
-            for term in _terms(t, word_ngrams):
-                b = (
-                    int(_hashlib.md5(term.encode()).hexdigest()[:8], 16)
-                    % n_buckets
-                )
-                s += lam_v[b]
-            out.append(s)
-        return pd.Series(out, dtype="Int64")
-
-    # n_terms as codegen'd regexp arithmetic over the SAME explicit
-    # whitespace class (unigram count + bigram count = 2n-1 for n>=1)
-    n_tok = F.regexp_count(F.col(text_col), F.lit(r"[^ \t\n\r\f]+"))
-    n_terms = (
-        F.when(F.col(text_col).isNull(), F.lit(None).cast("long"))
-        .when(n_tok == 0, F.lit(0).cast("long"))
-        .otherwise(
-            (n_tok * 2 - 1) if word_ngrams >= 2 else n_tok.cast("long")
-        )
-        .cast("long")
-    )
+    c = F.col(text_col)
     result = df.withColumns({
-        "n_terms": n_terms,
-        "dsir_score": score(F.col(text_col)).cast("long"),
+        "n_terms": term_count(c, word_ngrams),
+        "dsir_score": hashed_term_score(c, bc_lam, n_buckets, word_ngrams),
     })
     from py_schemax_spark.operators.dedup import _track_persisted
 

@@ -486,10 +486,11 @@ def corpus_report(
     the SQL oracle (Spark default sorts nulls first, DuckDB last;
     the explicit ordering removes the divergence).
     """
+    from py_schemax_spark.operators.chunking import NON_WS_RUN
     from py_schemax_spark.operators.pii import PII_PATTERNS
 
     c = F.col(text_col)
-    tok = F.regexp_count(c, F.lit(r"[^ \t\n\r\f]+"))
+    tok = F.regexp_count(c, F.lit(NON_WS_RUN))
     any_pii = None
     for _, pat, _rep in PII_PATTERNS:
         hit = F.regexp_count(c, F.lit(pat)) > 0

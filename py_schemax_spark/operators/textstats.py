@@ -12,6 +12,7 @@ import pandas as pd  # noqa: F401 — resolves pandas_udf type hints
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from py_schemax_spark.operators.chunking import NON_WS_RUN, WS_CLASS
 from py_schemax_spark.operators.common import check_passthrough_collisions
 
 # Small built-in stopword lists per language for the n-gram/stopword
@@ -278,16 +279,16 @@ def unigram_logprob_scores(
     from pyspark.sql import types as T
     from pyspark.sql.pandas.functions import pandas_udf
 
-    # Token delimiter: the EXPLICIT class [ \t\n\r\f]+ — identical in
-    # Java regex (here), Python (the scoring UDF), and RE2 (the SQL
-    # oracle). \s differs across the three on \x0B and Unicode spaces.
-    _ws_cls = r"[ \t\n\r\f]+"
+    # Token delimiter: the EXPLICIT class WS_CLASS, [ \t\n\r\f]+ —
+    # identical in Java regex (here), Python (the scoring UDF), and RE2
+    # (the SQL oracle). \s differs across the three on \x0B and Unicode
+    # spaces.
     # materialize the token array BEFORE the HOF filter: a lambda over
     # a computed split() child re-evaluates the child per element
     # (SURVEY §7 — quadratic in tokens/doc); over an attribute
     # reference it is a single linear pass
     vocab = (
-        df.select(F.split(F.lower(F.col(text_col)), _ws_cls).alias("_t"))
+        df.select(F.split(F.lower(F.col(text_col)), WS_CLASS).alias("_t"))
         .select(
             F.explode(
                 F.filter(F.col("_t"), lambda t: t != "")
@@ -314,7 +315,7 @@ def unigram_logprob_scores(
         import re as _re
 
         # the same EXPLICIT whitespace class as the vocabulary phase
-        # and the SQL oracle (see _ws_cls above)
+        # and the SQL oracle (see WS_CLASS above)
         ws = _re.compile(r"[ \t\n\r\f]+")
         cnts = bc_counts.value
         out = []
@@ -340,9 +341,7 @@ def unigram_logprob_scores(
         # codegen'd regexp arithmetic over the SAME explicit class, so
         # n_tokens counts exactly the tokens the score averaged; null
         # text → null (SQL twin: len of a null token list)
-        F.regexp_count(
-            F.col(text_col), F.lit(r"[^ \t\n\r\f]+")
-        ).alias("n_tokens"),
+        F.regexp_count(F.col(text_col), F.lit(NON_WS_RUN)).alias("n_tokens"),
         F.round(score(F.col(text_col)), 4).alias("logprob"),
     )
     # register the broadcast for bulk release (Broadcast.unpersist has
@@ -378,7 +377,7 @@ def vocab_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
     count table. No windows, no joins, nothing driver-side.
     """
     tok = F.explode(
-        F.split(F.lower(F.col(text_col)), "[ \t\n\r\f]+")
+        F.split(F.lower(F.col(text_col)), WS_CLASS)
     ).alias("tok")
     counts = (
         df.select(tok)

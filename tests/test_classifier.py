@@ -87,6 +87,22 @@ def test_classifier_dict_weights_and_threshold(spark):
     assert out[1] == (0, False)
 
 
+def test_classifier_weight_table_is_released(spark):
+    """The broadcast weight table is registered for bulk release, so
+    a long-lived session does not keep one table per call."""
+    from py_schemax_spark.operators.dedup import release_all_intermediates
+
+    release_all_intermediates()
+    df = spark.createDataFrame([(0, "spam ham")], "doc_id long, text string")
+    out = linear_text_classifier(
+        df, weights={hashed_bucket_py("spam", NB): 5}, word_ngrams=1
+    )
+    assert out.collect()[0]["score"] == 5
+    tracked = getattr(out, "_schemax_persisted", [])
+    assert [type(x).__name__ for x in tracked] == ["Broadcast"]
+    assert release_all_intermediates() == 1
+
+
 def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 

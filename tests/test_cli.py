@@ -200,11 +200,23 @@ def test_dim_broadcast_limit_layers(tmp_path, monkeypatch):
 
 
 def test_dim_broadcast_limit_cli_same_verdict(
-    spark, table_dir, spec_file, tmp_path, capsys
+    spark, table_dir, spec_file, tmp_path, capsys, monkeypatch
 ):
     """--dim-broadcast-limit 0 forces the distinct-keys referential
     strategy end-to-end through the CLI; the verdict (exit code +
-    violation totals) is identical to the broadcast default."""
+    violation totals) is identical to the broadcast default. The check
+    list leaves out ``rows``: with it, a small dim fuses into the rows
+    projection as an IN-list and neither strategy runs."""
+    from py_schemax_spark.operators import referential
+
+    large_dim_calls = []
+    real = referential._large_dim_violation_rows
+
+    def spy(*args, **kwargs):
+        large_dim_calls.append(1)
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(referential, "_large_dim_violation_rows", spy)
     dim_path = str(tmp_path / "lang_dim")
     spark.createDataFrame(
         [("en",), ("de",), ("fr",)], ["lang"]
@@ -220,12 +232,14 @@ def test_dim_broadcast_limit_cli_same_verdict(
     base_args = [
         "validate", table_dir, "--spec", str(sp),
         "--dim", f"lang_dim={dim_path}",
-        "--check", "schema,rows,referential",
+        "--check", "schema,referential",
     ]
     code_bc = _main(spark, base_args)
     out_bc = capsys.readouterr().out
+    assert large_dim_calls == []
     code_dk = _main(spark, base_args + ["--dim-broadcast-limit", "0"])
     out_dk = capsys.readouterr().out
+    assert large_dim_calls == [1]
     assert code_bc == code_dk == 1
     # the run-summary line (totals) must match exactly
     assert out_bc.splitlines()[-1] == out_dk.splitlines()[-1]

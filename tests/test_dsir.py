@@ -13,7 +13,11 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
-from py_schemax_spark.operators.classifier import _terms, hashed_bucket_py
+from py_schemax_spark.operators.classifier import (
+    _terms,
+    hashed_bucket_py,
+    linear_text_classifier,
+)
 from py_schemax_spark.operators.dsir import (
     LAM_SCALE,
     _fit_log_ratios,
@@ -116,6 +120,13 @@ def test_dsir_weights_matches_python_reference(spark, raw_df, tgt_df):
         else:
             n = len(_terms(text, 2))
             assert got[doc_id] == (n, _score_py(text, lam, NB))
+    # the classifier with lam as its weight dict is the same scorer
+    assert got == {
+        r["doc_id"]: (r["n_terms"], r["score"])
+        for r in linear_text_classifier(
+            raw_df, n_buckets=NB, word_ngrams=2, weights=dict(enumerate(lam))
+        ).collect()
+    }
 
 
 def test_target_docs_outscore_offtarget(spark, raw_df, tgt_df):
