@@ -50,20 +50,32 @@ DEFAULTS: dict[str, Any] = {
 _TOML_FILES = ("schemax.toml", "pyproject.toml")
 
 
+def _read_toml(path) -> Optional[dict[str, Any]]:
+    """One config file's TOML document; None when there is no file at
+    ``path``. A file that is there but malformed or unreadable is a
+    user error, never a skipped layer: the CLI catches ValueError and
+    exits 2 (reference: click.BadParameter)."""
+    try:
+        with open(path, "rb") as f:
+            return tomllib.load(f)
+    except (FileNotFoundError, IsADirectoryError):
+        return None
+    except tomllib.TOMLDecodeError as e:
+        raise ValueError(f"config file {str(path)!r} is not valid TOML: {e}")
+    except OSError as e:
+        # permissions, special file, I/O error
+        raise ValueError(f"config file {str(path)!r} could not be read: {e}")
+
+
 def _toml_layer(cwd: str = ".") -> dict[str, Any]:
     """TOML config: schemax.toml [validate] first, else pyproject.toml
     [tool.schemax_spark.validate] (reference config.py:187-217)."""
     if tomllib is None:
         return {}
     for fname in _TOML_FILES:
-        p = Path(cwd) / fname
-        if not p.is_file():
+        doc = _read_toml(Path(cwd) / fname)
+        if doc is None:
             continue
-        with open(p, "rb") as f:
-            try:
-                doc = tomllib.load(f)
-            except Exception:
-                continue
         if fname == "schemax.toml":
             section = doc.get("validate", {})
         else:
@@ -85,21 +97,9 @@ def _explicit_config_layer(paths: tuple[str, ...]) -> dict[str, Any]:
     if tomllib is None:  # pragma: no cover
         raise ValueError("tomllib unavailable; cannot parse --config files")
     for path in paths:
-        try:
-            with open(path, "rb") as f:
-                doc = tomllib.load(f)
-        except (FileNotFoundError, IsADirectoryError):
+        doc = _read_toml(path)
+        if doc is None:
             continue
-        except tomllib.TOMLDecodeError as e:
-            # an explicitly named file that exists but is malformed is a
-            # user error, not a skippable layer (reference raises
-            # click.BadParameter on a bad explicit config)
-            raise ValueError(f"config file {path!r} is not valid TOML: {e}")
-        except OSError as e:
-            # unreadable (permissions, special file, I/O error): surface
-            # a clean CLI error, not a traceback — the CLI catches
-            # ValueError and exits 2
-            raise ValueError(f"config file {path!r} could not be read: {e}")
         section = doc.get("validate") or (
             doc.get("tool", {}).get("schemax_spark", {}).get("validate", {})
         )

@@ -49,7 +49,7 @@ from pyspark.sql import types as T
 from pyspark.sql.pandas.functions import pandas_udf
 from pyspark.storagelevel import StorageLevel
 
-_WS_CLS = r"[ \t\n\r\f]+"
+from py_schemax_spark.operators.chunking import WS_CLASS
 
 
 def word_freq_table(
@@ -61,7 +61,7 @@ def word_freq_table(
     token contract), optionally capped at ``top_words`` rows in
     ``(cnt desc, word asc)`` order."""
     toks = df.select(
-        F.split(F.lower(F.col(text_col)), _WS_CLS).alias("_t")
+        F.split(F.lower(F.col(text_col)), WS_CLASS).alias("_t")
     ).select(
         F.explode(F.filter(F.col("_t"), lambda t: t != "")).alias("word")
     )

@@ -42,11 +42,14 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.functions import pandas_udf
 
+from py_schemax_spark.operators.chunking import WS_CLASS
+
 # Explicit whitespace class = RE2's \s EXACTLY ([\t\n\f\r ]): Python
 # Unicode \s would also split on U+00A0/U+2028, and even re.ASCII \s
 # (like Java \s) additionally includes \x0B where RE2 does not — the
-# oracle's token universe is the canonical one, so spell it out.
-_WS = re.compile(r"[ \t\n\r\f]+")
+# oracle's token universe is the canonical one, so use the explicit
+# class every engine shares.
+_WS = re.compile(WS_CLASS)
 
 
 def _ngram_hashes(text: str | None, n: int) -> list[str]:

@@ -46,6 +46,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from py_schemax_spark.operators.chunking import WS_CLASS
+
 # Block-level boundary tags (opening or closing, with attributes).
 _BLOCK_SPLIT = (
     r"(?i)</?(?:p|div|h[1-6]|li|ul|ol|dl|dt|dd|table|thead|tbody|tr|"
@@ -53,14 +55,13 @@ _BLOCK_SPLIT = (
     r"figcaption|blockquote|pre|form|fieldset|hr|br|html|head|body|"
     r"title)\b[^>]*>"
 )
-_WS_CLS = r"[ \t\n\r\f]+"
 
 
 def _visible_text(seg: Column) -> Column:
     """Inline-tag strip → whitespace collapse → trim → minimal entity
     unescape (the `functions.extraction` escape set, amp LAST)."""
     t = F.regexp_replace(seg, r"(?s)<[^>]*>", " ")
-    t = F.trim(F.regexp_replace(t, _WS_CLS, " "))
+    t = F.trim(F.regexp_replace(t, WS_CLASS, " "))
     t = F.replace(t, F.lit("&lt;"), F.lit("<"))
     t = F.replace(t, F.lit("&gt;"), F.lit(">"))
     return F.replace(t, F.lit("&amp;"), F.lit("&"))

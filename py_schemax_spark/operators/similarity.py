@@ -4,10 +4,15 @@ Training-pipeline extension (no reference analogue): approximate
 nearest neighbors for near-dup mining / retrieval over web-scale
 corpora.
 
-- brute-force cosine: the correctness baseline — JVM-side
-  ``zip_with``/``aggregate`` dot products (whole-stage codegen), query
-  side broadcast. O(n·q) but zero Python and zero shuffle of the
-  corpus; right answer for verification and small q.
+- Top-k family (``brute_force_topk``, ``lsh_topk``, ``ivf_topk``,
+  ``pq_topk``/``pq_search``, ``ivfpq_topk``): the query side is small
+  by contract and is read once, by one bounded collect
+  (``_query_side``). The brute-force, PQ and IVF-PQ scorers run as
+  numpy over Arrow batches of the corpus against the broadcast query
+  constants, through one partial-top-k kernel (``_scored_topk``), so
+  the corpus never shuffles; LSH and IVF join the corpus to a
+  broadcast frame of the collected queries. All five rank through one
+  window (``_rank``): sim rounded to 4 desc, vec_id asc.
 - LSH-bucketed (random hyperplanes / SignRandomProjection): the scale
   path — b sign bits per vector → bucket id; probe only same-bucket
   vectors. Recall tunable via number of tables; deterministic planes
@@ -15,44 +20,124 @@ corpora.
 - IVF (k-means-lite): coarse centroids sampled deterministically,
   vectors assigned to nearest centroid (one broadcast join), queries
   probe ``nprobe`` nearest lists.
+- PQ / IVF-PQ: product-quantized codes scored by table gathers (ADC);
+  in their degenerate regimes they reconstruct exactly and equal brute
+  force.
+- All pairs above a threshold: ``all_pairs_above_np`` broadcasts a
+  small corpus, ``all_pairs_above_blocked`` decomposes a large one
+  into block pairs with no driver collect; both emit the same pairs.
 
-Element order in reductions is left-to-right and both sides cast to
-double first, so results reproduce bit-for-bit across runs (and match
-a DuckDB oracle computing the same reduction).
+Every scorer casts to float64 before it multiplies, so results
+reproduce across runs; top-k sims are rounded to 4 decimals, which is
+what a DuckDB oracle ranks by.
 """
 
 from __future__ import annotations
 
+import hashlib
 from typing import Iterator
 
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.functions import pandas_udf
 
 
 # The top-k family collects/broadcasts the QUERY side (queries ≪
-# corpus by contract). The contract is enforced, not assumed: a
-# caller passing a corpus-sized query set gets a clear error from a
-# bounded probe (scans ≤ limit+1 rows) instead of a driver OOM deep
-# inside collect().
+# corpus by contract). The contract is enforced, not assumed: the one
+# query collect is bounded at limit+1 rows, so a caller passing a
+# corpus-sized query set gets a clear error instead of a driver OOM.
 _MAX_QUERY_ROWS = 100_000
 
+_TOPK_SCHEMA = T.StructType(
+    [
+        T.StructField("query_id", T.LongType()),
+        T.StructField("vec_id", T.LongType()),
+        T.StructField("sim", T.DoubleType()),
+    ]
+)
 
-def _guard_query_side(
-    queries: DataFrame, api: str, max_query_rows: int
-) -> None:
-    if queries.limit(max_query_rows + 1).count() > max_query_rows:
+
+def _query_side(
+    queries: DataFrame,
+    api: str,
+    max_query_rows: int,
+    vec_col: str,
+    query_id_col: str,
+) -> tuple[np.ndarray, np.ndarray]:
+    """``(q_ids int64, q_mat float64)`` of the non-null query vectors,
+    read by ONE collect of at most ``max_query_rows + 1`` rows. The
+    bound counts the rows the caller passed; nulls drop after it."""
+    rows = (
+        queries.select(query_id_col, vec_col)
+        .limit(max_query_rows + 1)
+        .collect()
+    )
+    if len(rows) > max_query_rows:
         raise ValueError(
             f"{api}: query side exceeds max_query_rows="
             f"{max_query_rows:,}. The top-k family broadcasts the "
             "query set (queries << corpus by contract) — batch the "
             "queries, raise max_query_rows explicitly if the driver "
-            "can hold them, or use similarity_pairs_above / "
+            "can hold them, or use all_pairs_above_np / "
             "all_pairs_above_blocked for corpus-scale both-sides."
         )
+    rows = [r for r in rows if r[1] is not None]
+    return (
+        np.array([r[0] for r in rows], dtype=np.int64),
+        np.array([r[1] for r in rows], dtype=np.float64),
+    )
+
+
+def _empty_topk(spark) -> DataFrame:
+    """No usable queries: an empty result with the full output schema."""
+    return spark.createDataFrame(
+        [], "query_id bigint, vec_id bigint, sim double, rank int"
+    )
+
+
+def _rank(sim: DataFrame, k: int) -> DataFrame:
+    """Top ``k`` per query in the total order (sim desc, vec_id asc)."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("sim").desc(), F.col("vec_id").asc()
+    )
+    return sim.withColumn("rank", F.row_number().over(w)).filter(
+        F.col("rank") <= k
+    )
+
+
+def _scored_topk(frame: DataFrame, q_ids: np.ndarray, k: int, score):
+    """The map-side half of the top-k family: ``score(pdf) -> (b_ids,
+    sims)`` gives one (batch × Q) matrix of 4-decimal sims per Arrow
+    batch of ``frame`` (``-inf`` = not a candidate); each batch emits
+    only its per-query partial top-k (≤ k·|Q| rows), self-matches
+    excluded. The order is total, so batch-local top-k merges exactly
+    into the global top-k in ``_rank``."""
+
+    def partial_topk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            if pdf.empty:
+                continue
+            b_ids, sims = score(pdf)
+            sims[b_ids[:, None] == q_ids[None, :]] = -np.inf
+            take = min(k, b_ids.size)
+            # order: sim desc, vec_id asc — lexsort keys last-first
+            order = np.lexsort(
+                (b_ids[:, None].repeat(len(q_ids), 1), -sims), axis=0
+            )[:take]
+            out = pd.DataFrame(
+                {
+                    "query_id": np.repeat(q_ids, take),
+                    "vec_id": b_ids[order].T.ravel(),
+                    "sim": np.take_along_axis(sims, order, axis=0).T.ravel(),
+                }
+            )
+            yield out[np.isfinite(out["sim"])]
+
+    return _rank(frame.mapInPandas(partial_topk, _TOPK_SCHEMA), k)
 
 
 def cosine_similarity_arrow(a: Column, b: Column) -> Column:
@@ -63,10 +148,6 @@ def cosine_similarity_arrow(a: Column, b: Column) -> Column:
     semantic twin in tests). Same float64 math; summation order is
     numpy's SIMD blocking, so last-ulp results can differ from the
     sequential fold — round before comparing across engines."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-    from pyspark.sql.functions import pandas_udf
 
     @pandas_udf(T.DoubleType())
     def cos(va: pd.Series, vb: pd.Series) -> pd.Series:
@@ -97,80 +178,28 @@ def brute_force_topk(
 
     Scale: the query matrix is collected (small by contract) and
     broadcast; each Arrow batch of the corpus does ONE numpy matmul
-    against it and emits only its per-query partial top-k (≤ k·|Q|
-    rows per batch) — the corpus never shuffles and the final window
-    ranks k·|Q|·n_batches candidate rows, not n·|Q|. Ordering is the
-    total order (sim rounded to 4 desc, vec_id asc), so batch-local
-    top-k merges exactly into the global top-k."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import Window
-    from pyspark.sql import types as T
-    from typing import Iterator
-
-    _guard_query_side(queries, "brute_force_topk", max_query_rows)
-    qrows = (
-        queries.filter(F.col(vec_col).isNotNull())
-        .select(
-            F.col(query_id_col).alias("query_id"), F.col(vec_col).alias("qvec")
-        )
-        .collect()
+    against it and emits only its per-query partial top-k — the corpus
+    never shuffles and the final window ranks k·|Q|·n_batches
+    candidate rows, not n·|Q|."""
+    q_ids, q_mat = _query_side(
+        queries, "brute_force_topk", max_query_rows, vec_col, query_id_col
     )
-    if not qrows:
-        # no usable queries: empty result with the full output schema
-        return df.sparkSession.createDataFrame(
-            [], "query_id bigint, vec_id bigint, sim double, rank int"
-        )
-    q_ids = np.array([r["query_id"] for r in qrows], dtype=np.int64)
-    q_mat = np.array([r["qvec"] for r in qrows], dtype=np.float64)
+    if not q_ids.size:
+        return _empty_topk(df.sparkSession)
     q_norm = np.sqrt((q_mat * q_mat).sum(axis=1))
-    bc = df.sparkSession.sparkContext.broadcast((q_ids, q_mat, q_norm))
+    bc = df.sparkSession.sparkContext.broadcast((q_mat, q_norm))
 
-    out_schema = T.StructType(
-        [
-            T.StructField("query_id", T.LongType()),
-            T.StructField("vec_id", T.LongType()),
-            T.StructField("sim", T.DoubleType()),
-        ]
-    )
+    def score(pdf: pd.DataFrame):
+        mat_q, nrm_q = bc.value
+        b_mat = np.array(list(pdf["_v"]), dtype=np.float64)
+        b_norm = np.sqrt((b_mat * b_mat).sum(axis=1))
+        sims = (b_mat @ mat_q.T) / np.outer(b_norm, nrm_q)
+        return pdf["_id"].to_numpy(dtype=np.int64), np.round(sims, 4)
 
-    def partial_topk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ids_q, mat_q, nrm_q = bc.value
-        for pdf in batches:
-            b_ids = pdf["_id"].to_numpy(dtype=np.int64)
-            b_mat = np.array(list(pdf["_v"]), dtype=np.float64)
-            if b_mat.size == 0:
-                continue
-            b_norm = np.sqrt((b_mat * b_mat).sum(axis=1))
-            sims = np.round(
-                (b_mat @ mat_q.T) / np.outer(b_norm, nrm_q), 4
-            )  # (batch × Q)
-            # exclude self-matches before picking the partial top-k
-            sims[b_ids[:, None] == ids_q[None, :]] = -np.inf
-            take = min(k, b_ids.size)
-            # order: sim desc, vec_id asc — lexsort keys last-first
-            order = np.lexsort((b_ids[:, None].repeat(len(ids_q), 1), -sims),
-                               axis=0)[:take]
-            rows = {
-                "query_id": np.repeat(ids_q, take),
-                "vec_id": b_ids[order].T.ravel(),
-                "sim": np.take_along_axis(sims, order, axis=0).T.ravel(),
-            }
-            out = pd.DataFrame(rows)
-            yield out[np.isfinite(out["sim"])]
-
-    cand = (
-        df.filter(F.col(vec_col).isNotNull())
-        .select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v"))
-        .mapInPandas(partial_topk, out_schema)
+    corpus = df.filter(F.col(vec_col).isNotNull()).select(
+        F.col(id_col).alias("_id"), F.col(vec_col).alias("_v")
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("vec_id").asc()
-    )
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return _scored_topk(corpus, q_ids, k, score)
 
 
 def hyperplane_bucket(
@@ -183,12 +212,6 @@ def hyperplane_bucket(
     executors/runs. (Round 1 briefly derived planes differently;
     bucket ids are session-internal, not a persisted contract — do not
     compare bucket tables across engine versions.)"""
-    import hashlib
-
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-    from pyspark.sql.functions import pandas_udf
 
     def comp(p: int, i: int) -> float:
         h = hashlib.blake2b(
@@ -247,9 +270,9 @@ def lsh_topk(
     recall/cost dial. Candidates are deduped before ranking, so
     results with T tables are a superset-of-candidates refinement of
     T=1, and still exact-cosine-ranked."""
-    from pyspark.sql import Window
-
-    _guard_query_side(queries, "lsh_topk", max_query_rows)
+    q_ids, q_mat = _query_side(
+        queries, "lsh_topk", max_query_rows, vec_col, query_id_col
+    )
 
     def tabs(vec):
         return F.explode(
@@ -274,11 +297,11 @@ def lsh_topk(
         "vec_id", "vec",
         F.col("tb.t").alias("t"), F.col("tb.b").alias("bucket"),
     )
-    q = queries.select(
-        F.col(query_id_col).alias("query_id"),
-        F.col(vec_col).alias("qvec"),
-        tabs(F.col(vec_col)).alias("tb"),
-    ).select(
+    q = df.sparkSession.createDataFrame(
+        pd.DataFrame({"query_id": q_ids, "qvec": list(q_mat)}),
+        "query_id bigint, qvec array<double>",
+    )
+    q = q.select("query_id", "qvec", tabs(F.col("qvec")).alias("tb")).select(
         "query_id", "qvec",
         F.col("tb.t").alias("t"), F.col("tb.b").alias("bucket"),
     )
@@ -297,13 +320,7 @@ def lsh_topk(
         # a pair colliding in several tables appears once per table;
         # sim is identical, so distinct dedupes exactly
         sim = sim.distinct()
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("vec_id").asc()
-    )
-    return (
-        sim.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return _rank(sim, k)
 
 
 def _assign_lists(
@@ -312,11 +329,6 @@ def _assign_lists(
     """Attach the id(s) of the ``nprobe`` nearest centroids (cosine) to
     every row via one numpy matmul per Arrow batch. Returns df +
     ``out_col`` (exploded → one row per probed list)."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-    from typing import Iterator
-
     cmat = np.asarray(centroids, dtype=np.float64)
     cmat = cmat / np.maximum(np.linalg.norm(cmat, axis=1, keepdims=True), 1e-12)
     bc = df.sparkSession.sparkContext.broadcast(cmat)
@@ -426,9 +438,9 @@ def ivf_topk(
     search join moves only rows in probed lists (≈ nprobe/n_lists of
     the corpus per query batch). Returns (query_id, vec_id, sim, rank).
     """
-    from pyspark.sql import Window
-
-    _guard_query_side(queries, "ivf_topk", max_query_rows)
+    q_ids, q_mat = _query_side(
+        queries, "ivf_topk", max_query_rows, vec_col, query_id_col
+    )
     base = df.select(
         F.col(id_col).alias("vec_id"), F.col(vec_col).alias("vec")
     )
@@ -440,8 +452,9 @@ def ivf_topk(
     corpus = _assign_lists(base, centroids, "vec", "_lists", nprobe=1).select(
         "vec_id", "vec", F.element_at("_lists", 1).alias("list_id")
     )
-    q = queries.select(
-        F.col(query_id_col).alias("query_id"), F.col(vec_col).alias("qvec")
+    q = df.sparkSession.createDataFrame(
+        pd.DataFrame({"query_id": q_ids, "qvec": list(q_mat)}),
+        "query_id bigint, qvec array<double>",
     )
     probes = _assign_lists(q, centroids, "qvec", "_lists", nprobe=nprobe).select(
         "query_id", "qvec", F.explode("_lists").alias("list_id")
@@ -457,13 +470,7 @@ def ivf_topk(
             ).alias("sim"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("vec_id").asc()
-    )
-    return (
-        sim.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return _rank(sim, k)
 
 
 def all_pairs_above_np(
@@ -516,11 +523,6 @@ def _all_pairs_above_broadcast(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Broadcast small-corpus all-pairs (see ``all_pairs_above_np``)."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-    from typing import Iterator
-
     rows = (
         df.filter(F.col(vec_col).isNotNull())
         .select(id_col, vec_col).collect()
@@ -593,10 +595,6 @@ def all_pairs_above_blocked(
     key_a < key_b — byte-identical contract to the broadcast path.
     """
     _require_integral_id(df, id_col, "all_pairs_above_blocked")
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
     B = n_blocks
     tagged = df.filter(F.col(vec_col).isNotNull()).select(
         F.col(id_col).alias("_id"),
@@ -632,7 +630,8 @@ def all_pairs_above_blocked(
     )
     empty = pd.DataFrame({"key_a": [], "key_b": [], "sim": []})
 
-    def crunch(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    # no type hints: pyspark warns on a partly hinted callback
+    def crunch(key, pdf):
         pi, pj = int(key[0]), int(key[1])
         same = pi == pj
         a = pdf[pdf["_blk"] == pi]
@@ -682,8 +681,6 @@ def _require_integral_id(df: DataFrame, id_col: str, api: str) -> None:
     ``key_a/key_b bigint``). A string id would fail deep inside an
     Arrow batch with an opaque cast error — reject it at the API
     boundary with the fix spelled out instead."""
-    import pyspark.sql.types as T
-
     dt = df.schema[id_col].dataType
     if not isinstance(dt, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)):
         raise TypeError(
@@ -692,32 +689,6 @@ def _require_integral_id(df: DataFrame, id_col: str, api: str) -> None:
             f".withColumn('vid', F.xxhash64('{id_col}')) or a "
             "monotonically_increasing_id(), and join names back after."
         )
-
-
-def similarity_pairs_above(
-    df: DataFrame,
-    threshold: float,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    approx_rows: int | None = None,
-) -> DataFrame:
-    """All-pairs cosine ≥ threshold — compatibility shim over
-    ``all_pairs_above_np`` (same contract, sim ROUNDED to 4 as this
-    API always did). The old cartesian self-join with an interpreted
-    ``zip_with``/``aggregate`` cosine is gone from the package: it was
-    the API a user would grab by accident and get O(n²) interpreted
-    evaluation; its expression form survives only as the semantic twin
-    in tests/test_dedup_similarity.py. Note the threshold is applied
-    to the RAW sim (the strategy paths' contract), then rounded.
-
-    Calling this runs a bounded strategy-probe job unless
-    ``approx_rows`` is given (see ``all_pairs_above_np``); ids must be
-    integral (clear TypeError otherwise — the old cartesian form
-    accepted any orderable key, the numpy paths do not)."""
-    out = all_pairs_above_np(
-        df, threshold, id_col=id_col, vec_col=vec_col, approx_rows=approx_rows
-    )
-    return out.select("key_a", "key_b", F.round("sim", 4).alias("sim"))
 
 
 # --- product quantization (Jégou et al. 2011): the embedding-scale
@@ -827,6 +798,37 @@ def pq_encode(
     )
 
 
+def _pq_adc(codes_df: DataFrame, q_ids, q_mat, books, k: int) -> DataFrame:
+    """ADC top-k of collected queries over a PQ code table (see
+    ``pq_search``)."""
+    if not q_ids.size:
+        return _empty_topk(codes_df.sparkSession)
+    m, n_codes, dsub = books.shape
+    q_norm = np.sqrt((q_mat * q_mat).sum(axis=1))
+    # LUT[q, j, code] = <q_j, c_{j,code}>, flattened to (Q, m*n_codes);
+    # cn2[j, code] = ||c||^2, flattened to (m*n_codes,)
+    lut = np.stack(
+        [
+            q_mat[:, j * dsub : (j + 1) * dsub] @ books[j].T
+            for j in range(m)
+        ],
+        axis=1,
+    ).reshape(len(q_ids), -1)
+    cn2 = (books * books).sum(axis=2).reshape(-1)
+    bc = codes_df.sparkSession.sparkContext.broadcast((q_norm, lut, cn2))
+    off = np.arange(m, dtype=np.int64) * n_codes
+
+    def score(pdf: pd.DataFrame):
+        nrm_q, flat, c2f = bc.value
+        codes = np.array(list(pdf["codes"]), dtype=np.int64) + off
+        dots = flat[:, codes].sum(axis=2).T  # (batch, Q)
+        b_norm = np.sqrt(np.maximum(c2f[codes].sum(axis=1), 1e-24))
+        sims = np.round(dots / np.outer(b_norm, nrm_q), 4)
+        return pdf["vec_id"].to_numpy(dtype=np.int64), sims
+
+    return _scored_topk(codes_df.select("vec_id", "codes"), q_ids, k, score)
+
+
 def pq_search(
     codes_df: DataFrame,
     queries: DataFrame,
@@ -834,7 +836,7 @@ def pq_search(
     k: int = 10,
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
-    max_query_rows: int | None = _MAX_QUERY_ROWS,
+    max_query_rows: int = _MAX_QUERY_ROWS,
 ) -> DataFrame:
     """ADC (asymmetric distance computation) top-k over a PQ-encoded
     corpus: each query builds an ``(m × n_codes)`` inner-product
@@ -851,90 +853,11 @@ def pq_search(
     is exact and the result equals brute force — the hash-oracled
     contract (`ann_pq_exact`); realistic (m, n_codes) trade recall
     for the ~400× smaller scan (recall pytested)."""
-    from pyspark.sql import Window
-
-    if max_query_rows is not None:
-        # None = caller already guarded (pq_topk runs the probe once
-        # before training; a second limit+count job here would just
-        # re-execute the query lineage)
-        _guard_query_side(queries, "pq_search", max_query_rows)
+    q_ids, q_mat = _query_side(
+        queries, "pq_search", max_query_rows, vec_col, query_id_col
+    )
     books = np.asarray(codebooks, dtype=np.float64)
-    m, n_codes, dsub = books.shape
-    qrows = (
-        queries.filter(F.col(vec_col).isNotNull())
-        .select(
-            F.col(query_id_col).alias("query_id"),
-            F.col(vec_col).alias("qvec"),
-        )
-        .collect()
-    )
-    if not qrows:
-        return codes_df.sparkSession.createDataFrame(
-            [], "query_id bigint, vec_id bigint, sim double, rank int"
-        )
-    q_ids = np.array([r["query_id"] for r in qrows], dtype=np.int64)
-    q_mat = np.array([r["qvec"] for r in qrows], dtype=np.float64)
-    q_norm = np.sqrt((q_mat * q_mat).sum(axis=1))
-    # LUT[q, j, code] = <q_j, c_{j,code}>; cn2[j, code] = ||c||^2
-    lut = np.stack(
-        [
-            q_mat[:, j * dsub : (j + 1) * dsub] @ books[j].T
-            for j in range(m)
-        ],
-        axis=1,
-    )
-    cn2 = (books * books).sum(axis=2)  # (m, n_codes)
-    bc = codes_df.sparkSession.sparkContext.broadcast(
-        (q_ids, q_norm, lut, cn2)
-    )
-
-    out_schema = T.StructType(
-        [
-            T.StructField("query_id", T.LongType()),
-            T.StructField("vec_id", T.LongType()),
-            T.StructField("sim", T.DoubleType()),
-        ]
-    )
-
-    def partial_topk(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ids_q, nrm_q, tbl, c2 = bc.value
-        flat = tbl.reshape(len(ids_q), -1)  # (Q, m*n_codes)
-        c2f = c2.reshape(-1)
-        off = (np.arange(m) * c2.shape[1]).astype(np.int64)
-        for pdf in batches:
-            b_ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            if b_ids.size == 0:
-                continue
-            codes = np.array(list(pdf["codes"]), dtype=np.int64) + off
-            dots = flat[:, codes].sum(axis=2).T  # (batch, Q)
-            b_norm = np.sqrt(
-                np.maximum(c2f[codes].sum(axis=1), 1e-24)
-            )
-            sims = np.round(dots / np.outer(b_norm, nrm_q), 4)
-            sims[b_ids[:, None] == ids_q[None, :]] = -np.inf
-            take = min(k, b_ids.size)
-            order = np.lexsort(
-                (b_ids[:, None].repeat(len(ids_q), 1), -sims), axis=0
-            )[:take]
-            out = pd.DataFrame(
-                {
-                    "query_id": np.repeat(ids_q, take),
-                    "vec_id": b_ids[order].T.ravel(),
-                    "sim": np.take_along_axis(sims, order, axis=0).T.ravel(),
-                }
-            )
-            yield out[np.isfinite(out["sim"])]
-
-    cand = codes_df.select("vec_id", "codes").mapInPandas(
-        partial_topk, out_schema
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("vec_id").asc()
-    )
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return _pq_adc(codes_df, q_ids, q_mat, books, k)
 
 
 def pq_topk(
@@ -957,17 +880,17 @@ def pq_topk(
     ``train_pq_codebooks``/``pq_encode``, persists the code table —
     ideally bucketed, see ``sources/bucketed.py`` — and calls
     ``pq_search`` per query batch)."""
-    # guard BEFORE training so an oversized query side fails fast
-    _guard_query_side(queries, "pq_topk", max_query_rows)
+    # the query side is read BEFORE training, so an oversized one
+    # fails fast
+    q_ids, q_mat = _query_side(
+        queries, "pq_topk", max_query_rows, vec_col, query_id_col
+    )
     books = train_pq_codebooks(
         df, dim, m=m, n_codes=n_codes, sample=sample, iters=iters,
         seed=seed, id_col=id_col, vec_col=vec_col,
     )
     codes = pq_encode(df, books, id_col=id_col, vec_col=vec_col)
-    return pq_search(
-        codes, queries, books, k=k, vec_col=vec_col,
-        query_id_col=query_id_col, max_query_rows=None,
-    )
+    return _pq_adc(codes, q_ids, q_mat, books, k)
 
 
 def ivfpq_topk(
@@ -1014,9 +937,9 @@ def ivfpq_topk(
     gate); realistic settings trade recall (pytested via planted
     twins) for the pruned, ~100× smaller scan.
     """
-    from pyspark.sql import Window
-
-    _guard_query_side(queries, "ivfpq_topk", max_query_rows)
+    q_ids, q_mat = _query_side(
+        queries, "ivfpq_topk", max_query_rows, vec_col, query_id_col
+    )
     base = df.filter(F.col(vec_col).isNotNull()).select(
         F.col(id_col).alias("vec_id"), F.col(vec_col).alias("vec")
     )
@@ -1105,20 +1028,8 @@ def ivfpq_topk(
     index = base.mapInPandas(build_index, idx_schema)
 
     # query-side constants: probed lists + LUTs + reconstruction terms
-    qrows = (
-        queries.filter(F.col(vec_col).isNotNull())
-        .select(
-            F.col(query_id_col).alias("query_id"),
-            F.col(vec_col).alias("qvec"),
-        )
-        .collect()
-    )
-    if not qrows:
-        return df.sparkSession.createDataFrame(
-            [], "query_id bigint, vec_id bigint, sim double, rank int"
-        )
-    q_ids = np.array([r["query_id"] for r in qrows], dtype=np.int64)
-    q_mat = np.array([r["qvec"] for r in qrows], dtype=np.float64)
+    if not q_ids.size:
+        return _empty_topk(df.sparkSession)
     q_norm = np.sqrt((q_mat * q_mat).sum(axis=1))
     qn = q_mat / np.maximum(q_norm[:, None], 1e-12)
     topn = min(nprobe, n_lists)
@@ -1130,68 +1041,30 @@ def ivfpq_topk(
     lut = np.stack(
         [q_mat[:, j * dsub : (j + 1) * dsub] @ books[j].T for j in range(m)],
         axis=1,
-    )  # (Q, m, n_codes)
+    ).reshape(len(q_ids), -1)  # (Q, m*n_codes)
     cross = np.stack(
         [cents[:, j * dsub : (j + 1) * dsub] @ books[j].T for j in range(m)],
         axis=1,
-    )  # (n_lists, m, n_codes)
-    pqn2 = (books * books).sum(axis=2)  # (m, n_codes)
+    ).reshape(n_lists, -1)  # (n_lists, m*n_codes)
+    pqn2 = (books * books).sum(axis=2).reshape(-1)  # (m*n_codes,)
     c2 = (cents * cents).sum(axis=1)  # (n_lists,)
-    bc_q = sc.broadcast((q_ids, q_norm, probed, q_dot_c, lut, cross, pqn2, c2))
+    bc_q = sc.broadcast((q_norm, probed, q_dot_c, lut, cross, pqn2, c2))
+    off = np.arange(m, dtype=np.int64) * n_codes
 
-    out_schema = T.StructType(
-        [
-            T.StructField("query_id", T.LongType()),
-            T.StructField("vec_id", T.LongType()),
-            T.StructField("sim", T.DoubleType()),
-        ]
-    )
+    def score(pdf: pd.DataFrame):
+        nrm_q, prb, qc, flat, crs_f, n2f, cc2 = bc_q.value
+        lst = pdf["list_id"].to_numpy(dtype=np.int64)
+        codes = np.array(list(pdf["codes"]), dtype=np.int64) + off
+        dots = flat[:, codes].sum(axis=2).T + qc[:, lst].T  # (batch, Q)
+        cross_sum = np.take_along_axis(crs_f[lst], codes, axis=1).sum(axis=1)
+        b_norm = np.sqrt(
+            np.maximum(
+                cc2[lst] + 2.0 * cross_sum + n2f[codes].sum(axis=1), 1e-24
+            )
+        )
+        sims = np.round(dots / np.outer(b_norm, nrm_q), 4)
+        # outside the query's probed lists -> not a candidate
+        sims[~prb[:, lst].T] = -np.inf
+        return pdf["vec_id"].to_numpy(dtype=np.int64), sims
 
-    def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ids_q, nrm_q, prb, qc, tbl, crs, n2, cc2 = bc_q.value
-        flat = tbl.reshape(len(ids_q), -1)
-        crs_f = crs.reshape(n_lists, -1)
-        n2f = n2.reshape(-1)
-        off = (np.arange(m) * n2.shape[1]).astype(np.int64)
-        for pdf in batches:
-            b_ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-            if b_ids.size == 0:
-                continue
-            lst = pdf["list_id"].to_numpy(dtype=np.int64)
-            codes = np.array(list(pdf["codes"]), dtype=np.int64) + off
-            res_dot = flat[:, codes].sum(axis=2).T  # (batch, Q)
-            dots = res_dot + qc[:, lst].T
-            cross_sum = np.take_along_axis(crs_f[lst], codes, axis=1).sum(
-                axis=1
-            )
-            b_norm = np.sqrt(
-                np.maximum(
-                    cc2[lst] + 2.0 * cross_sum + n2f[codes].sum(axis=1),
-                    1e-24,
-                )
-            )
-            sims = np.round(dots / np.outer(b_norm, nrm_q), 4)
-            # outside the query's probed lists -> not a candidate
-            sims[~prb[:, lst].T] = -np.inf
-            sims[b_ids[:, None] == ids_q[None, :]] = -np.inf
-            take = min(k, b_ids.size)
-            order = np.lexsort(
-                (b_ids[:, None].repeat(len(ids_q), 1), -sims), axis=0
-            )[:take]
-            out = pd.DataFrame(
-                {
-                    "query_id": np.repeat(ids_q, take),
-                    "vec_id": b_ids[order].T.ravel(),
-                    "sim": np.take_along_axis(sims, order, axis=0).T.ravel(),
-                }
-            )
-            yield out[np.isfinite(out["sim"])]
-
-    cand = index.mapInPandas(score, out_schema)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim").desc(), F.col("vec_id").asc()
-    )
-    return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return _scored_topk(index, q_ids, k, score)

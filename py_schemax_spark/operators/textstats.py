@@ -316,7 +316,7 @@ def unigram_logprob_scores(
 
         # the same EXPLICIT whitespace class as the vocabulary phase
         # and the SQL oracle (see WS_CLASS above)
-        ws = _re.compile(r"[ \t\n\r\f]+")
+        ws = _re.compile(WS_CLASS)
         cnts = bc_counts.value
         out = []
         for t in texts:

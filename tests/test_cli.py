@@ -333,6 +333,24 @@ def test_config_file_flag_malformed_toml_surfaces(spark, table_dir,
     assert "not valid TOML" in capsys.readouterr().err
 
 
+def test_malformed_cwd_config_exits_2(spark, table_dir, spec_file,
+                                      tmp_path, monkeypatch, capsys):
+    """A malformed schemax.toml in the working directory is a config
+    error, not a skipped layer: falling through to pyproject.toml would
+    run with settings the user did not write (here fail-fast)."""
+    monkeypatch.chdir(tmp_path)
+    (tmp_path / "schemax.toml").write_text("[validate\nfail_mode = 'never'")
+    (tmp_path / "pyproject.toml").write_text(
+        "[tool.schemax_spark.validate]\nfail_mode = 'fast'\n"
+    )
+    code = _main(
+        spark,
+        ["validate", table_dir, "--spec", spec_file, "--check", "schema"],
+    )
+    assert code == 2
+    assert "not valid TOML" in capsys.readouterr().err
+
+
 def test_config_file_first_valid_wins(tmp_path):
     bad = tmp_path / "empty.toml"
     bad.write_text("")

@@ -20,7 +20,6 @@ from py_schemax_spark.operators.similarity import (
     all_pairs_above_np,
     brute_force_topk,
     lsh_topk,
-    similarity_pairs_above,
 )
 from py_schemax_spark.operators.textstats import text_profile
 
@@ -241,6 +240,12 @@ def test_ivf_topk_recall_on_planted_neighbors(vectors):
     top1 = ivf_topk(vectors, queries, dim=16, k=1, n_lists=4, nprobe=1)
     got1 = {r["query_id"]: r["vec_id"] for r in top1.collect()}
     assert got1 == {0: 40, 1: 41, 2: 42, 3: 43}
+    # a null query vector is dropped, not fed to the query-side
+    # centroid assignment (where it crashed the Python worker)
+    null_q = vectors.sparkSession.createDataFrame([(99, None)], queries.schema)
+    top_n = ivf_topk(vectors, queries.unionByName(null_q), dim=16, k=1,
+                     n_lists=4, nprobe=4)
+    assert {r["query_id"]: r["vec_id"] for r in top_n.collect()} == got
 
 
 def _expr_cosine(a, b):
@@ -285,13 +290,6 @@ def test_all_pairs_np_matches_expression_path(vectors):
     assert set(np_pairs) == {(0, 40), (1, 41), (2, 42), (3, 43)}
     for k, v in expr_pairs.items():
         assert abs(np_pairs[k] - v) < 1e-3  # expr path rounds to 4
-    # the public similarity_pairs_above API is now a shim over the
-    # numpy strategy paths — same pairs, rounded sims
-    shim_pairs = {
-        (r["key_a"], r["key_b"]): r["sim"]
-        for r in similarity_pairs_above(vectors, threshold=0.9).collect()
-    }
-    assert shim_pairs == expr_pairs
 
 
 def test_text_profile_shape_and_sanity(spark):
@@ -1290,6 +1288,48 @@ def test_topk_query_side_guard_raises(vectors):
         for r in brute_force_topk(vectors, queries, k=1).collect()
     }
     assert got == {0: 40, 1: 41, 2: 42, 3: 43}
+
+
+def test_brute_force_topk_reads_query_side_once(spark):
+    """The query side is one bounded collect: no separate
+    ``limit(n + 1).count()`` probe runs the query lineage before it.
+    On this 4-partition frame the collect takes 2 jobs and the scoring
+    2 (the window's shuffle and its result stage); the probe added one
+    more."""
+    import numpy as np
+
+    rng = np.random.default_rng(8)
+    rows = [(i, [float(x) for x in rng.normal(0, 1, 8)]) for i in range(50)]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    q = df.filter(F.col("vec_id") < 2).select(
+        F.col("vec_id").alias("query_id"), "embedding"
+    )
+    sc = spark.sparkContext
+    sc.setJobGroup("topk-query-side", "topk-query-side")
+    try:
+        got = brute_force_topk(df, q, k=5).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+    assert len(got) == 10
+    jobs = sc.statusTracker().getJobIdsForGroup("topk-query-side")
+    assert len(jobs) <= 4, jobs
+
+
+def test_all_pairs_above_blocked_emits_no_user_warning(vectors):
+    """A partly type-hinted ``applyInPandas`` callback makes pyspark
+    warn "Cannot infer the eval type from type hints" on every call."""
+    import warnings
+
+    from py_schemax_spark.operators.similarity import all_pairs_above_blocked
+
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        out = all_pairs_above_blocked(vectors, 0.9, n_blocks=2)
+    assert [str(w.message) for w in caught
+            if issubclass(w.category, UserWarning)] == []
+    assert {(r["key_a"], r["key_b"]) for r in out.collect()} == {
+        (0, 40), (1, 41), (2, 42), (3, 43)}
 
 
 def test_connected_components_string_key_byte_gate(spark, monkeypatch):

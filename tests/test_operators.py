@@ -718,10 +718,7 @@ def test_stratified_sample_null_stratum_uses_default_fraction(spark):
 def test_all_pairs_rejects_non_integral_ids(spark):
     import pytest as _pytest
 
-    from py_schemax_spark.operators.similarity import (
-        all_pairs_above_np,
-        similarity_pairs_above,
-    )
+    from py_schemax_spark.operators.similarity import all_pairs_above_np
 
     df = spark.createDataFrame(
         [("a", [1.0, 0.0]), ("b", [0.0, 1.0])],
@@ -729,8 +726,6 @@ def test_all_pairs_rejects_non_integral_ids(spark):
     )
     with _pytest.raises(TypeError, match="integral id column"):
         all_pairs_above_np(df, 0.5)
-    with _pytest.raises(TypeError, match="integral id column"):
-        similarity_pairs_above(df, 0.5, approx_rows=2)
 
 
 def test_lsh_uncapped_path_skips_population_window(spark, pages):
