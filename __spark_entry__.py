@@ -1003,7 +1003,7 @@ def q_inverted_index(spark, sf_dir):
     gets ' zxqj'||doc_id%3) add df=2 terms (kept, NOT truncated) and
     a df=1 term (excluded by min_df=2). Oracle rebuilds the whole
     index in SQL: distinct pairs, df gate BEFORE postings, sorted
-    slice."""
+    slice; both engines render postings with to_json."""
     from py_schemax_spark.operators.index import build_inverted_index
 
     d = _docs(spark, sf_dir)
@@ -1015,7 +1015,7 @@ def q_inverted_index(spark, sf_dir):
     return build_inverted_index(
         d.select("doc_id", planted.alias("text")),
         min_df=2, max_df=495, max_postings=50,
-    )
+    ).withColumn("postings", F.to_json("postings"))
 
 
 def q_card_scan(spark, sf_dir):
@@ -2381,7 +2381,7 @@ def q_anchor_profile(spark, sf_dir):
     docs add singleton deep links, and %6==1 docs contribute an
     ELEMENTFUL (empty-text) anchor to one shared target — counted in
     n_refs, excluded from top_anchors. Oracle states every profile in
-    closed form."""
+    closed form; both engines render top_anchors with to_json."""
     from py_schemax_spark.operators.linkgraph import (
         anchor_text_profile,
         extract_anchors,
@@ -2406,7 +2406,9 @@ def q_anchor_profile(spark, sf_dir):
     anchors = extract_anchors(
         d.select("doc_id", html.alias("html")), url_col="doc_id"
     )
-    return anchor_text_profile(anchors, top_k=3)
+    return anchor_text_profile(anchors, top_k=3).withColumn(
+        "top_anchors", F.to_json("top_anchors")
+    )
 
 
 def q_hits(spark, sf_dir):
@@ -4831,15 +4833,15 @@ WITH hubs AS (
 )
 SELECT 'https://t' || CAST(h AS VARCHAR) || '.org/a' AS dst_url,
        n AS n_refs, CAST(1 AS BIGINT) AS n_texts,
-       ['go to ' || CAST(h AS VARCHAR)] AS top_anchors
+       to_json(['go to ' || CAST(h AS VARCHAR)]) AS top_anchors
 FROM hubs
 UNION ALL
 SELECT 'https://u.org/' || CAST(doc_id AS VARCHAR),
-       CAST(1 AS BIGINT), CAST(1 AS BIGINT), ['deep link']
+       CAST(1 AS BIGINT), CAST(1 AS BIGINT), to_json(['deep link'])
 FROM documents WHERE doc_id % 3 = 0
 UNION ALL
 SELECT 'https://e.org/x', CAST(COUNT(*) AS BIGINT),
-       CAST(0 AS BIGINT), CAST([] AS VARCHAR[])
+       CAST(0 AS BIGINT), to_json(CAST([] AS VARCHAR[]))
 FROM documents WHERE doc_id % 6 = 1
 HAVING COUNT(*) > 0
 """,
@@ -5255,7 +5257,7 @@ pairs AS (
 freq AS (SELECT term, count(*) AS df FROM pairs GROUP BY term),
 surv AS (SELECT term, df FROM freq WHERE df >= 2 AND df <= 495)
 SELECT s.term, CAST(s.df AS BIGINT) AS df,
-       (list_sort(list(p.doc)))[1:50] AS postings,
+       to_json((list_sort(list(p.doc)))[1:50]) AS postings,
        s.df > 50 AS truncated
 FROM surv s JOIN pairs p USING (term)
 GROUP BY s.term, s.df

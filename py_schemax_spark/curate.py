@@ -17,7 +17,7 @@ command and so the FUSION story is explicit:
   all bucket-bounded), **mixing** (1 range exchange) each add only
   their documented shuffles.
 
-Every stage boundary is an EAGER ``localCheckpoint`` — the engine's
+Every stage boundary is an EAGER ``dedup._checkpoint`` — the engine's
 iterative-algorithm rule (see ``connected_components``): persist
 alone caches the data but each stage's logical plan still nests all
 previous stages', and the dedup stages reference their input ~6 times
@@ -97,8 +97,7 @@ def run_curation(
     rewritten in place by normalize/lines); the report maps stage →
     ``{"in": n, "out": n}`` (empty when ``report=False``)."""
     from py_schemax_spark.operators.dedup import (
-        _checkpoint_rdd_ids,
-        _CheckpointHandle,
+        _checkpoint,
         _copy_rank,
         _track_persisted,
         dedup_clusters,
@@ -150,7 +149,6 @@ def run_curation(
 
     stats: dict[str, dict] = {}
     pinned: list = []
-    sc = df.sparkSession.sparkContext
 
     def _observed(frame: DataFrame) -> tuple[DataFrame, Observation]:
         obs = Observation()
@@ -174,13 +172,12 @@ def run_curation(
 
     def _record(stage: str, out_frame: DataFrame) -> DataFrame:
         """Truncate lineage at the stage boundary (eager
-        localCheckpoint of the input columns — see module docstring),
+        ``_checkpoint`` of the input columns — see module docstring),
         which delivers the stage's `out`; blocks join the release
         registry."""
         nonlocal n_in
         out_frame, n_out = _observed(out_frame.select(*in_cols))
-        cp = out_frame.localCheckpoint()
-        handle = _CheckpointHandle(sc, _checkpoint_rdd_ids(cp))
+        cp, handle = _checkpoint(out_frame)
         pinned.append(handle)
         last_handle[:] = [handle]
         if report:

@@ -24,8 +24,9 @@ Scale shape (the classic word-frequency-table regime):
   ``(count desc, left asc, right asc)``, and one Arrow-batched merge
   application (the left-to-right adjacent-pair rewrite is inherently
   sequential per word — a per-row loop over a BOUNDED table, not the
-  corpus). Rounds are ``localCheckpoint``-ed with previous-round
-  block release (the `pagerank`/`connected_components` idiom).
+  corpus). Rounds are ``localCheckpoint``-ed by ``dedup._checkpoint``,
+  and each round frees the previous round's blocks (the `pagerank` and
+  `connected_components` idiom).
 - Training stops early when no pair occurs twice (merging a
   singleton pair buys nothing).
 
@@ -50,6 +51,7 @@ from pyspark.sql.pandas.functions import pandas_udf
 from pyspark.storagelevel import StorageLevel
 
 from py_schemax_spark.operators.chunking import WS_CLASS
+from py_schemax_spark.operators.dedup import _checkpoint
 
 
 def word_freq_table(
@@ -136,18 +138,11 @@ def train_bpe(
     if n_merges < 1:
         raise ValueError("train_bpe: n_merges must be >= 1")
     spark = df.sparkSession
-    sc = spark.sparkContext
     wf = word_freq_table(df, text_col, top_words)
-    symed = wf.select(
+    symed, held = _checkpoint(wf.select(
         "cnt",
         F.regexp_extract_all(F.col("word"), F.lit(r"."), 0).alias("sym"),
-    ).localCheckpoint()
-    from py_schemax_spark.operators.dedup import (
-        _checkpoint_rdd_ids,
-        _unpersist_rdd_ids,
-    )
-
-    prev_ids = _checkpoint_rdd_ids(symed)
+    ))
     merges: list[tuple[int, str, str, int]] = []
     try:
         for rank in range(n_merges):
@@ -164,15 +159,13 @@ def train_bpe(
 
             apply_merge = _make_merge_udf(left, right)
 
-            stepped = symed.select(
+            symed, new_held = _checkpoint(symed.select(
                 "cnt", apply_merge(F.col("sym")).alias("sym")
-            ).localCheckpoint()
-            new_ids = _checkpoint_rdd_ids(stepped)
-            _unpersist_rdd_ids(sc, prev_ids)
-            prev_ids = new_ids
-            symed = stepped
+            ))
+            held.unpersist()
+            held = new_held
     finally:
-        _unpersist_rdd_ids(sc, prev_ids)
+        held.unpersist()
     return spark.createDataFrame(
         merges, "rank long, left string, right string, pair_count long"
     )

@@ -15,7 +15,7 @@ def broadcast_gate(
 ) -> tuple[DataFrame, bool]:
     """Broadcast-or-shuffle decision for a join's small side, logged at
     INFO. ``df.limit(max_rows + 1)`` runs once into an eager
-    ``localCheckpoint`` whose ``Observation`` counts it: no count job,
+    ``dedup._checkpoint`` whose ``Observation`` counts it: no count job,
     and the join does not re-run the side's pipeline. At most
     ``max_rows`` rows → ``(F.broadcast(side), True)``, the side being
     the checkpoint (freed by ``release_all_intermediates``) or, if
@@ -24,18 +24,14 @@ def broadcast_gate(
     from py_schemax_spark.operators import dedup
 
     obs = Observation()
-    cp = (
+    cp, handle = dedup._checkpoint(
         df.limit(max(max_rows, 0) + 1)
         .observe(obs, F.count(F.lit(1)).alias("n"))
-        .localCheckpoint()
     )
     n = obs.get["n"]
     small = n <= max_rows
     _log.info("broadcast gate %s: %d rows observed (cap %d) -> %s", label,
               n, max_rows, "broadcast" if small else "shuffle")
-    handle = dedup._CheckpointHandle(
-        cp.sparkSession.sparkContext, dedup._checkpoint_rdd_ids(cp)
-    )
     if small and not df.is_cached:
         dedup._track_persisted(cp, [handle])
         return F.broadcast(cp), True

@@ -20,9 +20,12 @@ All hashing is xxhash64/md5 JVM-side; per-row Python appears nowhere.
 
 from __future__ import annotations
 
+import logging
+
 import numpy as np
 import pandas as pd
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -85,42 +88,38 @@ def release_all_intermediates() -> int:
     return n
 
 
-def _checkpoint_rdd_ids(df: DataFrame) -> set:
-    """RDD ids backing a ``localCheckpoint``'ed DataFrame: its analyzed
-    plan is a ``LogicalRDD`` wrapping the checkpoint RDD, read directly
-    off the plan. Direct extraction — NOT a global block-manager
-    snapshot diff, which would capture (and later force-free) anything
-    a concurrent thread persisted in the same window."""
-    return {df._jdf.queryExecution().analyzed().rdd().id()}
-
-
-def _unpersist_rdd_ids(sc, ids: set) -> None:
-    """Free pinned RDDs by id. The ONLY way to release a
-    ``localCheckpoint``: DataFrame.unpersist goes through the cache
-    manager, which has no entry for checkpoint blocks."""
-    m = sc._jsc.getPersistentRDDs()
-    it = m.entrySet().iterator()
-    while it.hasNext():
-        e = it.next()
-        if e.getKey() in ids:
-            e.getValue().unpersist(False)
-
-
 class _CheckpointHandle:
     """Registry shim for localCheckpoint blocks: exposes the
     ``unpersist()`` the release registry calls on everything it
-    tracks. Releasing a checkpoint is FINAL — unlike a persisted
-    DataFrame there is no lineage to recompute from — so only release
-    after the consuming result is fully materialized (the registry
-    contract already says exactly that)."""
+    tracks. ``cp``'s analyzed plan is a ``LogicalRDD`` wrapping the
+    checkpoint RDD, so its id is read directly off the plan — NOT a
+    global block-manager snapshot diff, which would capture (and later
+    force-free) anything a concurrent thread persisted in the same
+    window. The blocks are freed by that id through
+    ``getPersistentRDDs``: DataFrame.unpersist goes through the cache
+    manager, which has no entry for checkpoint blocks. Releasing a
+    checkpoint is FINAL — unlike a persisted DataFrame there is no
+    lineage to recompute from — so only release after the consuming
+    result is fully materialized (the registry contract already says
+    exactly that)."""
 
-    def __init__(self, sc, ids: set):
-        self._sc = sc
-        self._ids = set(ids)
+    def __init__(self, cp: DataFrame):
+        self._sc = cp.sparkSession.sparkContext
+        self._id = cp._jdf.queryExecution().analyzed().rdd().id()
 
     def unpersist(self, blocking: bool = False) -> None:
-        _unpersist_rdd_ids(self._sc, self._ids)
-        self._ids.clear()
+        rdd = self._sc._jsc.getPersistentRDDs().get(self._id)
+        if rdd is not None:
+            rdd.unpersist(False)
+
+
+def _checkpoint(df: DataFrame) -> tuple[DataFrame, _CheckpointHandle]:
+    """The package's one eager ``localCheckpoint``: truncates ``df``'s
+    lineage and returns the checkpoint with the handle that frees its
+    blocks. Iterative operators free round k-1's handle once round k's
+    checkpoint exists, so no nodes-sized table is pinned per round."""
+    cp = df.localCheckpoint()
+    return cp, _CheckpointHandle(cp)
 
 
 def _log_dropped_buckets(
@@ -131,8 +130,6 @@ def _log_dropped_buckets(
     rows carry their bucket's population in ``_n``. Runs as its own
     tiny job; on a capped run this also warms the persist before the
     self-join consumes it twice."""
-    import logging
-
     row = (
         annotated.filter(F.col("_n") > cap)
         .agg(
@@ -407,8 +404,6 @@ def minhash_lsh_candidates(
     # signature pipeline (scan → normalize → Arrow minhash) twice — at
     # corpus scale that doubles the dominant cost. MEMORY_AND_DISK so
     # a 10^12-doc bucket table spills instead of OOMing.
-    from pyspark import StorageLevel
-
     if max_bucket_size is not None:
         wb = Window.partitionBy("band", "bucket")
         buckets = buckets.withColumn(
@@ -470,8 +465,6 @@ def ngram_jaccard_pairs(
     stage + both join inputs to O(candidate docs). Turn it off only
     when candidates are known to touch nearly every doc (the extra
     semi-join then buys nothing)."""
-    from pyspark import StorageLevel
-
     src = df.filter(F.col(text_col).isNotNull())
     tracked = []
     if prune_to_candidates:
@@ -723,8 +716,6 @@ def simhash_near_duplicates(
     (65k values) yields ~30-doc random buckets → ~10⁸ collision pairs,
     and that interpreted verify dominated the stage.
     """
-    from pyspark import StorageLevel
-
     fp = simhash_fingerprints(df, text_col=text_col, key_col=key_col,
                               packed=True)
     chunks = fp.select(
@@ -786,8 +777,6 @@ def _driver_components(spark, edges: DataFrame) -> DataFrame:
     """Union-find over a small collected edge set ``(u, v)``; one
     direction suffices. Component id = min node id, same contract as
     the distributed rounds."""
-    from pyspark.sql import types as T
-
     parent: dict = {}
 
     def find(x):
@@ -866,8 +855,6 @@ def connected_components(
     preemptible cluster use a reliable ``checkpoint()`` dir instead —
     localCheckpoint data dies with its executor.)
     """
-    from pyspark import StorageLevel
-
     # one-way pairs, persisted: the upstream pair pipeline runs once
     # for the size probe and whichever path follows
     e = pairs.select(F.col(src).alias("u"), F.col(dst).alias("v")).persist(
@@ -915,16 +902,13 @@ def connected_components(
         resized.count()
         edges.unpersist()
         edges = resized
-    sc = pairs.sparkSession.sparkContext
-    labels = (
-        edges.select("u").distinct().withColumn("lbl", F.col("u"))
-        .localCheckpoint()
-    )
     # Round k-1's checkpoint blocks are dead the moment round k's
     # eager checkpoint materializes — free them then, instead of
     # pinning every round's labels table for the session lifetime
     # (at 10^12 docs each round pins a nodes-sized table).
-    prev_ids = _checkpoint_rdd_ids(labels)
+    labels, held = _checkpoint(
+        edges.select("u").distinct().withColumn("lbl", F.col("u"))
+    )
     for _ in range(max_iter):
         msgs = (
             edges.join(labels.withColumnRenamed("u", "v"), "v")
@@ -946,31 +930,29 @@ def connected_components(
         thru = stepped.select(
             F.col("u").alias("lbl"), F.col("lbl").alias("_lbl2")
         )
-        new = (
+        new, new_held = _checkpoint(
             stepped.join(thru, "lbl", "left")
             .select(
                 "u",
                 F.least("lbl", "_lbl2").alias("lbl"),
                 (F.least("lbl", "_lbl2") < F.col("_old")).alias("_changed"),
             )
-            .localCheckpoint()
         )
-        new_ids = _checkpoint_rdd_ids(new)
         changed = new.filter(F.col("_changed")).limit(1).count()
         labels = new.select("u", "lbl")
-        _unpersist_rdd_ids(sc, prev_ids)
-        prev_ids = new_ids
+        held.unpersist()
+        held = new_held
         if changed == 0:
             break
     else:
         edges.unpersist()
-        _unpersist_rdd_ids(sc, prev_ids)
+        held.unpersist()
         raise RuntimeError(
             f"connected_components did not converge in {max_iter} rounds"
         )
     return _track_persisted(
         labels.select(F.col("u").alias("node"), F.col("lbl").alias("component")),
-        [edges, _CheckpointHandle(sc, prev_ids)],
+        [edges, held],
     )
 
 

@@ -29,10 +29,12 @@ Scale shape of `pagerank` at 10^12 edges: the (deduped) edge table is
 joined with outdegree ONCE, repartitioned by src, and persisted; each
 iteration is then [join ranks on src] + [groupBy dst] — two exchanges
 of rank-sized tables per round, the textbook Pregel schedule. Each
-round's ranks are eagerly ``localCheckpoint``-ed (plan growth would
-otherwise be quadratic) and the previous round's checkpoint blocks are
-freed immediately (the `dedup.connected_components` idiom —
-dedup.py:905-941 — so no nodes-sized table is pinned per round).
+round's ranks are eagerly ``localCheckpoint``-ed by ``dedup._checkpoint``
+(plan growth would otherwise be quadratic) and the previous round's
+checkpoint blocks are freed immediately (the
+`dedup.connected_components` idiom, so no nodes-sized table is pinned
+per round). `personalized_pagerank` runs the same recurrence
+(`_damped_rank`) with teleportation restricted to its seed set.
 Dangling nodes (no outlinks) keep the damping base and distribute
 nothing — the standard simplification; total mass is therefore not
 conserved, which is irrelevant for ranking use.
@@ -45,12 +47,8 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from ..functions.urls import url_host
-from .dedup import (
-    _checkpoint_rdd_ids,
-    _CheckpointHandle,
-    _track_persisted,
-    _unpersist_rdd_ids,
-)
+from .common import broadcast_gate
+from .dedup import _checkpoint, _track_persisted
 
 #: href attribute values, either quote style. Group 1 is the target.
 #: Deliberately permissive (real crawl HTML is tag soup): anything in
@@ -195,12 +193,40 @@ def pagerank(
     """
     if iters < 1:
         raise ValueError("pagerank: iters must be >= 1")
+    e, nodes = _simple_graph(edges, src_col, dst_col)
+    return _damped_rank(
+        e, nodes.withColumn("_seed", F.lit(True)), iters, scale, damping_bp
+    )
+
+
+def _simple_graph(
+    edges: DataFrame, src_col: str, dst_col: str
+) -> tuple[DataFrame, DataFrame]:
+    """The rank operators' shared prologue: the non-null, deduplicated
+    ``(src, dst)`` edges (a simple graph) and their distinct ``node``
+    set."""
     src, dst = F.col(src_col), F.col(dst_col)
     e = (
         edges.select(src.alias("src"), dst.alias("dst"))
         .filter(src.isNotNull() & dst.isNotNull())
         .distinct()
     )
+    nodes = (
+        e.select(F.col("src").alias("node"))
+        .union(e.select(F.col("dst").alias("node")))
+        .distinct()
+    )
+    return e, nodes
+
+
+def _damped_rank(
+    e: DataFrame, nodes: DataFrame, iters: int, scale: int, damping_bp: int
+) -> DataFrame:
+    """The damped-rank recurrence of `pagerank` and
+    `personalized_pagerank` over ``nodes(node, _seed)``: seeds start at
+    ``scale`` and receive the damping base each round, other nodes get
+    neither. Returns ``(node, rank)``; the persisted tables and the
+    last round's checkpoint are tracked for release."""
     outdeg = e.groupBy("src").agg(
         F.count(F.lit(1)).cast("bigint").alias("_outdeg")
     )
@@ -211,18 +237,15 @@ def pagerank(
         .repartition("src")
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .union(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
+    nodes = nodes.persist(StorageLevel.MEMORY_AND_DISK)
     base = ((10000 - damping_bp) * scale) // 10000
-    sc = edges.sparkSession.sparkContext
-    ranks = nodes.withColumn(
-        "rank", F.lit(scale).cast("bigint")
-    ).localCheckpoint()
-    prev_ids = _checkpoint_rdd_ids(ranks)
+
+    def seeded(v: int) -> F.Column:
+        return F.when(F.col("_seed"), v).otherwise(0).cast("bigint")
+
+    ranks, held = _checkpoint(
+        nodes.select("node", seeded(scale).alias("rank"))
+    )
     for _ in range(iters):
         inc = (
             ewd.join(ranks.withColumnRenamed("node", "src"), "src")
@@ -233,27 +256,18 @@ def pagerank(
             .groupBy("node")
             .agg(F.sum("_contrib").alias("_inc"))
         )
-        stepped = (
-            nodes.join(inc, "node", "left")
-            .select(
+        ranks, new_held = _checkpoint(
+            nodes.join(inc, "node", "left").select(
                 "node",
                 (
-                    F.lit(base).cast("bigint")
-                    + F.expr(
-                        f"({damping_bp} * coalesce(_inc, 0)) div 10000"
-                    )
+                    seeded(base)
+                    + F.expr(f"({damping_bp} * coalesce(_inc, 0)) div 10000")
                 ).cast("bigint").alias("rank"),
             )
-            .localCheckpoint()
         )
-        new_ids = _checkpoint_rdd_ids(stepped)
-        _unpersist_rdd_ids(sc, prev_ids)
-        prev_ids = new_ids
-        ranks = stepped
-    return _track_persisted(
-        ranks.select("node", "rank"),
-        [ewd, nodes, _CheckpointHandle(sc, prev_ids)],
-    )
+        held.unpersist()
+        held = new_held
+    return _track_persisted(ranks, [ewd, nodes, held])
 
 
 # anchor snippet: the tag (attrs contain no '>') plus the immediate
@@ -328,88 +342,24 @@ def personalized_pagerank(
     Seed membership joins onto the node table ONCE before the loop —
     broadcast when the seed list is small (`broadcast_gate`;
     trusted-seed lists are typically 10^2-10^5 domains), plain
-    shuffle join otherwise. Per-iteration plan
-    shape is identical to `pagerank` (rank table is the only thing
-    that shuffles; previous round's checkpoint blocks released as
-    soon as the next materializes).
+    shuffle join otherwise. The rounds are `pagerank`'s own
+    (`_damped_rank`): the rank table is the only thing that shuffles,
+    and the previous round's checkpoint blocks are released as soon as
+    the next materializes.
     """
     if iters < 1:
         raise ValueError("personalized_pagerank: iters must be >= 1")
-    from .common import broadcast_gate
-
-    src, dst = F.col(src_col), F.col(dst_col)
-    e = (
-        edges.select(src.alias("src"), dst.alias("dst"))
-        .filter(src.isNotNull() & dst.isNotNull())
-        .distinct()
-    )
-    outdeg = e.groupBy("src").agg(
-        F.count(F.lit(1)).cast("bigint").alias("_outdeg")
-    )
-    ewd = (
-        e.join(outdeg, "src")
-        .repartition("src")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
+    e, nodes = _simple_graph(edges, src_col, dst_col)
     seed_flags = seeds.select(
         F.col(seed_col).alias("node"), F.lit(True).alias("_seed")
     ).distinct()
     seed_flags, _ = broadcast_gate(
         seed_flags, max_seed_broadcast_rows, "seeds"
     )
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .union(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .join(seed_flags, "node", "left")
-        .select(
-            "node", F.coalesce(F.col("_seed"), F.lit(False)).alias("_seed")
-        )
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    nodes = nodes.join(seed_flags, "node", "left").select(
+        "node", F.coalesce(F.col("_seed"), F.lit(False)).alias("_seed")
     )
-    base = ((10000 - damping_bp) * scale) // 10000
-    base_col = (
-        F.when(F.col("_seed"), F.lit(base)).otherwise(F.lit(0))
-        .cast("bigint")
-    )
-    sc = edges.sparkSession.sparkContext
-    ranks = nodes.select(
-        "node",
-        F.when(F.col("_seed"), F.lit(scale)).otherwise(F.lit(0))
-        .cast("bigint").alias("rank"),
-    ).localCheckpoint()
-    prev_ids = _checkpoint_rdd_ids(ranks)
-    for _ in range(iters):
-        inc = (
-            ewd.join(ranks.withColumnRenamed("node", "src"), "src")
-            .select(
-                F.col("dst").alias("node"),
-                F.expr("rank div _outdeg").alias("_contrib"),
-            )
-            .groupBy("node")
-            .agg(F.sum("_contrib").alias("_inc"))
-        )
-        stepped = (
-            nodes.join(inc, "node", "left")
-            .select(
-                "node",
-                (
-                    base_col
-                    + F.expr(
-                        f"({damping_bp} * coalesce(_inc, 0)) div 10000"
-                    )
-                ).cast("bigint").alias("rank"),
-            )
-            .localCheckpoint()
-        )
-        new_ids = _checkpoint_rdd_ids(stepped)
-        _unpersist_rdd_ids(sc, prev_ids)
-        prev_ids = new_ids
-        ranks = stepped
-    return _track_persisted(
-        ranks.select("node", "rank"),
-        [ewd, nodes, _CheckpointHandle(sc, prev_ids)],
-    )
+    return _damped_rank(e, nodes, iters, scale, damping_bp)
 
 
 def anchor_text_profile(
@@ -509,26 +459,14 @@ def hits(
     """
     if iters < 1:
         raise ValueError("hits: iters must be >= 1")
-    src, dst = F.col(src_col), F.col(dst_col)
-    e = (
-        edges.select(src.alias("src"), dst.alias("dst"))
-        .filter(src.isNotNull() & dst.isNotNull())
-        .distinct()
-    )
+    e, nodes = _simple_graph(edges, src_col, dst_col)
     ep = e.repartition("src").persist(StorageLevel.MEMORY_AND_DISK)
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .union(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    sc = edges.sparkSession.sparkContext
-    ranks = nodes.select(
+    nodes = nodes.persist(StorageLevel.MEMORY_AND_DISK)
+    ranks, held = _checkpoint(nodes.select(
         "node",
         F.lit(scale).cast("bigint").alias("hub"),
         F.lit(scale).cast("bigint").alias("authority"),
-    ).localCheckpoint()
-    prev_ids = _checkpoint_rdd_ids(ranks)
+    ))
     for _ in range(iters):
         auth = (
             ep.join(
@@ -547,20 +485,14 @@ def hits(
             .groupBy(F.col("src").alias("node"))
             .agg(F.sum("_a").cast("bigint").alias("_h"))
         )
-        stepped = (
-            with_a.join(hub, "node", "left")
-            .select(
+        ranks, new_held = _checkpoint(
+            with_a.join(hub, "node", "left").select(
                 "node",
                 F.coalesce(F.col("_h"), F.lit(0)).cast("bigint")
                 .alias("hub"),
                 F.col("_a").cast("bigint").alias("authority"),
             )
-            .localCheckpoint()
         )
-        new_ids = _checkpoint_rdd_ids(stepped)
-        _unpersist_rdd_ids(sc, prev_ids)
-        prev_ids = new_ids
-        ranks = stepped
-    return _track_persisted(
-        ranks, [ep, nodes, _CheckpointHandle(sc, prev_ids)]
-    )
+        held.unpersist()
+        held = new_held
+    return _track_persisted(ranks, [ep, nodes, held])

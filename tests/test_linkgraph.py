@@ -267,6 +267,19 @@ def test_trustrank_matches_python_fixed_point(spark):
         ).collect()
     }
     assert got == _ppr_py(edges, set(seeds))
+    # every node seeded is plain PageRank: the two share one recurrence
+    edf = spark.createDataFrame(edges, "src long, dst long")
+    everyone = {
+        r["node"]: r["rank"]
+        for r in personalized_pagerank(
+            edf,
+            spark.createDataFrame([(n,) for n in range(6)], "node long"),
+            iters=3,
+        ).collect()
+    }
+    plain = {r["node"]: r["rank"] for r in pagerank(edf, iters=3).collect()}
+    release_all_intermediates()
+    assert everyone == _py_pagerank(edges, 3) == plain
 
 
 def test_trustrank_spam_cluster_scores_zero(spark):
